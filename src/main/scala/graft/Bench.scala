@@ -30,11 +30,24 @@ object Bench {
     // warmup: touch every table + exercise codegen once
     Tables.names.foreach(n => Tables.load(spark, sfDir, n).count())
 
+    // An epoch block that throws still reports the -1 sentinel, but loudly:
+    // the exception goes to stderr and the block's name to `failed`.
+    val failedEpochBlocks = Seq.newBuilder[String]
+    def epochBlock(name: String)(body: => (Double, Double)): (Double, Double) =
+      try body
+      catch {
+        case e: Throwable =>
+          System.err.println(s"[bench] $name failed:")
+          e.printStackTrace()
+          failedEpochBlocks += name
+          (-1.0, -1.0)
+      }
+
     // Reference-comparable epoch time FIRST (BASELINE.md: 13.50 s/epoch at
     // k=50, n_batches=2, L1 on 272k triples / 1 worker): measured before
     // the query sweep so host-throttling of long runs doesn't skew the
     // headline metric. 3 epochs at the reference hyperparameters.
-    val (epochSecMin, epochSecSpread) = try {
+    val (epochSecMin, epochSecSpread) = epochBlock("transe_epoch_sec") {
       val (enc, _, _, nEnt, nLab) =
         graft.queries.TransEQueries.encodedKg(spark, sfDir)
       enc.count() // materialize the persisted encode lineage OUTSIDE the timer
@@ -51,7 +64,7 @@ object Bench {
       // baseline-comparable figure.
       val hist = trainer.epochSecsHistory
       (hist.min, hist.max - hist.min)
-    } catch { case _: Throwable => (-1.0, -1.0) }
+    }
 
     // FB15k-237-SHAPED stress (VERDICT r2 #5): the baseline epoch number
     // (13.50 s) was published at 14,541 entities / 237 relations /
@@ -60,7 +73,7 @@ object Bench {
     // at the PUBLISHED shape for 20 epochs so the comparison is matched
     // on both axes; min-of-epochs is the steady-state (throttle-free)
     // figure, as for transe_epoch_sec_min.
-    val (fbShapeSec, fbShapeSecMin) = try {
+    val (fbShapeSec, fbShapeSecMin) = epochBlock("transe_epoch_sec_fb15kshape") {
       // KG construction + hyperparameters shared with ContractSpec's
       // fb15k-shape golden gate (transe.Fb15kShape) so a loss drift here
       // is caught by the recorded 3-epoch curve, not just wall clock
@@ -74,7 +87,7 @@ object Bench {
       val mean = (System.nanoTime() - t0) / 1e9 / p.epochs
       kg.unpersist()
       (mean, trainer.epochSecsHistory.min)
-    } catch { case _: Throwable => (-1.0, -1.0) }
+    }
 
     // MIN-OF-3 per query (VERDICT r5 #3), taken across INTERLEAVED full
     // sweep passes (VERDICT r8 #1): three consecutive runs of one query
@@ -206,7 +219,8 @@ object Bench {
       "stream_sessionize", "stream_sessionize_native",
       "stream_features_pit_ooo", "stream_windowed_counts_append")
       .filter(n => results.exists(_._1 == n)).sorted
-    val failed = results.collect { case (n, (mn, _)) if mn < 0 => n }
+    val failed = failedEpochBlocks.result() ++
+      results.collect { case (n, (mn, _)) if mn < 0 => n }
     val nonMemoized = results.filterNot { case (n, _) => memoized.contains(n) }
     // Per-query SPREAD for the variance-marked set (VERDICT r12 #2): the
     // headline min alone cannot distinguish a real regression from the

@@ -5,8 +5,8 @@ import java.util.SplittableRandom
 /** Dense float vector kernels for the SGD hot path.
   *
   * Mirrors the reference's numpy element-wise ops (`Embedding.py:21-27`,
-  * `TransE.py:298-369`) as JIT-friendly manual loops — no boxing, no
-  * intermediate allocation beyond the returned array. These run inside
+  * `TransE.py:298-369`) as JIT-friendly manual loops — no boxing, and
+  * the SGD kernels write into caller-owned scratch. These run inside
   * `mapPartitions` on executors, so they must be allocation-light: at
   * 100 TB scale this loop body executes trillions of times.
   */
@@ -68,26 +68,63 @@ object Kernels {
     s
   }
 
-  def dist(d: Distance, h: Array[Float], l: Array[Float], t: Array[Float]): Double =
+  /** The positive and negative distances of one SGD step, d(h + l, t)
+    * into `out(0)` and d(nh + l, nt) into `out(1)`, summed in ONE loop.
+    * Each sum adds the same terms in the same order as [[distL1]] /
+    * [[distL2Sq]] (so both are bit-identical to two separate calls); the
+    * two sums are independent dependency chains, so they overlap in the
+    * pipeline instead of running back to back. `out` is caller-owned
+    * scratch: no allocation per call. */
+  def distPair(d: Distance, h: Array[Float], l: Array[Float], t: Array[Float],
+      nh: Array[Float], nt: Array[Float], out: Array[Double]): Unit = {
+    var sPos = 0.0; var sNeg = 0.0
+    var i = 0
     d match {
-      case L1        => distL1(h, l, t)
-      case L2Squared => distL2Sq(h, l, t)
+      case L1 =>
+        while (i < h.length) {
+          sPos += math.abs(h(i) + l(i) - t(i)).toDouble
+          sNeg += math.abs(nh(i) + l(i) - nt(i)).toDouble
+          i += 1
+        }
+      case L2Squared =>
+        while (i < h.length) {
+          val a = h(i) + l(i) - t(i); sPos += a.toDouble * a
+          val b = nh(i) + l(i) - nt(i); sNeg += b.toDouble * b
+          i += 1
+        }
     }
+    out(0) = sPos
+    out(1) = sNeg
+  }
 
-  /** Descent direction g = -dd/dh evaluated at (h, l, t):
-    * L2: 2(t - h - l); L1: -sign(h + l - t) elementwise
+  /** Descent direction g = -dd/dh evaluated at (h, l, t), written into the
+    * caller's scratch row `g` (no allocation per call):
+    * L2: 2(t - h - l); L1: [[l1Descent]](h + l - t) elementwise
     * (reference `gradient`, `TransE.py:352-369`). */
-  def gradient(d: Distance, h: Array[Float], l: Array[Float], t: Array[Float]): Array[Float] = {
+  def gradientInto(d: Distance, h: Array[Float], l: Array[Float], t: Array[Float],
+      g: Array[Float]): Unit = {
     val k = h.length
-    val g = new Array[Float](k)
     var i = 0
     d match {
       case L2Squared =>
         while (i < k) { g(i) = 2f * (t(i) - h(i) - l(i)); i += 1 }
       case L1 =>
-        while (i < k) { g(i) = if (h(i) + l(i) - t(i) >= 0f) -1f else 1f; i += 1 }
+        while (i < k) { g(i) = l1Descent(h(i) + l(i) - t(i)); i += 1 }
     }
-    g
+  }
+
+  /** `if (x >= 0f) -1f else 1f` for every float x — so -1 for +0.0 and
+    * -0.0, +1 for NaN — computed on the bits without a branch. The sign
+    * of a residual is a coin flip, so the branch form mispredicts about
+    * every other component. x is "not >= 0" when it is negative and
+    * nonzero (sign bit set, magnitude bits nonzero) or NaN (magnitude
+    * bits above those of infinity); the result is -1f with its sign bit
+    * flipped in that case. */
+  def l1Descent(x: Float): Float = {
+    val s = java.lang.Float.floatToRawIntBits(x)
+    val a = s & 0x7fffffff
+    val notGe = ((s >>> 31) & (-a >>> 31)) | ((0x7f800000 - a) >>> 31)
+    java.lang.Float.intBitsToFloat(0xbf800000 ^ (notGe << 31))
   }
 
   /** y := y + a*x (axpy), the SGD update primitive

@@ -101,44 +101,125 @@ object LinkPrediction {
     * true triples low, so typical candidates exceed both thresholds
     * within a few components — the scan does a fraction of the k flops
     * per candidate with bit-identical ranks. Shared by the raw and
-    * FILTERED evaluators (identical float-op order: the goldens gate it). */
-  private[transe] def fusedCounts(ent: Array[Float], end: Int, k: Int,
+    * FILTERED evaluators (identical float-op order: the goldens gate it).
+    *
+    * Candidates are scored FOUR rows per pass, with eight independent
+    * accumulators (head and tail per row), so eight add chains overlap in
+    * the pipeline instead of two. The exit test runs once per
+    * [[ExitStride]] components (before components 0, 8, 16, ...) and
+    * stops the four rows once all eight sums have reached their
+    * thresholds. (On a weakly trained model the exit comes late: 48 of 50
+    * components on average for an 11-epoch FB15k-237-shaped model, so
+    * there the overlapping chains carry the speed.) The counts stay
+    * bit-identical to a one-row, test-every-component scan: each row's
+    * sum still adds its own terms in component order (only the point
+    * where adding stops moves), and by monotonicity a sum that has
+    * reached its threshold at any prefix stays there, while one that
+    * never does is summed over all k components either way. The n mod 4
+    * remaining rows use the one-row scan. */
+  private[graft] def fusedCounts(ent: Array[Float], end: Int, k: Int,
       u: Array[Float], v: Array[Float], dTrueHead: Double, dTrueTail: Double,
       l1: Boolean): (Long, Long) = {
+    val dH = dTrueHead
+    val dT = dTrueTail
     var lessH = 0L
     var lessT = 0L
     var off = 0
+    // rows starting below quadEnd have 3 more rows after them
+    val quadEnd = if (k > 0) end - 4 * k + 1 else 0
     if (l1) {
+      while (off < quadEnd) {
+        val o1 = off + k; val o2 = o1 + k; val o3 = o2 + k
+        var h0 = 0.0; var h1 = 0.0; var h2 = 0.0; var h3 = 0.0
+        var t0 = 0.0; var t1 = 0.0; var t2 = 0.0; var t3 = 0.0
+        var j = 0
+        while (j < k && ((j & (ExitStride - 1)) != 0 ||
+            h0 < dH || t0 < dT || h1 < dH || t1 < dT ||
+            h2 < dH || t2 < dT || h3 < dH || t3 < dT)) {
+          val uj = u(j); val vj = v(j)
+          val x0 = ent(off + j); val x1 = ent(o1 + j)
+          val x2 = ent(o2 + j); val x3 = ent(o3 + j)
+          h0 += math.abs(x0 + uj).toDouble; t0 += math.abs(vj - x0).toDouble
+          h1 += math.abs(x1 + uj).toDouble; t1 += math.abs(vj - x1).toDouble
+          h2 += math.abs(x2 + uj).toDouble; t2 += math.abs(vj - x2).toDouble
+          h3 += math.abs(x3 + uj).toDouble; t3 += math.abs(vj - x3).toDouble
+          j += 1
+        }
+        if (h0 < dH) lessH += 1
+        if (h1 < dH) lessH += 1
+        if (h2 < dH) lessH += 1
+        if (h3 < dH) lessH += 1
+        if (t0 < dT) lessT += 1
+        if (t1 < dT) lessT += 1
+        if (t2 < dT) lessT += 1
+        if (t3 < dT) lessT += 1
+        off += 4 * k
+      }
       while (off < end) {
         var sH = 0.0; var sT = 0.0
         var j = 0
-        while (j < k && (sH < dTrueHead || sT < dTrueTail)) {
+        while (j < k && (sH < dH || sT < dT)) {
           val x = ent(off + j)
           sH += math.abs(x + u(j)).toDouble
           sT += math.abs(v(j) - x).toDouble
           j += 1
         }
-        if (sH < dTrueHead) lessH += 1
-        if (sT < dTrueTail) lessT += 1
+        if (sH < dH) lessH += 1
+        if (sT < dT) lessT += 1
         off += k
       }
     } else {
+      while (off < quadEnd) {
+        val o1 = off + k; val o2 = o1 + k; val o3 = o2 + k
+        var h0 = 0.0; var h1 = 0.0; var h2 = 0.0; var h3 = 0.0
+        var t0 = 0.0; var t1 = 0.0; var t2 = 0.0; var t3 = 0.0
+        var j = 0
+        while (j < k && ((j & (ExitStride - 1)) != 0 ||
+            h0 < dH || t0 < dT || h1 < dH || t1 < dT ||
+            h2 < dH || t2 < dT || h3 < dH || t3 < dT)) {
+          val uj = u(j); val vj = v(j)
+          val x0 = ent(off + j); val x1 = ent(o1 + j)
+          val x2 = ent(o2 + j); val x3 = ent(o3 + j)
+          val a0 = x0 + uj; h0 += a0.toDouble * a0
+          val b0 = vj - x0; t0 += b0.toDouble * b0
+          val a1 = x1 + uj; h1 += a1.toDouble * a1
+          val b1 = vj - x1; t1 += b1.toDouble * b1
+          val a2 = x2 + uj; h2 += a2.toDouble * a2
+          val b2 = vj - x2; t2 += b2.toDouble * b2
+          val a3 = x3 + uj; h3 += a3.toDouble * a3
+          val b3 = vj - x3; t3 += b3.toDouble * b3
+          j += 1
+        }
+        if (h0 < dH) lessH += 1
+        if (h1 < dH) lessH += 1
+        if (h2 < dH) lessH += 1
+        if (h3 < dH) lessH += 1
+        if (t0 < dT) lessT += 1
+        if (t1 < dT) lessT += 1
+        if (t2 < dT) lessT += 1
+        if (t3 < dT) lessT += 1
+        off += 4 * k
+      }
       while (off < end) {
         var sH = 0.0; var sT = 0.0
         var j = 0
-        while (j < k && (sH < dTrueHead || sT < dTrueTail)) {
+        while (j < k && (sH < dH || sT < dT)) {
           val x = ent(off + j)
           val a = x + u(j); sH += a.toDouble * a
           val b = v(j) - x; sT += b.toDouble * b
           j += 1
         }
-        if (sH < dTrueHead) lessH += 1
-        if (sT < dTrueTail) lessT += 1
+        if (sH < dH) lessH += 1
+        if (sT < dT) lessT += 1
         off += k
       }
     }
     (lessH, lessT)
   }
+
+  /** Components [[fusedCounts]] adds to every sum between exit tests;
+    * a power of two, so the test is a mask. */
+  private final val ExitStride = 8
 
   /** FILTERED-protocol ranking (Bordes et al. 2013, the "filt." columns
     * every KG paper reports next to "raw"): when ranking the head of

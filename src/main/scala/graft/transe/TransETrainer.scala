@@ -2,8 +2,6 @@ package graft.transe
 
 import java.util.SplittableRandom
 
-import scala.collection.mutable
-
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Dataset, SparkSession}
 
@@ -22,10 +20,31 @@ final class ExactMembership(set: java.util.HashSet[(Int, Int, Int)]) extends Tri
   * zero boxing, 8 bytes/triple broadcast payload, cache-friendly lookups.
   * Usable when ids fit the bit budget (h,t < 2^27, l < 2^10 — far beyond
   * the broadcast-matrix design ceiling anyway); the trainer falls back to
-  * the HashSet form otherwise. */
+  * the HashSet form otherwise.
+  *
+  * `sorted` holds [[PackedMembership.pack]] keys in ascending order, which
+  * is ascending (h, l, t), so each head's triples form one contiguous
+  * block. A per-head offset index (built once on the driver and shipped
+  * with the keys) maps head h to its block, and a probe binary-searches
+  * only that block: ~log2(triples of h) steps instead of ~log2(all
+  * triples). The answer is the same as a search of the whole array,
+  * because a key can only sit in its own head's block. The index has one
+  * Int per head up to the largest; when head ids are sparser than the
+  * keys, one entry covers 2^shift consecutive heads instead, so the index
+  * never has more entries than there are keys. */
 final class PackedMembership(sorted: Array[Long]) extends TripleMembership {
+  private val shift: Int = PackedMembership.indexShift(sorted)
+  /** Heads `b << shift` until `(b + 1) << shift` have their keys in
+    * `sorted(offsets(b) until offsets(b + 1))`. */
+  private val offsets: Array[Int] = PackedMembership.headOffsets(sorted, shift)
+
   def contains(h: Int, l: Int, t: Int): Boolean =
-    java.util.Arrays.binarySearch(sorted, PackedMembership.pack(h, l, t)) >= 0
+    h >= 0 && (h >>> shift) < offsets.length - 1 && {
+      val lo = offsets(h >>> shift)
+      val hi = offsets((h >>> shift) + 1)
+      lo < hi && java.util.Arrays.binarySearch(sorted, lo, hi,
+        PackedMembership.pack(h, l, t)) >= 0
+    }
 }
 
 object PackedMembership {
@@ -33,8 +52,41 @@ object PackedMembership {
   val LabelBits = 10
   def fits(nEntities: Int, nLabels: Int): Boolean =
     nEntities < (1 << EntityBits) && nLabels < (1 << LabelBits)
+
+  /** h | l | t in 27 + 10 + 27 bits, sign bit flipped: the head's top bit
+    * is the Long's sign bit, and the flip makes signed key order (what
+    * `Arrays.sort` and `binarySearch` use) equal ascending (h, l, t). */
   def pack(h: Int, l: Int, t: Int): Long =
-    (h.toLong << (EntityBits + LabelBits)) | (l.toLong << EntityBits) | t.toLong
+    ((h.toLong << (EntityBits + LabelBits)) | (l.toLong << EntityBits) | t.toLong) ^
+      Long.MinValue
+
+  private def headOf(key: Long): Int =
+    ((key ^ Long.MinValue) >>> (EntityBits + LabelBits)).toInt
+
+  /** The smallest shift whose index over heads 0..max head has at most
+    * as many entries as there are keys. */
+  private def indexShift(sorted: Array[Long]): Int = {
+    val maxHead = if (sorted.isEmpty) 0 else headOf(sorted(sorted.length - 1))
+    var shift = 0
+    while ((maxHead >>> shift) >= math.max(sorted.length, 1)) shift += 1
+    shift
+  }
+
+  /** CSR offsets over head buckets 0..(max head >>> shift): offsets(b) is
+    * the index of the first key whose head bucket is >= b. */
+  private def headOffsets(sorted: Array[Long], shift: Int): Array[Int] = {
+    val nBuckets = if (sorted.isEmpty) 0 else (headOf(sorted(sorted.length - 1)) >>> shift) + 1
+    val offsets = new Array[Int](nBuckets + 1)
+    var i = 0
+    var b = 0
+    while (i < sorted.length) {
+      val bi = headOf(sorted(i)) >>> shift
+      while (b <= bi) { offsets(b) = i; b += 1 }
+      i += 1
+    }
+    offsets(nBuckets) = sorted.length
+    offsets
+  }
 }
 
 /** Bloom-filter membership (1% fpp) — the at-scale path: a false positive
@@ -108,15 +160,10 @@ class TransETrainer(params: TransEParams) extends Serializable {
     val (entity, label) = TransETrainer.initialMatrices(p, nEntities, nLabels, warmStart)
 
     var history = Vector.empty[Double]
-
-    val profile = sys.env.contains("GRAFT_TRAIN_PROFILE")
-    var tBroadcast, tJob, tMerge, tDestroy = 0L
-    def tick(): Long = System.nanoTime()
-
     var epochSecs = Vector.empty[Double]
     var epoch = 0
     while (epoch < p.epochs) {
-      val tEpoch0 = tick()
+      val tEpoch0 = System.nanoTime()
       // loss rides in the COLLECTED deltas, not an accumulator: updates
       // from transformations are re-applied on task retry / speculative
       // execution, which would inflate the metric nondeterministically on
@@ -128,10 +175,8 @@ class TransETrainer(params: TransEParams) extends Serializable {
         // matrices (the reference broadcasts two, TransE.py:116-117),
         // destroyed after the merge (TransE.py:146-149 — epochs*batches
         // generations would otherwise accumulate on executors).
-        val t0 = tick()
         val modelBc = sc.broadcast((entity, label))
         val batchSeed = TransETrainer.batchSeedOf(p, epoch, batch)
-        val t1 = tick()
 
         val sampled = TransETrainer.sampleBatch(data, p.batches, batchSeed)
         val deltas = sampled.mapPartitionsWithIndex { (pid, it) =>
@@ -139,7 +184,6 @@ class TransETrainer(params: TransEParams) extends Serializable {
           TransETrainer.partitionSgd(pid, it, ent(_), lab(_),
             membBc.value, nEntities, p, batchSeed, bernBc.value)
         }.collect()
-        val t2 = tick()
 
         // Deterministic last-writer-wins: partition-index order.
         java.util.Arrays.sort(deltas, Ordering.by((d: TransETrainer.Delta) => d.pid))
@@ -147,14 +191,11 @@ class TransETrainer(params: TransEParams) extends Serializable {
           epochLoss += d.loss
           d.applyTo(entity, label, p.dim)
         }
-        val t3 = tick()
         modelBc.destroy()
-        val t4 = tick()
-        tBroadcast += t1 - t0; tJob += t2 - t1; tMerge += t3 - t2; tDestroy += t4 - t3
         batch += 1
       }
       history :+= epochLoss
-      epochSecs :+= (tick() - tEpoch0) / 1e9
+      epochSecs :+= (System.nanoTime() - tEpoch0) / 1e9
       epoch += 1
       // periodic VERSIONED checkpoint (reference writes per-epoch files
       // entity_embedding_<id>.pkl, utils.py:44-49 / TransE.py:108-111):
@@ -165,12 +206,6 @@ class TransETrainer(params: TransEParams) extends Serializable {
             s"$dir/epoch=$epoch")
         }
       }
-    }
-    if (profile) {
-      System.err.println(
-        f"[train-profile] broadcast=${tBroadcast / 1e9}%.1fs job=${tJob / 1e9}%.1fs " +
-          f"merge=${tMerge / 1e9}%.1fs destroy=${tDestroy / 1e9}%.1fs " +
-          f"rounds=${p.epochs * p.batches}")
     }
     lossHistory = history
     epochSecsHistory = epochSecs
@@ -277,13 +312,23 @@ object TransETrainer {
       })
       .mapPartitions({ it =>
         val arr = it.map(_._2).toArray
-        java.util.Arrays.sort(arr, Ordering.by((t: Triple) => (t.h, t.l, t.t)))
+        java.util.Arrays.sort(arr, tripleOrder)
         arr.iterator
       }, preservesPartitioning = false)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     relaid.count() // materialize from the parent cache, then drop it
     rawRdd.unpersist()
     (relaid, nTriples, targetParts)
+  }
+
+  /** Lexicographic (h, l, t) order, the relayout's within-partition sort:
+    * the same order as `Ordering.by(t => (t.h, t.l, t.t))` without a
+    * Tuple3 per comparison. */
+  private val tripleOrder: Ordering[Triple] = new Ordering[Triple] {
+    def compare(a: Triple, b: Triple): Int =
+      if (a.h != b.h) Integer.compare(a.h, b.h)
+      else if (a.l != b.l) Integer.compare(a.l, b.l)
+      else Integer.compare(a.t, b.t)
   }
 
   /** Hand-rolled per-partition Bernoulli sampler (fraction 1/batches,
@@ -394,19 +439,63 @@ object TransETrainer {
     }
   }
 
-  private def pack(m: mutable.HashMap[Int, Array[Float]], dim: Int): (Array[Int], Array[Float]) = {
-    val n = m.size
-    val ids = new Array[Int](n)
-    val vals = new Array[Float](n * dim)
-    var i = 0
-    val it = m.iterator
-    while (it.hasNext) {
-      val (id, v) = it.next()
-      ids(i) = id
-      System.arraycopy(v, 0, vals, i * dim, dim)
-      i += 1
+  /** Open-addressing Int -> row map holding one task's write-combined
+    * rows for [[partitionSgd]]: linear probing over a primitive key array,
+    * so a lookup neither boxes the id nor allocates, and there are no
+    * entry objects. Ids must be >= 0 (-1 marks an empty slot). */
+  private[transe] final class RowMap {
+    private var keys = Array.fill(64)(-1)
+    private var rows = new Array[Array[Float]](64)
+    private var count = 0
+
+    private def slotOf(id: Int): Int = {
+      val mask = keys.length - 1
+      val x = id * 0x9E3779B9
+      var s = (x ^ (x >>> 16)) & mask
+      while (keys(s) != id && keys(s) != -1) s = (s + 1) & mask
+      s
     }
-    (ids, vals)
+
+    /** The row stored for `id`, or null. */
+    def get(id: Int): Array[Float] = rows(slotOf(id))
+
+    /** Store a row for an id that is not in the map. */
+    def put(id: Int, row: Array[Float]): Unit = {
+      if (2 * (count + 1) > keys.length) {
+        val oldKeys = keys
+        val oldRows = rows
+        keys = Array.fill(oldKeys.length * 2)(-1)
+        rows = new Array[Array[Float]](oldKeys.length * 2)
+        var i = 0
+        while (i < oldKeys.length) {
+          if (oldKeys(i) != -1) {
+            val s = slotOf(oldKeys(i))
+            keys(s) = oldKeys(i); rows(s) = oldRows(i)
+          }
+          i += 1
+        }
+      }
+      val s = slotOf(id)
+      keys(s) = id; rows(s) = row
+      count += 1
+    }
+
+    /** (ids, row-major values) of every stored row, in slot order. */
+    def pack(dim: Int): (Array[Int], Array[Float]) = {
+      val ids = new Array[Int](count)
+      val vals = new Array[Float](count * dim)
+      var i = 0
+      var s = 0
+      while (s < keys.length) {
+        if (keys(s) != -1) {
+          ids(i) = keys(s)
+          System.arraycopy(rows(s), 0, vals, i * dim, dim)
+          i += 1
+        }
+        s += 1
+      }
+      (ids, vals)
+    }
   }
 
   /** Executor-side SGD over one partition of the sampled batch — the
@@ -426,6 +515,22 @@ object TransETrainer {
     * per triple, and redraw count depends only on the membership set —
     * never on parameter values. That makes the stream replayable by
     * [[readSet]] without knowing the parameters.
+    *
+    * The loop allocates nothing per triple: the write-combining maps are
+    * primitive [[RowMap]]s, both distances come from one
+    * [[Kernels.distPair]] pass into a 2-slot scratch, and both gradients
+    * go into two per-task scratch rows ([[Kernels.gradientInto]]). It
+    * does the float and double operations of the plain formulation
+    * (boxed maps, a fresh gradient array per call, two separate distance
+    * sums; kept as a test reference) in the same order, so the emitted
+    * rows and loss are bit-identical to it: each distance keeps its own
+    * summation order; both gradients are taken from the pre-update rows
+    * before any update; the six row updates and the re-normalizations
+    * run in the same sequence over the same, possibly aliased, row
+    * objects, because a row is cloned into its map on first write and
+    * every later read or write of that id returns the clone. Ids inside
+    * a Delta come in slot order; each occurs once, so the merge does not
+    * depend on that order.
     */
   private[transe] def partitionSgd(
       pid: Int,
@@ -449,15 +554,33 @@ object TransETrainer {
     // cheaper (delta bytes track hinge violations, which decay as training
     // converges) and strictly better merge semantics (documented deviation,
     // SURVEY §7.5-2).
-    val entLocal = new mutable.HashMap[Int, Array[Float]]()
-    val labLocal = new mutable.HashMap[Int, Array[Float]]()
-    def entRead(id: Int): Array[Float] = entLocal.getOrElse(id, entBase(id))
-    def labRead(id: Int): Array[Float] = labLocal.getOrElse(id, labBase(id))
-    def entWrite(id: Int): Array[Float] = entLocal.getOrElseUpdate(id, entBase(id).clone())
-    def labWrite(id: Int): Array[Float] = labLocal.getOrElseUpdate(id, labBase(id).clone())
+    val entLocal = new RowMap
+    val labLocal = new RowMap
+    def entRead(id: Int): Array[Float] = {
+      val r = entLocal.get(id)
+      if (r != null) r else entBase(id)
+    }
+    def labRead(id: Int): Array[Float] = {
+      val r = labLocal.get(id)
+      if (r != null) r else labBase(id)
+    }
+    def entWrite(id: Int): Array[Float] = {
+      var r = entLocal.get(id)
+      if (r == null) { r = entBase(id).clone(); entLocal.put(id, r) }
+      r
+    }
+    def labWrite(id: Int): Array[Float] = {
+      var r = labLocal.get(id)
+      if (r == null) { r = labBase(id).clone(); labLocal.put(id, r) }
+      r
+    }
+    val dists = new Array[Double](2)
+    val gPos = new Array[Float](p.dim)
+    val gNeg = new Array[Float](p.dim)
 
     var loss = 0.0
-    it.foreach { tr =>
+    while (it.hasNext) {
+      val tr = it.next()
       // Corruption: flip head or tail — uniform 1/2 (TransE.py:252) or
       // the per-relation bern probability; redraw while the corrupted
       // triple is a real training triple (TransE.py:237-244), capped
@@ -476,9 +599,9 @@ object TransETrainer {
       val nhId = if (corruptHead) candidate else tr.h
       val ntId = if (corruptHead) tr.t else candidate
 
-      val dPos = Kernels.dist(p.distance, entRead(tr.h), labRead(tr.l), entRead(tr.t))
-      val dNeg = Kernels.dist(p.distance, entRead(nhId), labRead(tr.l), entRead(ntId))
-      val viol = p.margin + dPos - dNeg
+      Kernels.distPair(p.distance, entRead(tr.h), labRead(tr.l), entRead(tr.t),
+        entRead(nhId), entRead(ntId), dists)
+      val viol = p.margin + dists(0) - dists(1)
       if (viol > 0) { // hinge activation (TransE.py:276)
         loss += viol
         val h = entWrite(tr.h)
@@ -489,8 +612,8 @@ object TransETrainer {
         // Gradients computed from pre-update values, then applied jointly;
         // shared rows (l always; t or h on corruption overlap) accumulate
         // both contributions, which is exact joint SGD on the hinge term.
-        val gPos = Kernels.gradient(p.distance, h, l, t)
-        val gNeg = Kernels.gradient(p.distance, nh, l, nt)
+        Kernels.gradientInto(p.distance, h, l, t, gPos)
+        Kernels.gradientInto(p.distance, nh, l, nt, gNeg)
         Kernels.axpyInPlace(p.lr, gPos, h)
         Kernels.axpyInPlace(p.lr, gPos, l)
         Kernels.axpyInPlace(-p.lr, gPos, t)
@@ -505,8 +628,8 @@ object TransETrainer {
         if (ntId != tr.t) Kernels.normalizeInPlace(nt)
       }
     }
-    val (eIds, eVals) = pack(entLocal, p.dim)
-    val (lIds, lVals) = pack(labLocal, p.dim)
+    val (eIds, eVals) = entLocal.pack(p.dim)
+    val (lIds, lVals) = labLocal.pack(p.dim)
     Iterator(Delta(pid, eIds, eVals, lIds, lVals, loss))
   }
 

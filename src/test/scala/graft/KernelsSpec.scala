@@ -51,11 +51,46 @@ class KernelsSpec extends AnyFunSuite {
     assert(Kernels.distL2Sq(h, l, t) == 0.0)
   }
 
+  /** Gradient into a scratch row pre-filled with garbage, so a component
+    * the kernel fails to write shows. */
+  private def gradient(d: Distance, h: Array[Float], l: Array[Float],
+      t: Array[Float]): Array[Float] = {
+    val g = Array.fill(h.length)(Float.NaN)
+    Kernels.gradientInto(d, h, l, t, g)
+    g
+  }
+
   test("L1 gradient is ±1-valued (TransE.py:363-365)") {
     cases(200) { r =>
       val k = 2 + r.nextInt(31)
-      val g = Kernels.gradient(L1, vec(r, k), vec(r, k), vec(r, k))
+      val g = gradient(L1, vec(r, k), vec(r, k), vec(r, k))
       assert(g.forall(x => x == 1.0f || x == -1.0f))
+    }
+  }
+
+  test("L1 gradient sign is `x >= 0f`: -1 for +0.0 and -0.0, +1 for NaN") {
+    val specials = Seq(0.0f, -0.0f, Float.NaN, Float.MinPositiveValue,
+      -Float.MinPositiveValue, Float.PositiveInfinity, Float.NegativeInfinity)
+    val r = new SplittableRandom(5)
+    val xs = specials ++ Seq.fill(200)(java.lang.Float.intBitsToFloat(r.nextInt()))
+    val h = xs.toArray
+    val zero = Array.fill(h.length)(0.0f)
+    val g = gradient(L1, h, zero, zero) // x = h + 0 - 0 keeps h's sign and NaN
+    h.indices.foreach { i =>
+      val x = h(i) + zero(i) - zero(i)
+      assert(g(i) == (if (x >= 0f) -1f else 1f), s"x=$x")
+    }
+    assert(g.take(3).toSeq == Seq(-1f, -1f, 1f))
+    // -0.0 as the sum itself: (-0) + (-0) - (+0) == -0.0
+    assert(gradient(L1, Array(-0.0f), Array(-0.0f), Array(0.0f)).head == -1f)
+    // the bit-level sign against the comparison over a sweep of all float
+    // bit patterns, plus every pattern next to ±0, ±infinity and NaN
+    val edges = Seq(0x00000000, 0x80000000, 0x7f800000, 0xff800000, 0x7fc00000,
+      0xffc00000).flatMap(b => Seq(b - 1, b, b + 1))
+    (edges.iterator ++ Iterator.iterate(0L)(_ + 4099L).takeWhile(_ < (1L << 32))
+      .map(_.toInt)).foreach { bits =>
+      val x = java.lang.Float.intBitsToFloat(bits)
+      assert(Kernels.l1Descent(x) == (if (x >= 0f) -1f else 1f), f"bits=0x$bits%08x")
     }
   }
 
@@ -63,10 +98,26 @@ class KernelsSpec extends AnyFunSuite {
     cases(200) { r =>
       val k = 2 + r.nextInt(31)
       val (h, l, t) = (vec(r, k), vec(r, k), vec(r, k))
-      val g = Kernels.gradient(L2Squared, h, l, t)
+      val g = gradient(L2Squared, h, l, t)
       g.indices.foreach { i =>
         assert(math.abs(g(i) - 2f * (t(i) - h(i) - l(i))) < 1e-3)
       }
+    }
+  }
+
+  test("fused distance pair equals two separate distance sums, bit for bit") {
+    val out = new Array[Double](2)
+    cases(200) { r =>
+      val k = 1 + r.nextInt(64)
+      val (h, l, t) = (vec(r, k), vec(r, k), vec(r, k))
+      val other = vec(r, k)
+      // the negative triple shares a row with the positive one, as a
+      // corruption of one side does
+      val (nh, nt) = if (r.nextBoolean()) (h, other) else (other, t)
+      Kernels.distPair(L1, h, l, t, nh, nt, out)
+      assert(out(0) == Kernels.distL1(h, l, t) && out(1) == Kernels.distL1(nh, l, nt))
+      Kernels.distPair(L2Squared, h, l, t, nh, nt, out)
+      assert(out(0) == Kernels.distL2Sq(h, l, t) && out(1) == Kernels.distL2Sq(nh, l, nt))
     }
   }
 
@@ -76,7 +127,7 @@ class KernelsSpec extends AnyFunSuite {
       val (h, l, t) = (vec(r, k, 5f), vec(r, k, 5f), vec(r, k, 5f))
       if (Kernels.distL2Sq(h, l, t) > 1e-3) {
         val d0 = Kernels.distL2Sq(h, l, t)
-        val g = Kernels.gradient(L2Squared, h, l, t)
+        val g = gradient(L2Squared, h, l, t)
         val h2 = h.clone()
         Kernels.axpyInPlace(0.001f, g, h2)
         assert(Kernels.distL2Sq(h2, l, t) < d0)

@@ -41,6 +41,28 @@ class RankEquivalenceSpec extends SparkSpec {
     }
   }
 
+  /** Naive FILTERED ranks: a candidate counts only when strictly closer
+    * than the true entity AND its triple is not a known one. */
+  private def naiveFilteredRanks(test: Seq[Triple], model: TransEModel,
+      known: Set[Triple]): Seq[(Long, Long)] = {
+    val ent = model.entity
+    val l1 = model.params.distance == L1
+    def f(z: Float): Double = if (l1) math.abs(z).toDouble else z.toDouble * z
+    test.map { tr =>
+      val l = model.label(tr.l); val h = ent(tr.h); val t = ent(tr.t)
+      val u = Array.tabulate(l.length)(i => l(i) - t(i))
+      val v = Array.tabulate(l.length)(i => h(i) + l(i))
+      def scoreAdd(e: Array[Float]) = e.indices.foldLeft(0.0)((s, i) => s + f(e(i) + u(i)))
+      def scoreSub(e: Array[Float]) = e.indices.foldLeft(0.0)((s, i) => s + f(v(i) - e(i)))
+      val (dh, dt) = (scoreAdd(h), scoreSub(t))
+      val lessH = ent.indices.count(e =>
+        scoreAdd(ent(e)) < dh && !known(Triple(e, tr.l, tr.t)))
+      val lessT = ent.indices.count(e =>
+        scoreSub(ent(e)) < dt && !known(Triple(tr.h, tr.l, e)))
+      (lessH + 1L, lessT + 1L)
+    }
+  }
+
   private def randomModel(rng: SplittableRandom, n: Int, nLab: Int, k: Int,
       dist: Distance): TransEModel = {
     def mat(rows: Int) = Array.fill(rows)(
@@ -64,6 +86,62 @@ class RankEquivalenceSpec extends SparkSpec {
       // compare as sorted multisets
       assert(got.sorted == want.sorted,
         s"dist=$dist trial=$trial n=$n k=$k: fused ranks diverged")
+    }
+  }
+
+  test("fused scan counts == naive counts for 1-9 entities and k in {1, 7, 8, 9, 50}") {
+    // the scan takes 4 rows per pass and tests its exit every 8
+    // components: entity counts 1-9 run the n mod 4 remainder rows, and k
+    // around 8 runs partial exit strides. Thresholds sit exactly on, and
+    // one ulp either side of, every candidate's full sum and its partial
+    // sums at the exit tests — where an early exit that stopped one
+    // component too soon, or tested the wrong sums, would miscount.
+    val rng = new SplittableRandom(11)
+    for (dist <- Seq[Distance](L1, L2Squared); n <- 1 to 9; k <- Seq(1, 7, 8, 9, 50)) {
+      val model = randomModel(rng, n, 2, k, dist)
+      val flat = model.entity.flatten
+      def f(z: Float): Double = if (dist == L1) math.abs(z).toDouble else z.toDouble * z
+      val tr = Triple(rng.nextInt(n), rng.nextInt(2), rng.nextInt(n))
+      val l = model.label(tr.l); val h = model.entity(tr.h); val t = model.entity(tr.t)
+      val u = Array.tabulate(k)(i => l(i) - t(i))
+      val v = Array.tabulate(k)(i => h(i) + l(i))
+      // prefix sums of every candidate, in component order
+      val headSums = model.entity.map(e => (0 until k).scanLeft(0.0)((s, i) => s + f(e(i) + u(i))))
+      val tailSums = model.entity.map(e => (0 until k).scanLeft(0.0)((s, i) => s + f(v(i) - e(i))))
+      def thresholds(sums: Array[IndexedSeq[Double]]): Seq[Double] =
+        sums.toSeq.flatMap(ps => (k +: (8 until k by 8)).map(ps(_)))
+          .flatMap(x => Seq(math.nextDown(x), x, math.nextUp(x))).distinct
+      val hs = thresholds(headSums)
+      val ts = thresholds(tailSums)
+      // a 0 threshold is reached before the first component, so pairing
+      // it with the other side's thresholds lets that side alone decide
+      val pairs = hs.flatMap(dh => Seq((dh, 0.0), (dh, ts(rng.nextInt(ts.length))))) ++
+        ts.flatMap(dt => Seq((0.0, dt), (hs(rng.nextInt(hs.length)), dt)))
+      for ((dh, dt) <- pairs) {
+        val want = (headSums.count(_.last < dh).toLong, tailSums.count(_.last < dt).toLong)
+        val got = LinkPrediction.fusedCounts(flat, n * k, k, u, v, dh, dt, dist == L1)
+        assert(got == want, s"dist=$dist n=$n k=$k dh=$dh dt=$dt: fused counts diverged")
+      }
+    }
+  }
+
+  test("filtered ranks == naive filtered ranks (L1 and L2, n not a multiple of 4)") {
+    import spark.implicits._
+    val rng = new SplittableRandom(13)
+    for (dist <- Seq[Distance](L1, L2Squared); n <- Seq(7, 33)) {
+      val k = 9
+      val model = randomModel(rng, n, 2, k, dist)
+      // a small id space makes known triples share (l, t) and (h, l)
+      // keys with the test triples, so the filter removes competitors
+      val known = Seq.fill(6 * n)(
+        Triple(rng.nextInt(n), rng.nextInt(2), rng.nextInt(n))).distinct
+      val test = known.take(10) ++
+        Seq.fill(5)(Triple(rng.nextInt(n), rng.nextInt(2), rng.nextInt(n)))
+      val want = naiveFilteredRanks(test, model, known.toSet)
+      val got = LinkPrediction.rankTriplesFiltered(test.toDS(), model, known.toDS())
+        .collect().map(r => (r.rank_head, r.rank_tail)).toSeq
+      assert(got.sorted == want.sorted, s"dist=$dist n=$n: filtered ranks diverged")
+      assert(want != naiveRanks(test, model), "the filter removed nothing")
     }
   }
 }
