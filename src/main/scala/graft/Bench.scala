@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR. Emits the full per-query JSON line (also saved to
   * BENCH_DETAIL.json, since it exceeds the driver's stdout-tail capture)
@@ -11,21 +9,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Kryo class registration on (small ids instead of class names in
-    // every broadcast/shuffle record) but registrationRequired OFF: an
-    // unregistered exotic type in the driver-run sweep must degrade to
-    // the slow path, never crash the round
-    val spark = GraftKryo.configure(SparkSession.builder()
-      .master(s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // production integration route: vector functions + optimizer rules
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.builder().getOrCreate()
 
     // warmup: touch every table + exercise codegen once
     Tables.names.foreach(n => Tables.load(spark, sfDir, n).count())

@@ -85,18 +85,7 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").map(_.trim).toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // registration on, registrationRequired off — see Bench's note
-    val spark = GraftKryo.configure(SparkSession.builder()
-      .master(s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // production integration route: vector functions + optimizer rules
-      // installed session-wide (queries also self-register defensively)
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.builder().getOrCreate()
     dumpQueries(spark, sfDir, outDir, only)
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
@@ -152,5 +141,11 @@ object Verify {
       System.err.println(s"[verify] BEHAVIORAL FAIL $n: $detail")
     }
     spark.stop()
+    sys.exit(exitStatus(checks))
   }
+
+  /** Process exit status once every output file is written: non-zero
+    * when any behavioral check failed. */
+  private[graft] def exitStatus(checks: Seq[(String, (Boolean, String))]): Int =
+    if (checks.forall { case (_, (ok, _)) => ok }) 0 else 1
 }

@@ -293,17 +293,10 @@ private[apps] object Args {
     SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession) match {
       case Some(s) => (s, false)
       case None =>
-        val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-          Runtime.getRuntime.availableProcessors().toString)
-        // Kryo + explicit class registration (reference parity,
-        // example.py:16-17); hot-class coverage is gated by KryoSpec
-        val spark = graft.GraftKryo.configure(SparkSession.builder()
-          .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")))
-          .config("spark.sql.shuffle.partitions", cpus)
-          .config("spark.sql.adaptive.enabled", "true")
-          .config("spark.ui.enabled", "false")
+        // SPARK_GRAFT_MASTER points a deployment at its cluster
+        val b = graft.GraftSession.builder()
+        val spark = sys.env.get("SPARK_GRAFT_MASTER").fold(b)(b.master)
           .getOrCreate()
-        spark.sparkContext.setLogLevel("WARN")
         (spark, true)
     }
   }

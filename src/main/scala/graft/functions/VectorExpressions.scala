@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -149,7 +150,7 @@ object VectorFunctions {
     if (es.length != n) throw new IllegalArgumentException(
       s"$name requires exactly $n argument(s), got ${es.length}")
 
-  private[functions] val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
+  private[graft] val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
     ("vector_dot", es => { checkArity("vector_dot", 2, es); VectorDot(es(0), es(1)) }),
     ("vector_cosine", es => { checkArity("vector_cosine", 2, es); VectorCosine(es(0), es(1)) }),
     ("vector_l2sq", es => { checkArity("vector_l2sq", 2, es); VectorL2Sq(es(0), es(1)) }),
@@ -233,11 +234,16 @@ object VectorFunctions {
       GramLowerAgg(es(0), d)
     }))
 
-  def ensureRegistered(spark: SparkSession): Unit =
+  /** Registers the builders the session's registry lacks (a session built
+    * without [[GraftExtensions]]); re-registering a present name would only
+    * replace it with itself and log a WARN per call. */
+  def ensureRegistered(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
     builders.foreach { case (name, b) =>
-      spark.sessionState.functionRegistry
-        .createOrReplaceTempFunction(name, b, "built-in")
+      if (!registry.functionExists(FunctionIdentifier(name)))
+        registry.createOrReplaceTempFunction(name, b, "built-in")
     }
+  }
 
   def dot(spark: SparkSession, a: Column, b: Column): Column = {
     ensureRegistered(spark); call_function("vector_dot", a, b)

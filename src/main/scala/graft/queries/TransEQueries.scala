@@ -224,8 +224,8 @@ object TransEQueries {
 
   // ------------------------------------------- shared trained model cache
   /** Evaluation params: small dim / few epochs so the verify gate stays
-    * fast while still showing loss decrease and better-than-random ranks. */
-  /** Picked by sweep (tools/EvalSweep) on the testdata KG: L2^2 distance
+    * fast while still showing loss decrease and better-than-random ranks.
+    * Picked by `graft.tools.EvalSweep` on the testdata KG: L2^2 distance
     * converges to tail MeanRank ~10x better than random in 30 epochs;
     * head rank is inherently ~random for `placed_by` (every order of the
     * customer fits the translation equally). */

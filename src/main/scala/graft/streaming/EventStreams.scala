@@ -49,28 +49,6 @@ object EventStreams {
   private[graft] val lastMicroBatchCount =
     new java.util.concurrent.atomic.AtomicLong(-1L)
 
-  /** Total shuffle-write records during the LAST probed run (-1 when the
-    * probe was off). Only measured when [[structuralProbe]] is set —
-    * the listener drain adds ~0.2 s per run, which would distort bench
-    * seconds if always on. */
-  private[graft] val lastShuffleRecords =
-    new java.util.concurrent.atomic.AtomicLong(-1L)
-
-  /** Opt-in switch for the shuffle-record listener (StreamingSpec's
-    * structural gates set it around their calls; bench leaves it off). */
-  private[graft] val structuralProbe =
-    new java.util.concurrent.atomic.AtomicBoolean(false)
-
-  private final class ShuffleProbe extends org.apache.spark.scheduler.SparkListener {
-    val records = new java.util.concurrent.atomic.AtomicLong(0L)
-    override def onStageCompleted(
-        e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-      records.addAndGet(
-        e.stageInfo.taskMetrics.shuffleWriteMetrics.recordsWritten)
-      ()
-    }
-  }
-
   /** File-source stream over the static events parquet (one micro-batch
     * per file by default — the standard replay harness for testing
     * streaming semantics on deterministic input). The file source needs a
@@ -288,7 +266,9 @@ object EventStreams {
     * set in driver memory, and the harness consumes every result before
     * starting the next query. */
   /** State-partition count for the finite replay runs. Profiled r13
-    * (tools/StreamProfile, sf0.1 interval-join-outer): with the session's
+    * per micro-batch (sf0.1 interval-join-outer; `graft.tools.Profile
+    * <sfDir> stream_interval_join_outer` prints the same per-batch
+    * durations and state commit times): with the session's
     * 32 shuffle partitions, EVERY micro-batch pays a per-partition
     * state-store load/commit across all stateful operators — the three
     * ~empty sentinel/trailing batches cost 10.6 s of the query's 17 s,
@@ -298,7 +278,7 @@ object EventStreams {
     * Production sizing: state partitions follow STATE VOLUME (target
     * rows-per-store), not CPU count — these replays hold < 10^5 state
     * rows, where 8 stores is already more than enough parallelism.
-    * Re-profiled r15 (same tool, interval-join-outer, sf0.1): wall is
+    * Re-profiled r15 (interval-join-outer, sf0.1): wall is
     * monotone in store count — 16 parts 10.4 s, 8 parts 7.2 s, 4 parts
     * 6.3 s, 2 parts 6.2 s — because every micro-batch pays a fixed
     * per-store load/commit across its 4 join state stores, while the
@@ -320,12 +300,6 @@ object EventStreams {
     }
     val name = s"graft_sink_${sinkId.incrementAndGet()}"
     liveSinks.add(name)
-    val shuffleProbe =
-      if (structuralProbe.get()) {
-        val p = new ShuffleProbe
-        spark.sparkContext.addSparkListener(p)
-        Some(p)
-      } else None
     // shuffle-partition override is read at STREAM START and baked into
     // the run's state layout; the first batch is planned ASYNCHRONOUSLY
     // after start(), so the restore waits for the drained run (the
@@ -333,9 +307,9 @@ object EventStreams {
     val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", StateParts)
     // start() can throw synchronously (bad source dir, analysis error) —
-    // restore the conf and drop the probe listener on that path too
-    // (ADVICE r13: a failed start previously left the session's shuffle
-    // partitions at the streaming override for its remaining lifetime)
+    // restore the conf on that path too (ADVICE r13: a failed start
+    // previously left the session's shuffle partitions at the streaming
+    // override for its remaining lifetime)
     val q = try {
       df.writeStream
         .format("memory")
@@ -344,7 +318,6 @@ object EventStreams {
         .start()
     } catch { case e: Throwable =>
       spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-      shuffleProbe.foreach(spark.sparkContext.removeSparkListener(_))
       throw e
     }
     try {
@@ -358,26 +331,9 @@ object EventStreams {
         .flatMap(_.stateOperators).map(_.numRowsTotal)
       lastStateRowsFinal.set(if (fin.isEmpty) -1L else fin.sum)
       lastMicroBatchCount.set(q.recentProgress.count(_.numInputRows > 0).toLong)
-      shuffleProbe.foreach { p =>
-        // the listener bus is async — poll until the counter goes quiet
-        var last = -1L
-        var cur = p.records.get()
-        var i = 0
-        while (cur != last && i < 100) {
-          Thread.sleep(100); last = cur; cur = p.records.get(); i += 1
-        }
-        lastShuffleRecords.set(cur)
-      }
-      if (sys.env.contains("GRAFT_STREAM_DEBUG")) {
-        q.recentProgress.foreach { p =>
-          System.err.println(s"[stream-debug] batch=${p.batchId} rows=${p.numInputRows} " +
-            s"watermark=${p.eventTime.get("watermark")} max=${p.eventTime.get("max")}")
-        }
-      }
     } finally {
       q.stop()
       spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-      shuffleProbe.foreach(spark.sparkContext.removeSparkListener(_))
     }
     spark.table(name)
   }

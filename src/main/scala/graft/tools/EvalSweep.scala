@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import graft.queries.TransEQueries
 import graft.transe._
 
@@ -11,30 +9,9 @@ import graft.transe._
 object EvalSweep {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[16]")
-      .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    import spark.implicits._
-
-    val raw = TransEQueries.kgTriples(spark, sfDir).as[RawTriple]
-    val (encodedAll, ents, labs) = DictionaryEncoder.encodeAll(raw)
-    val nEnt = ents.count().toInt
-    val nLab = labs.count().toInt
-    val placedById = labs.filter(org.apache.spark.sql.functions.col("name") === "placed_by")
-      .select("id").as[Int].collect().head
-    val orderIds = ents
-      .filter(org.apache.spark.sql.functions.col("name").startsWith("o:"))
-      .filter(org.apache.spark.sql.functions.expr("CAST(substring(name, 3) AS LONG) % 17 = 0"))
-      .select("id").as[Int].collect().toSet
-    val orderIdsBc = spark.sparkContext.broadcast(orderIds)
-    val test = encodedAll
-      .filter(tr => tr.l == placedById && orderIdsBc.value.contains(tr.h)).persist()
-    val train = encodedAll
-      .filter(tr => !(tr.l == placedById && orderIdsBc.value.contains(tr.h))).persist()
+    val spark = graft.GraftSession.builder().getOrCreate()
+    // the registered eval split: placed_by edges of every 17th order held out
+    val (train, test, _, nEnt, nLab) = TransEQueries.trainTestSplit(spark, sfDir)
 
     for ((epochs, lr, dim, dist, margin) <- Seq(
       (40, 0.05f, 32, L2Squared, 1.0f),

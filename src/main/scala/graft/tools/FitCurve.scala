@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-only: print the fixed-seed transe_fit loss curve and transe_eval
   * metrics under a given SPARK_GRAFT_CPUS — used to verify the trainer's
   * layout-independent determinism claim (ContractSpec golden gates must
@@ -10,15 +8,8 @@ import org.apache.spark.sql.SparkSession
 object FitCurve {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = graft.GraftSession.cpus
+    val spark = graft.GraftSession.builder(cpus).getOrCreate()
     val losses = graft.queries.TransEQueries.transeFit(spark, sfDir)
       .orderBy("epoch").collect().map(_.getDouble(1))
     println(s"[fit-curve cpus=$cpus] ${losses.mkString(",")}")

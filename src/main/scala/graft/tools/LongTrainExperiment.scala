@@ -1,8 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
-import graft.GraftKryo
+import graft.GraftSession
 import graft.transe._
 
 /** Staged long-train probe on the learnable fb15k-shape KG
@@ -20,14 +18,7 @@ object LongTrainExperiment {
   def main(args: Array[String]): Unit = {
     val epochsPerStage = args.headOption.map(_.toInt).getOrElse(50)
     val stages = if (args.length > 1) args(1).toInt else 4
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = GraftKryo.configure(SparkSession.builder()
-      .master(s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.builder().getOrCreate()
 
     val (train, test) = Fb15kShape.structuredSplit(spark)
     val trainP = train.persist()

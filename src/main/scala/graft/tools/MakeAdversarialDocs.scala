@@ -90,13 +90,7 @@ object MakeAdversarialDocs {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = graft.GraftKryo.configure(SparkSession.builder()
-      .master("local[8]"))
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.builder().getOrCreate()
     println(build(spark, args(0), args(1)))
     spark.stop()
   }

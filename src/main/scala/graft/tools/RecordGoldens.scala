@@ -1,8 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
-import graft.GraftKryo
+import graft.GraftSession
 import graft.queries.TransEQueries
 import graft.transe._
 
@@ -17,14 +15,7 @@ import graft.transe._
   * recorded here reproduce under any master/parallelism. */
 object RecordGoldens {
   def main(args: Array[String]): Unit = {
-    val spark = GraftKryo.configure(SparkSession.builder()
-      .master("local[8]"))
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.builder(8).getOrCreate()
 
     val sf = "/root/testdata/sf0.001"
     val (train, test, _, nEnt, nLab) = TransEQueries.trainTestSplit(spark, sf)

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 
@@ -49,15 +48,9 @@ object ScanAudit {
 
   def main(args: Array[String]): Unit = {
     val sf = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = graft.GraftKryo.configure(SparkSession.builder()
-      .master("local[4]"))
-      .config("spark.sql.shuffle.partitions", "4")
+    val spark = graft.GraftSession.builder()
       .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
       .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
 
     graft.SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       try {

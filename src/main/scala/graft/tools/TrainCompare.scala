@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-only: time the broadcast trainer vs the partitioned-parameter
   * trainer on the same encoded KG — the measured side of SCALE.md's
   * crossover discussion. Prints per-epoch wall seconds for both.
@@ -11,14 +9,7 @@ object TrainCompare {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val epochs = args.lift(1).map(_.toInt).getOrElse(4)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.GraftKryo.configure(SparkSession.builder()
-      .master(s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.builder().getOrCreate()
 
     val (enc, _, _, nEnt, nLab) = graft.queries.TransEQueries.encodedKg(spark, sfDir)
     enc.count()

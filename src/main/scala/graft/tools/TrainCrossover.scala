@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-only: locate the broadcast-vs-partitioned trainer crossover by
   * training seeded synthetic KGs of increasing entity count at the
   * reference k=50. The broadcast trainer ships n*k*4 bytes per round
@@ -16,14 +14,7 @@ object TrainCrossover {
     val epochs = args.lift(1).map(_.toInt).getOrElse(2)
     val batches = args.lift(2).map(_.toInt).getOrElse(2)
     val mode = args.lift(3).getOrElse("both") // both | broadcast | partitioned
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.GraftKryo.configure(SparkSession.builder()
-      .master(s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.builder().getOrCreate()
     import spark.implicits._
 
     shapes.foreach { nEnt =>
@@ -45,47 +36,25 @@ object TrainCrossover {
       } else -1.0
 
       val pt = new graft.transe.TransEPartitionedTrainer(p)
-      // shuffle-volume probe around the partitioned fit: the scale claim
-      // is per-round traffic ~ O(touched-rows x k), so report it measured
-      val shufRead = new java.util.concurrent.atomic.AtomicLong(0L)
-      val shufRecs = new java.util.concurrent.atomic.AtomicLong(0L)
-      val probe = new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-          val m = e.stageInfo.taskMetrics.shuffleReadMetrics
-          shufRead.addAndGet(m.totalBytesRead)
-          shufRecs.addAndGet(m.recordsRead)
-          ()
+      // shuffle volume of the partitioned fit: the scale claim is
+      // per-round traffic ~ O(touched-rows x k), so report it measured
+      val (tP, shuffle) = if (mode != "broadcast") {
+        val probed = graft.metrics.JobProbe.measure(spark) {
+          val t1 = System.nanoTime()
+          val (entRdd, _) = pt.fitDistributed(kg, nEnt, nLab)
+          val s = (System.nanoTime() - t1) / 1e9 / epochs
+          entRdd.unpersist()
+          s
         }
-      }
-      val tP = if (mode != "broadcast") {
-        spark.sparkContext.addSparkListener(probe)
-        val t1 = System.nanoTime()
-        val (entRdd, _) = pt.fitDistributed(kg, nEnt, nLab)
-        val s = (System.nanoTime() - t1) / 1e9 / epochs
-        entRdd.unpersist()
-        // drain the async listener bus by POLLING until the counters go
-        // quiet (GraphSpec.probe's discipline) — a fixed sleep silently
-        // under-reports on a loaded box, the exact untrustworthiness this
-        // probe exists to remove
-        var last = (shufRead.get, shufRecs.get)
-        var quietMs = 0
-        val deadline = System.currentTimeMillis() + 30000
-        while (quietMs < 1500 && System.currentTimeMillis() < deadline) {
-          Thread.sleep(250)
-          val cur = (shufRead.get, shufRecs.get)
-          if (cur == last) quietMs += 250 else { quietMs = 0; last = cur }
-        }
-        spark.sparkContext.removeSparkListener(probe)
-        s
-      } else -1.0
+        (probed.result, probed.work)
+      } else (-1.0, graft.metrics.Work())
       kg.unpersist()
       val mb = nEnt.toLong * p.dim * 4 / (1 << 20)
       println(f"[crossover] nEnt=$nEnt%d batches=$batches (matrix=${mb}MB) " +
         f"broadcast=$tB%.2f s/epoch partitioned=$tP%.2f s/epoch " +
         f"ratio=${tP / tB}%.2fx " +
-        f"shuffleRead=${shufRead.get / (1 << 20)}MB/" +
-        f"${shufRecs.get / 1000000.0}%.1fMrec (all epochs) lossEq=${
+        f"shuffleRead=${shuffle.shuffleReadBytes / (1 << 20)}MB/" +
+        f"${shuffle.shuffleReadRecords / 1000000.0}%.1fMrec (all epochs) lossEq=${
           mode == "both" && b.lossHistory == pt.lossHistory}")
     }
     spark.stop()

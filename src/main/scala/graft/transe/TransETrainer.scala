@@ -272,8 +272,7 @@ object TransETrainer {
     * partitions of a small batch multiply the per-round collect bytes
     * ~32x while the SGD compute itself is microseconds. Measured on sf0.1
     * (1.5M triples, 186k entities): 4-8 partitions beat 32 by ~2-4x wall
-    * clock. ~200k triples/partition, clamped to [2, 16]
-    * (GRAFT_TRAIN_PARTS overrides for experiments).
+    * clock. ~200k triples/partition, clamped to [2, 16].
     *
     * LAYOUT-INDEPENDENT DETERMINISM: partition each triple by a content
     * hash and sort within partitions. The SGD result depends on which
@@ -300,10 +299,7 @@ object TransETrainer {
     val rawRdd = triples.rdd
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val nTriples = rawRdd.count()
-    val targetParts = sys.env.get("GRAFT_TRAIN_PARTS").map(_.toInt).getOrElse(
-      math.max(2, math.min(16, (nTriples / 200000L).toInt + 1)))
-    require(targetParts > 0,
-      s"GRAFT_TRAIN_PARTS must be positive, got $targetParts")
+    val targetParts = math.max(2, math.min(16, (nTriples / 200000L).toInt + 1))
     val relaid = rawRdd
       .keyBy(tr => Math.floorMod(StableHash.tripleHash(tr.h, tr.l, tr.t), targetParts))
       .partitionBy(new org.apache.spark.Partitioner {

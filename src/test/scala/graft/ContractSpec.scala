@@ -183,8 +183,9 @@ class ContractSpec extends SparkSpec with PerfProbing {
 
   test("golden gate: L1-distance training matches its fixed-seed recording (sf0.001)") {
     // the registry's evalParams train L2Squared, so the L1 kernels
-    // (Kernels.dist/gradient L1 branches) previously flowed through NO
-    // golden gate (VERDICT r5 #6); this pins them with the same contract
+    // (Kernels.distPair/gradientInto L1 branches) previously flowed
+    // through NO golden gate (VERDICT r5 #6); this pins them with the
+    // same contract
     val (train, test, _, nEnt, nLab) =
       queries.TransEQueries.trainTestSplit(spark, sf)
     val p = queries.TransEQueries.evalParams.copy(distance = transe.L1)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.GraphAnalytics
 
-class GraphSpec extends SparkSpec {
+class GraphSpec extends SparkSpec with PerfProbing {
   import spark.implicits._
 
   private def edgesOf(pairs: (String, String)*) =
@@ -284,43 +284,9 @@ class GraphSpec extends SparkSpec {
 
   // ---------------- structural perf gates (VERDICT r7 #4): wall-time
   // cannot police the iterative family under CPU throttling, so pin the
-  // SHAPE — jobs and shuffle volume per iteration — via a listener
-  private class PerfProbe extends org.apache.spark.scheduler.SparkListener {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val shuffleRead = new java.util.concurrent.atomic.AtomicLong(0L)
-    val shuffleRecords = new java.util.concurrent.atomic.AtomicLong(0L)
-    override def onJobEnd(
-        e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
-      jobs.incrementAndGet(); ()
-    }
-    override def onStageCompleted(
-        e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-      shuffleRead.addAndGet(
-        e.stageInfo.taskMetrics.shuffleReadMetrics.totalBytesRead)
-      shuffleRecords.addAndGet(
-        e.stageInfo.taskMetrics.shuffleWriteMetrics.recordsWritten)
-      ()
-    }
-  }
-
+  // SHAPE — jobs and shuffle volume per iteration — via PerfProbing
   private def probe(body: => Unit): (Int, Long) = {
-    val (j, b, _) = probe3(body); (j, b)
-  }
-
-  private def probe3(body: => Unit): (Int, Long, Long) = {
-    val p = new PerfProbe
-    spark.sparkContext.addSparkListener(p)
-    body
-    // the listener bus is async — poll until the counters go quiet
-    var last = (-1, -1L, -1L)
-    var cur = (p.jobs.get(), p.shuffleRead.get(), p.shuffleRecords.get())
-    var i = 0
-    while (cur != last && i < 100) {
-      Thread.sleep(100); last = cur
-      cur = (p.jobs.get(), p.shuffleRead.get(), p.shuffleRecords.get()); i += 1
-    }
-    spark.sparkContext.removeSparkListener(p)
-    cur
+    val (j, b, _) = probeJobs(body); (j, b)
   }
 
   test("pagerank: per-iteration cost is structurally flat (no lineage re-run)") {
@@ -366,7 +332,7 @@ class GraphSpec extends SparkSpec {
     val nV = edges.select("src").unionAll(edges.select("dst")).distinct().count()
     GraphAnalytics.pagerankInt(edges, iters = 1).count() // warm caches
     def run(iters: Int): Long =
-      probe3(GraphAnalytics.pagerankInt(edges, iters = iters).count())._3
+      probeJobs(GraphAnalytics.pagerankInt(edges, iters = iters).count())._3
     val r2 = run(2)
     val r6 = run(6)
     val perIter = (r6 - r2) / 4.0
@@ -397,7 +363,7 @@ class GraphSpec extends SparkSpec {
     // warm caches + measure the converged cone size
     val cone = GraphAnalytics.pprInt(edges, seeds, iters = 6).count()
     def run(iters: Int): Long =
-      probe3(GraphAnalytics.pprInt(edges, seeds, iters = iters).count())._3
+      probeJobs(GraphAnalytics.pprInt(edges, seeds, iters = iters).count())._3
     val r2 = run(2)
     val r6 = run(6)
     val perIter = (r6 - r2) / 4.0
@@ -431,7 +397,7 @@ class GraphSpec extends SparkSpec {
       .select(col("dst").as("id"))
     GraphAnalytics.bfsLayers(edges, seeds).count() // warm source caches
     var rounds = 0
-    val recs = probe3 {
+    val recs = probeJobs {
       val (dist, r) = GraphAnalytics.bfsLayersWithRounds(edges, seeds)
       rounds = r
       dist.count()
@@ -461,7 +427,7 @@ class GraphSpec extends SparkSpec {
       .unionAll(e.select(col("b").as("id"))).distinct().count()
     GraphAnalytics.labelPropagation(e, rounds = 1).count() // warm caches
     def run(r: Int): Long =
-      probe3(GraphAnalytics.labelPropagation(e, rounds = r).count())._3
+      probeJobs(GraphAnalytics.labelPropagation(e, rounds = r).count())._3
     val r2 = run(2)
     val r6 = run(6)
     val perRound = (r6 - r2) / 4.0

@@ -1,47 +1,15 @@
 package graft
 
-/** Shared listener probe for STRUCTURAL perf gates (jobs scheduled,
-  * shuffle bytes/records written) — wall seconds cannot police iterative
-  * workloads under host CPU throttling (r9/r10: graph + streaming mins
-  * swung ±37% on untouched code), so the specs pin the SHAPE of the work
-  * instead. Same mechanics as GraphSpec's in-file probe; extracted for
-  * reuse by the trainer-epoch gate (VERDICT r10 #4). */
+/** Shared probe for STRUCTURAL perf gates (jobs scheduled, shuffle
+  * bytes/records) — wall seconds cannot police iterative workloads under
+  * host CPU throttling (r9/r10: graph + streaming mins swung ±37% on
+  * untouched code), so the specs pin the SHAPE of the work instead. */
 trait PerfProbing { self: SparkSpec =>
 
-  private class PerfProbe extends org.apache.spark.scheduler.SparkListener {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong(0L)
-    val shuffleRecords = new java.util.concurrent.atomic.AtomicLong(0L)
-    override def onJobEnd(
-        e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
-      jobs.incrementAndGet(); ()
-    }
-    override def onStageCompleted(
-        e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-      shuffleBytes.addAndGet(
-        e.stageInfo.taskMetrics.shuffleReadMetrics.totalBytesRead)
-      shuffleRecords.addAndGet(
-        e.stageInfo.taskMetrics.shuffleWriteMetrics.recordsWritten)
-      ()
-    }
-  }
-
-  /** Run `body` under a fresh listener; returns (jobs, shuffleReadBytes,
-    * shuffleWriteRecords) once the async listener bus goes quiet. */
+  /** Run `body` under [[graft.metrics.JobProbe]]; returns (jobs,
+    * shuffleReadBytes, shuffleWriteRecords). */
   def probeJobs(body: => Unit): (Int, Long, Long) = {
-    val p = new PerfProbe
-    spark.sparkContext.addSparkListener(p)
-    try {
-      body
-      var last = (-1, -1L, -1L)
-      var cur = (p.jobs.get(), p.shuffleBytes.get(), p.shuffleRecords.get())
-      var i = 0
-      while (cur != last && i < 100) {
-        Thread.sleep(100); last = cur
-        cur = (p.jobs.get(), p.shuffleBytes.get(), p.shuffleRecords.get())
-        i += 1
-      }
-      cur
-    } finally spark.sparkContext.removeSparkListener(p)
+    val p = graft.metrics.JobProbe.measure(spark)(body)
+    (p.jobs, p.work.shuffleReadBytes, p.work.shuffleWriteRecords)
   }
 }

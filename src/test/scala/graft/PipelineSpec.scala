@@ -609,6 +609,15 @@ class PipelineSpec extends SparkSpec {
     assert(good("transe_fit")._1, s"decreasing curve failed: ${good("transe_fit")}")
   }
 
+  test("verify exit status: non-zero exactly when a behavioral check failed") {
+    val pass = "transe_fit" -> (true, "ok")
+    val fail = "transe_eval" -> (false, "rows=0")
+    assert(Verify.exitStatus(Nil) == 0)
+    assert(Verify.exitStatus(Seq(pass)) == 0)
+    assert(Verify.exitStatus(Seq(pass, fail)) != 0)
+    assert(Verify.exitStatus(Seq(fail)) != 0)
+  }
+
   test("bloom skip: real file skipping, zero false negatives, fail-open admission") {
     import graft.operators.BloomSkip
     val keys = BloomSkip.workload(spark, sf)

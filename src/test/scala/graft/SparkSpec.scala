@@ -3,25 +3,16 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared session for all suites: one local JVM session, UTC, AQE on. */
+/** Shared session for all suites: one local JVM session built the way
+  * deployments build theirs ([[GraftSession]]; analyzer-injected rules
+  * such as SummaryRewrite have no per-session attach). */
 object TestSession {
-  lazy val spark: SparkSession = GraftKryo.configure(SparkSession.builder()
-    .master("local[8]")
-    .appName("graft-test"))
-    // the production integration route — analyzer-injected rules
-    // (SummaryRewrite) have no per-session attach, so tests must build
-    // sessions the way deployments do
-    .withExtensions(new graft.functions.GraftExtensions)
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
+  lazy val spark: SparkSession = GraftSession.builder(8)
     // managed-table warehouse in tmp (BucketingSpec writes bucketed
     // tables) — never inside the repo
     .config("spark.sql.warehouse.dir",
       java.nio.file.Files.createTempDirectory("graft_warehouse").toString)
     .getOrCreate()
-  spark.sparkContext.setLogLevel("WARN")
   val sf: String = "/root/testdata/sf0.001"
 }
 

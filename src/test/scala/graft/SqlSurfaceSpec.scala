@@ -48,6 +48,29 @@ class SqlSurfaceSpec extends SparkSpec {
     assert(other.getAs[Double]("cos") < 1.0 && other.getAs[Double]("l2") > 0.0)
   }
 
+  test("ensureRegistered keeps present functions and fills in missing ones") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    val registry = spark.sessionState.functionRegistry
+    def registered = VectorFunctions.builders.map { case (name, _) =>
+      val id = FunctionIdentifier(name)
+      (name, registry.lookupFunction(id), registry.lookupFunctionBuilder(id))
+    }
+    VectorFunctions.ensureRegistered(spark)
+    val first = registered
+    VectorFunctions.ensureRegistered(spark)
+    first.zip(registered).foreach { case ((name, info1, b1), (_, info2, b2)) =>
+      assert(info1.isDefined && b1.isDefined, s"$name does not resolve")
+      assert(info1.get eq info2.get, s"$name was registered again")
+      assert(b1.get eq b2.get, s"$name builder changed")
+    }
+    // a session whose registry lacks a name gets it back
+    val bare = spark.newSession()
+    bare.sessionState.functionRegistry.dropFunction(FunctionIdentifier("vector_dot"))
+    VectorFunctions.ensureRegistered(bare)
+    assert(bare.sql("SELECT vector_dot(array(CAST(2.0 AS FLOAT)), " +
+      "array(CAST(3.0 AS FLOAT)))").head().getDouble(0) == 6.0)
+  }
+
   test("vector function rejects wrong argument types with a clear error") {
     VectorFunctions.ensureRegistered(spark)
     Tables.documents(spark, sf).createOrReplaceTempView("documents_v")

@@ -887,12 +887,13 @@ class StreamingSpec extends SparkSpec {
   // interval join: state-rows peak, micro-batch count, and shuffle
   // records per run are invariants of the plan, immune to CPU throttle.
 
+  // shuffle records count the micro-batch jobs only, not the sink
+  // read-back around them
   private def probeStream(body: => Unit): (Long, Long, Long, Long) = {
-    EventStreams.structuralProbe.set(true)
-    try body finally EventStreams.structuralProbe.set(false)
+    val probed = graft.metrics.JobProbe.measure(spark)(body)
     (EventStreams.lastStateRowsPeak.get(),
       EventStreams.lastMicroBatchCount.get(),
-      EventStreams.lastShuffleRecords.get(),
+      probed.streamingWork.shuffleWriteRecords,
       EventStreams.lastStateRowsFinal.get())
   }
 
