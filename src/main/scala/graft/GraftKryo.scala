@@ -14,8 +14,8 @@ import org.apache.spark.serializer.KryoRegistrator
   *
   * The hot path this covers: per-batch model broadcasts
   * (`(Array[Array[Float]], Array[Array[Float]])`), the collected SGD
-  * `Delta`s, the re-layout shuffle of `Triple`s, and the membership
-  * broadcasts (packed longs / Bloom).
+  * `Delta`s, the layout's shuffled key arrays and persisted
+  * `TripleBlock`s, and the membership broadcasts (packed longs / Bloom).
   */
 class GraftKryo extends KryoRegistrator {
   override def registerClasses(kryo: Kryo): Unit =
@@ -34,6 +34,8 @@ object GraftKryo {
     classOf[Array[Long]],
     classOf[Array[Double]],
     classOf[Array[String]],
+    classOf[graft.transe.TripleKeys],
+    classOf[graft.transe.TripleBlock],
     classOf[graft.transe.PackedMembership],
     classOf[graft.transe.BloomMembership],
     classOf[org.apache.spark.util.sketch.BloomFilter],

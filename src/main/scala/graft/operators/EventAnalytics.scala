@@ -364,21 +364,21 @@ object EventAnalytics {
     * so every intermediate fits comfortably.)
     *
     * Scale shape: ONE map-side-combinable conditional-count aggregate
-    * over the events scan (|types| rows out); slice totals are windows
-    * over that tiny cells table — nothing corpus-sized shuffles twice. */
+    * over the events scan (|types| rows out); the slice totals are a
+    * 1-row aggregate over that tiny cells table, broadcast back onto it
+    * (the cells exchange is reused, not recomputed) — nothing
+    * corpus-sized shuffles twice. */
   def typeDrift(events: DataFrame, boundaryDay: Long = 19738L,
       bucketSec: Long = 86400L): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val dayId = expr(s"unix_micros(ts) DIV 1000000 DIV $bucketSec")
     val cells = events
       .select(col("event_type"), (dayId < lit(boundaryDay)).as("in_a"))
       .groupBy("event_type")
       .agg(sum(when(col("in_a"), 1L).otherwise(0L)).as("c_a"),
         sum(when(col("in_a"), 0L).otherwise(1L)).as("c_b"))
-    val w = Window.partitionBy()
+    val totals = cells.agg(sum("c_a").as("t_a"), sum("c_b").as("t_b"))
     cells
-      .withColumn("t_a", sum("c_a").over(w))
-      .withColumn("t_b", sum("c_b").over(w))
+      .crossJoin(broadcast(totals))
       .select(col("event_type"), col("c_a"), col("c_b"),
         expr("c_a * 1000000L div t_a").as("p_a_ppm"),
         expr("c_b * 1000000L div t_b").as("p_b_ppm"))

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 
 /** Scale-adaptive CPU spread for gram/hash-heavy NARROW stages (guide
   * §2: derive partitioning from the input, never a constant tuned to one
@@ -33,10 +34,18 @@ object Spread {
     * locally: it moves |input| rows to protect a ×fan-out stage, and AQE
     * honors a user repartition instead of re-coalescing it. Partition
     * count: never below the session's parallelism, never below what the
-    * plan already had. */
+    * plan already has. The plan's count is read from its physical output
+    * partitioning (under AQE, that of the adaptive plan's current physical
+    * plan), which runs nothing: `df.rdd` would, under AQE, execute the
+    * upstream shuffles while the plan is being built, and the terminal
+    * action would then run them again. */
   def fanoutSpread(df: DataFrame): DataFrame = {
+    val plan = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case other => other
+    }
     val p = math.max(df.sparkSession.sparkContext.defaultParallelism,
-      df.rdd.getNumPartitions)
+      plan.outputPartitioning.numPartitions)
     df.repartition(p)
   }
 }

@@ -107,6 +107,28 @@ class ContractSpec extends SparkSpec with PerfProbing {
         "epoch path")
   }
 
+  test("structural gate: a fit's preparation shuffles arrays, not triples") {
+    // everything a fit does before its first SGD job (layout, membership,
+    // their broadcasts), measured as a zero-epoch fit: the layout shuffle
+    // moves one key array per (input partition, layout partition) pair,
+    // never one record per triple
+    val (data, _, _, nEnt, nLab) = queries.TransEQueries.encodedKg(spark, sf)
+    val nTriples = data.count()
+    val inputParts = data.rdd.getNumPartitions
+    val layoutParts = math.max(2, math.min(16, (nTriples / 200000L).toInt + 1))
+    val p = queries.TransEQueries.evalParams.copy(epochs = 0)
+    def prep(): (Int, Long, Long) = probeJobs {
+      new transe.TransETrainer(p).fit(data, nEnt, nLab)
+    }
+    prep() // warm source/encode caches out of the measurement
+    val (jobs, bytes, records) = prep()
+    info(s"preparation: $jobs jobs, $records shuffle records, $bytes shuffle bytes " +
+      s"($nTriples triples, $inputParts input x $layoutParts layout partitions)")
+    assert(records <= inputParts.toLong * layoutParts,
+      s"preparation shuffled $records records for $nTriples triples " +
+        s"(bound $inputParts x $layoutParts)")
+  }
+
   test("golden gate: transe_eval metrics match the fixed-seed recording (sf0.001)") {
     val row = queries.TransEQueries.transeEval(spark, sf).collect().head
     val got = (row.getDouble(0), row.getDouble(1), row.getDouble(2),
@@ -247,6 +269,7 @@ class ContractSpec extends SparkSpec with PerfProbing {
     "text_tfidf_topterms", // 1-row n_docs total as a broadcast cross join
     "search_tfidf_topk",   // same 1-row n_docs pattern
     "report_key_skew",     // 1-row key-count total, same pattern
+    "report_type_drift",   // 1-row slice totals, same pattern
     "events_wau",          // 1-row max-day bound, same pattern
     "profile_fk_orphans",  // per-check 1-row x 1-row count join
     "graph_pagerank",      // 1-row dangling-mass total per iteration, same pattern

@@ -9,7 +9,7 @@ import graft.transe.{TransETrainer, Triple}
 /** Fail-loud gate for [[GraftKryo]]: a strict registrationRequired
   * KryoSerializer (no SparkContext needed) must round-trip every class
   * the training hot path serializes — model broadcasts, collected Deltas,
-  * the re-layout shuffle of Triples, membership broadcasts. A class
+  * the training layout's key arrays and blocks, membership broadcasts. A class
   * missing from GraftKryo.classes fails HERE with a clear error instead
   * of silently shipping class names on every SGD round in production. */
 class KryoSpec extends AnyFunSuite {
@@ -27,9 +27,12 @@ class KryoSpec extends AnyFunSuite {
     def roundTrip[T: scala.reflect.ClassTag](v: T): T =
       ser.deserialize[T](ser.serialize(v))
 
-    // re-layout shuffle records
+    // triples and the training layout's blocks
     assert(roundTrip(Triple(1, 2, 3)) == Triple(1, 2, 3))
     assert(roundTrip(Array(Triple(1, 2, 3))).head == Triple(1, 2, 3))
+    val keys = transe.TripleKeys(10, 3)
+    val block = roundTrip(new transe.TripleBlock(keys, Array(keys.pack(1, 2, 3))))
+    assert(block.keys == keys && block.triple(0) == Triple(1, 2, 3))
 
     // per-batch model broadcast: (entity, label) matrices
     val ent = Array(Array(1.0f, 2.0f), Array(3.0f, 4.0f))

@@ -41,6 +41,13 @@ class SpreadSpec extends SparkSpec {
     assert(outW.collect().map(_.getLong(0)).sorted.toSeq == (1L to 500L))
   }
 
+  test("fanoutSpread: building it over a grouped frame runs no job") {
+    val grouped = (1L to 500L).toDF("v").groupBy(col("v") % 7).count()
+    val probed = graft.metrics.JobProbe.measure(spark)(Spread.fanoutSpread(grouped))
+    assert(probed.jobs == 0, s"plan building ran ${probed.jobRows.map(_.callSite)}")
+    assert(probed.result.collect().map(_.getLong(1)).sum == 500L)
+  }
+
   test("fanoutSpread: duplicate rows survive (set semantics not imposed)") {
     val dups = Seq(1L, 1L, 2L).toDF("v").coalesce(1)
     val out = Spread.fanoutSpread(dups).collect().map(_.getLong(0)).sorted

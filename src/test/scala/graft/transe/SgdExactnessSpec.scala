@@ -19,10 +19,10 @@ class SgdExactnessSpec extends AnyFunSuite {
       ent: Array[Array[Float]], lab: Array[Array[Float]], p: TransEParams,
       bern: Array[Double], pid: Int, batchSeed: Long)
 
-  private def packed(known: Iterable[Triple]): PackedMembership = {
-    val keys = known.map(tr => PackedMembership.pack(tr.h, tr.l, tr.t)).toArray
-    java.util.Arrays.sort(keys)
-    new PackedMembership(keys)
+  private def packed(known: Iterable[Triple], keys: TripleKeys): PackedMembership = {
+    val sorted = known.map(tr => keys.pack(tr.h, tr.l, tr.t)).toArray
+    java.util.Arrays.sort(sorted)
+    new PackedMembership(sorted, keys)
   }
 
   /** A random partition over `nEnt` entities. Every triple of the
@@ -46,7 +46,7 @@ class SgdExactnessSpec extends AnyFunSuite {
     val lab = Kernels.uniformInit(nLab, dim, seed + 1)
     Kernels.normalizeAll(ent)
     Kernels.normalizeAll(lab)
-    Partition(triples, packed(known), nEnt, ent, lab,
+    Partition(triples, packed(known, TripleKeys(nEnt, nLab)), nEnt, ent, lab,
       TransEParams(dim = dim, distance = dist, rejectionCap = cap,
         margin = 1f + r.nextInt(3), lr = 0.01f * (1 + r.nextInt(20)),
         seed = seed, bernCorruption = bern),
@@ -154,8 +154,10 @@ class SgdExactnessSpec extends AnyFunSuite {
 
   test("PackedMembership.contains agrees with a HashSet") {
     val r = new SplittableRandom(99)
-    val maxEnt = (1 << PackedMembership.EntityBits) - 1
-    val maxLab = (1 << PackedMembership.LabelBits) - 1
+    // 27 + 10 + 27 = 64-bit keys
+    val keys = TripleKeys(1 << 27, 1 << 10)
+    val maxEnt = (1 << keys.entityBits) - 1
+    val maxLab = (1 << keys.labelBits) - 1
     // the offset index ships inside the membership broadcast, so check the
     // copy a strict (registrationRequired) Kryo hands to the executors
     val kryo = new org.apache.spark.serializer.KryoSerializer(
@@ -164,7 +166,7 @@ class SgdExactnessSpec extends AnyFunSuite {
         .set("spark.kryo.registrationRequired", "true")).newInstance()
     def check(set: Set[(Int, Int, Int)], probes: Seq[(Int, Int, Int)]): Unit = {
       val m = kryo.deserialize[PackedMembership](kryo.serialize(
-        packed(set.map { case (h, l, t) => Triple(h, l, t) })))
+        packed(set.map { case (h, l, t) => Triple(h, l, t) }, keys)))
       (set.toSeq ++ probes).foreach { case (h, l, t) =>
         assert(m.contains(h, l, t) == set.contains((h, l, t)), s"($h, $l, $t)")
       }
