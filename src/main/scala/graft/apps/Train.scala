@@ -28,7 +28,7 @@ import graft.transe._
   * in the TSV to protect against forgetting, or only the new batch for a
   * cheap delta update — the file's content is the curriculum.
   *
-  * `--exec partitioned` trains with [[TransEPartitionedTrainer]]: the
+  * `--exec partitioned` trains with [[TransETrainer.fitDistributed]]: the
   * entity matrix lives as a distributed (id, vec) RDD end-to-end and is
   * written with `saveDistributed` — never collected to the driver. The
   * route for entity inventories past the broadcast budget (SCALE.md);
@@ -91,12 +91,12 @@ object Train {
 
     val execMode = opts.str("exec", "broadcast")
     val t0 = System.nanoTime()
-    val lossHistory = execMode match {
+    val trainer = new TransETrainer(params)
+    execMode match {
       case "partitioned" =>
         require(warm.isEmpty,
           "--warm-start/--extend require --exec broadcast (restore needs " +
             "the driver-matrix form)")
-        val trainer = new TransEPartitionedTrainer(params)
         val (entRdd, label) = trainer.fitDistributed(encoded, nEnt, nLab)
         // the entity matrix is written straight from the distributed
         // parameter table — the driver never holds n*k floats
@@ -104,12 +104,8 @@ object Train {
         EmbeddingIO.save(spark, label, s"$outDir/label")
         EmbeddingIO.saveParams(spark, params, outDir)
         entRdd.unpersist()
-        trainer.lossHistory
       case _ =>
-        val trainer = new TransETrainer(params)
-        val model = trainer.fit(encoded, nEnt, nLab, warm)
-        EmbeddingIO.saveModel(spark, model, outDir)
-        trainer.lossHistory
+        EmbeddingIO.saveModel(spark, trainer.fit(encoded, nEnt, nLab, warm), outDir)
     }
     val sec = (System.nanoTime() - t0) / 1e9
     ents.write.mode("overwrite").parquet(s"$outDir/entity_dict")
@@ -117,8 +113,8 @@ object Train {
 
     println(f"[train] exec=$execMode epochs=${params.epochs} nEntities=$nEnt " +
       f"nLabels=$nLab totalSec=$sec%.1f epochSec=${sec / params.epochs}%.3f " +
-      s"lossFirst=${lossHistory.headOption.getOrElse(0.0)} " +
-      s"lossLast=${lossHistory.lastOption.getOrElse(0.0)}")
+      s"lossFirst=${trainer.lossHistory.headOption.getOrElse(0.0)} " +
+      s"lossLast=${trainer.lossHistory.lastOption.getOrElse(0.0)}")
     if (owned) spark.stop()
   }
 }

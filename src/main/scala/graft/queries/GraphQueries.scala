@@ -140,9 +140,7 @@ object GraphQueries {
           drop(key)
           val v = build.persist()
           v.count() // materialize so every consumer reads the cached asset
-          val bytes =
-            try v.queryExecution.optimizedPlan.stats.sizeInBytes.toLong
-            catch { case _: Throwable => 0L }
+          val bytes = v.queryExecution.optimizedPlan.stats.sizeInBytes.toLong
           clock += 1
           entries.put(key, new Entry(v, bytes, clock))
           // LRU eviction over the budget — never the entry just built

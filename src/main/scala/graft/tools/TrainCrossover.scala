@@ -1,10 +1,10 @@
 package graft.tools
 
-/** Dev-only: locate the broadcast-vs-partitioned trainer crossover by
-  * training seeded synthetic KGs of increasing entity count at the
-  * reference k=50. The broadcast trainer ships n*k*4 bytes per round
-  * regardless of batch size; the partitioned trainer ships O(batch) —
-  * as n grows the ratio must invert. Prints one line per shape.
+/** Dev-only: locate the broadcast-vs-partitioned parameter store crossover
+  * (`TransETrainer.fit` vs `fitDistributed`) by training seeded synthetic
+  * KGs of increasing entity count at the reference k=50. The broadcast
+  * store ships n*k*4 bytes per round regardless of batch size; the
+  * partitioned store ships O(batch) — as n grows the ratio must invert. Prints one line per shape.
   * Usage: runMain graft.tools.TrainCrossover [nEnt1,nEnt2,...] [epochs]
   */
 object TrainCrossover {
@@ -35,7 +35,7 @@ object TrainCrossover {
         (System.nanoTime() - t0) / 1e9 / epochs
       } else -1.0
 
-      val pt = new graft.transe.TransEPartitionedTrainer(p)
+      val pt = new graft.transe.TransETrainer(p)
       // shuffle volume of the partitioned fit: the scale claim is
       // per-round traffic ~ O(touched-rows x k), so report it measured
       val (tP, shuffle) = if (mode != "broadcast") {

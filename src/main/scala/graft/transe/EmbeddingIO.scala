@@ -20,7 +20,7 @@ object EmbeddingIO {
     toDF(spark, m).write.mode("overwrite").parquet(path)
 
   /** Distributed checkpoint writer: the matrix stays an RDD end-to-end —
-    * the partitioned trainer's at-scale path, where the entity matrix
+    * the partitioned store's at-scale path ([[TransETrainer.fitDistributed]]), where the entity matrix
     * never materializes on the driver. Same format as [[save]]. */
   def saveDistributed(spark: SparkSession,
       m: org.apache.spark.rdd.RDD[(Int, Array[Float])], path: String): Unit = {

@@ -1,6 +1,7 @@
 package graft.transe
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Link-prediction evaluation — the reference's `test.py` protocol ("raw"
@@ -31,19 +32,7 @@ object LinkPrediction {
   def rankTriples(test: Dataset[Triple], model: TransEModel): Dataset[Ranks] = {
     val spark = test.sparkSession
     import spark.implicits._
-    val n = model.entity.length
-    val k = if (n > 0) model.entity(0).length else 0
-    // Flatten the entity matrix ONCE on the driver: a single contiguous
-    // float buffer broadcasts smaller (no per-row object headers) and the
-    // candidate scan walks it sequentially — hardware prefetch instead of
-    // a pointer dereference per candidate row. Same floats, same order:
-    // ranks are bit-identical to the nested form (golden-gated).
-    val flat = new Array[Float](n * k)
-    var r = 0
-    while (r < n) { System.arraycopy(model.entity(r), 0, flat, r * k, k); r += 1 }
-    val entBc = spark.sparkContext.broadcast(flat)
-    val labBc = spark.sparkContext.broadcast(model.label)
-    val l1 = model.params.distance == L1
+    val (entBc, labBc, k, l1) = broadcasts(spark, model)
 
     // The test set is tiny relative to the O(|test| * n * k) scoring work,
     // and AQE happily coalesces it to one partition — which would serialize
@@ -53,43 +42,72 @@ object LinkPrediction {
     spread.mapPartitions { it =>
       val ent = entBc.value
       val lab = labBc.value
-      val end = n * k
       it.map { tr =>
-        val l = lab(tr.l)
-        val hOff = tr.h * k
-        val tOff = tr.t * k
-
-        // invariants: u = l - t (head scan scores d(e + l, t) = |e + u|),
-        // v = h + l (tail scan scores d(h + l, e) = |v - e|)
-        val u = new Array[Float](k)
-        val v = new Array[Float](k)
-        var i = 0
-        while (i < k) {
-          u(i) = l(i) - ent(tOff + i)
-          v(i) = ent(hOff + i) + l(i)
-          i += 1
-        }
-        var dTrueHead = 0.0
-        var dTrueTail = 0.0
-        i = 0
-        if (l1) {
-          while (i < k) {
-            dTrueHead += math.abs(ent(hOff + i) + u(i)).toDouble
-            dTrueTail += math.abs(v(i) - ent(tOff + i)).toDouble
-            i += 1
-          }
-        } else {
-          while (i < k) {
-            val a = ent(hOff + i) + u(i); dTrueHead += a.toDouble * a
-            val b = v(i) - ent(tOff + i); dTrueTail += b.toDouble * b
-            i += 1
-          }
-        }
-
-        val (lessH, lessT) = fusedCounts(ent, end, k, u, v, dTrueHead, dTrueTail, l1)
+        val q = probe(ent, tr.h * k, lab(tr.l), ent, tr.t * k, k, l1)
+        val (lessH, lessT) = fusedCounts(ent, ent.length, k, q.u, q.v, q.dHead, q.dTail, l1)
         Ranks(tr.l, lessH + 1, lessT + 1)
       }
     }
+  }
+
+  /** (flat entity matrix, label matrix, k, distance is L1), both matrices
+    * broadcast. The entity matrix is flattened ONCE on the driver: a
+    * single contiguous float buffer broadcasts smaller (no per-row object
+    * headers) and the candidate scan walks it sequentially — hardware
+    * prefetch instead of a pointer dereference per candidate row. Same
+    * floats, same order: ranks are bit-identical to the nested form
+    * (golden-gated). */
+  private def broadcasts(spark: SparkSession, model: TransEModel):
+      (Broadcast[Array[Float]], Broadcast[Array[Array[Float]]], Int, Boolean) = {
+    val n = model.entity.length
+    val k = if (n > 0) model.entity(0).length else 0
+    val flat = new Array[Float](n * k)
+    var r = 0
+    while (r < n) { System.arraycopy(model.entity(r), 0, flat, r * k, k); r += 1 }
+    (spark.sparkContext.broadcast(flat), spark.sparkContext.broadcast(model.label), k,
+      model.params.distance == L1)
+  }
+
+  /** One test triple's scan invariants: u = l - t (the head scan scores
+    * d(e + l, t) = |e + u|), v = h + l (the tail scan scores
+    * d(h + l, e) = |v - e|), and the true head and tail distances. */
+  private final class Probe(val u: Array[Float], val v: Array[Float],
+      val dHead: Double, val dTail: Double)
+
+  /** The [[Probe]] of (h, l, t): the head's `k` components start at
+    * `hRow(hOff)`, the tail's at `tRow(tOff)`, and `l` is the label row. */
+  private def probe(hRow: Array[Float], hOff: Int, l: Array[Float],
+      tRow: Array[Float], tOff: Int, k: Int, l1: Boolean): Probe = {
+    val u = new Array[Float](k)
+    val v = new Array[Float](k)
+    var i = 0
+    while (i < k) {
+      u(i) = l(i) - tRow(tOff + i)
+      v(i) = hRow(hOff + i) + l(i)
+      i += 1
+    }
+    new Probe(u, v, headDist(hRow, hOff, u, k, l1), tailDist(tRow, tOff, v, k, l1))
+  }
+
+  /** d(x + u) for the `k` components x of `row` from `off`: the head scan's
+    * distance of that entity, with [[fusedCounts]]'s float ops. */
+  private def headDist(row: Array[Float], off: Int, u: Array[Float], k: Int,
+      l1: Boolean): Double = {
+    var s = 0.0
+    var j = 0
+    if (l1) while (j < k) { s += math.abs(row(off + j) + u(j)).toDouble; j += 1 }
+    else while (j < k) { val a = row(off + j) + u(j); s += a.toDouble * a; j += 1 }
+    s
+  }
+
+  /** d(v - x), the tail scan's distance, as [[headDist]]. */
+  private def tailDist(row: Array[Float], off: Int, v: Array[Float], k: Int,
+      l1: Boolean): Double = {
+    var s = 0.0
+    var j = 0
+    if (l1) while (j < k) { s += math.abs(v(j) - row(off + j)).toDouble; j += 1 }
+    else while (j < k) { val b = v(j) - row(off + j); s += b.toDouble * b; j += 1 }
+    s
   }
 
   /** The fused head+tail strict-less scan over the flat entity matrix —
@@ -246,14 +264,7 @@ object LinkPrediction {
       known: Dataset[Triple]): Dataset[Ranks] = {
     val spark = test.sparkSession
     import spark.implicits._
-    val n = model.entity.length
-    val k = if (n > 0) model.entity(0).length else 0
-    val flat = new Array[Float](n * k)
-    var r = 0
-    while (r < n) { System.arraycopy(model.entity(r), 0, flat, r * k, k); r += 1 }
-    val entBc = spark.sparkContext.broadcast(flat)
-    val labBc = spark.sparkContext.broadcast(model.label)
-    val l1 = model.params.distance == L1
+    val (entBc, labBc, k, l1) = broadcasts(spark, model)
 
     val testDf = test.toDF()
     val knownDf = known.toDF().select(col("h").as("kh"), col("l").as("kl"),
@@ -277,54 +288,17 @@ object LinkPrediction {
     withF.mapPartitions { it =>
       val ent = entBc.value
       val lab = labBc.value
-      val end = n * k
       it.map { case (th, tl, tt, fh, ft) =>
-        val l = lab(tl)
-        val hOff = th * k
-        val tOff = tt * k
-        val u = new Array[Float](k)
-        val v = new Array[Float](k)
-        var i = 0
-        while (i < k) {
-          u(i) = l(i) - ent(tOff + i)
-          v(i) = ent(hOff + i) + l(i)
-          i += 1
-        }
-        var dTrueHead = 0.0
-        var dTrueTail = 0.0
-        i = 0
-        if (l1) {
-          while (i < k) {
-            dTrueHead += math.abs(ent(hOff + i) + u(i)).toDouble
-            dTrueTail += math.abs(v(i) - ent(tOff + i)).toDouble
-            i += 1
-          }
-        } else {
-          while (i < k) {
-            val a = ent(hOff + i) + u(i); dTrueHead += a.toDouble * a
-            val b = v(i) - ent(tOff + i); dTrueTail += b.toDouble * b
-            i += 1
-          }
-        }
-        var (lessH, lessT) = fusedCounts(ent, end, k, u, v, dTrueHead, dTrueTail, l1)
+        val q = probe(ent, th * k, lab(tl), ent, tt * k, k, l1)
+        var (lessH, lessT) = fusedCounts(ent, ent.length, k, q.u, q.v, q.dHead, q.dTail, l1)
         // correction: drop known-true competitors that the raw count
         // included (full-precision score, no early exit — the threshold
         // comparison must be exact, and these are a handful of vectors)
         fh.foreach(_.foreach { e =>
-          val off = e * k
-          var s = 0.0
-          var j = 0
-          if (l1) while (j < k) { s += math.abs(ent(off + j) + u(j)).toDouble; j += 1 }
-          else while (j < k) { val a = ent(off + j) + u(j); s += a.toDouble * a; j += 1 }
-          if (s < dTrueHead) lessH -= 1
+          if (headDist(ent, e * k, q.u, k, l1) < q.dHead) lessH -= 1
         })
         ft.foreach(_.foreach { e =>
-          val off = e * k
-          var s = 0.0
-          var j = 0
-          if (l1) while (j < k) { s += math.abs(v(j) - ent(off + j)).toDouble; j += 1 }
-          else while (j < k) { val b = v(j) - ent(off + j); s += b.toDouble * b; j += 1 }
-          if (s < dTrueTail) lessT -= 1
+          if (tailDist(ent, e * k, q.v, k, l1) < q.dTail) lessT -= 1
         })
         Ranks(tl, lessH + 1, lessT + 1)
       }
@@ -370,28 +344,13 @@ object LinkPrediction {
       .as[(Int, Array[Float])].collect().toMap
 
     val m = triples.length
-    val us = new Array[Array[Float]](m)
-    val vs = new Array[Array[Float]](m)
-    val dTrueHead = new Array[Double](m)
-    val dTrueTail = new Array[Double](m)
-    var j = 0
-    while (j < m) {
-      val tr = triples(j)
-      val l = label(tr.l)
-      val h = fetched(tr.h)
-      val t = fetched(tr.t)
-      val k = l.length
-      val u = new Array[Float](k)
-      val v = new Array[Float](k)
-      var i = 0
-      while (i < k) { u(i) = l(i) - t(i); v(i) = h(i) + l(i); i += 1 }
-      us(j) = u; vs(j) = v
-      dTrueHead(j) = scoreWith(distance, h, u)
-      dTrueTail(j) = scoreNeg(distance, t, v)
-      j += 1
-    }
-    val bc = spark.sparkContext.broadcast((us, vs, dTrueHead, dTrueTail))
     val l1 = distance == L1
+    val probes = triples.map { tr =>
+      val l = label(tr.l)
+      probe(fetched(tr.h), 0, l, fetched(tr.t), 0, l.length, l1)
+    }
+    val bc = spark.sparkContext.broadcast((probes.map(_.u), probes.map(_.v),
+      probes.map(_.dHead), probes.map(_.dTail)))
 
     val (lessH, lessT) = entities.select(col("vec"))
       .as[Array[Float]].rdd
@@ -445,32 +404,6 @@ object LinkPrediction {
       label: Array[Array[Float]], distance: Distance,
       hitsK: Int = 10): DataFrame =
     metrics(rankTriplesPartitioned(test, entities, label, distance).toDF(), hitsK)
-
-  /** d over (x + u) for the head scan. */
-  private def scoreWith(d: Distance, x: Array[Float], u: Array[Float]): Double = {
-    var s = 0.0
-    var i = 0
-    d match {
-      case L1 =>
-        while (i < x.length) { s += math.abs(x(i) + u(i)).toDouble; i += 1 }
-      case L2Squared =>
-        while (i < x.length) { val z = x(i) + u(i); s += z.toDouble * z; i += 1 }
-    }
-    s
-  }
-
-  /** d over (v - x) for the tail scan. */
-  private def scoreNeg(d: Distance, x: Array[Float], v: Array[Float]): Double = {
-    var s = 0.0
-    var i = 0
-    d match {
-      case L1 =>
-        while (i < x.length) { s += math.abs(v(i) - x(i)).toDouble; i += 1 }
-      case L2Squared =>
-        while (i < x.length) { val z = v(i) - x(i); s += z.toDouble * z; i += 1 }
-    }
-    s
-  }
 
   /** MeanRank + Hits@k over both rank lists (reference `test.py:14-25`),
     * plus the per-direction means, as one Catalyst aggregate. */

@@ -64,10 +64,6 @@ object QuantizedEval {
   @volatile private var lastDim: Int = 32
   @volatile private var lastL1: Boolean = false
 
-  /** Quantize + stage the checkpoint and the deterministic test sample;
-    * returns (stagingDir, sample, labQ, entity DF read BACK from the
-    * staged parquet — proving the matrix DuckDB sees is the matrix the
-    * ranks came from). */
   /** Quantize + write (entity, label, test) parquet under an EXPLICIT
     * dir — the staging core shared by the registered eval family (via
     * [[stage]]) and the continual-trainer eval (VERDICT r12 #4), which
@@ -89,6 +85,10 @@ object QuantizedEval {
     (entQ, labQ)
   }
 
+  /** Quantize + stage the checkpoint and the deterministic test sample;
+    * returns (stagingDir, sample, labQ, entity DF read BACK from the
+    * staged parquet — proving the matrix DuckDB sees is the matrix the
+    * ranks came from). */
   private def stage(spark: SparkSession, sfDir: String, model: TransEModel,
       test: Dataset[Triple]): (String, Array[Triple], Array[Array[Long]],
       org.apache.spark.sql.DataFrame) = {

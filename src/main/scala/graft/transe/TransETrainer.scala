@@ -2,6 +2,9 @@ package graft.transe
 
 import java.util.SplittableRandom
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.{HashPartitioner, Partitioner}
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Dataset, SparkSession}
@@ -87,9 +90,8 @@ final class BloomMembership(bloom: org.apache.spark.util.sketch.BloomFilter) ext
 /** Distributed TransE trainer (Bordes et al., NeurIPS 2013), replacing the
   * reference's `TransE.fit/_sgd` (`TransE.py:64-157`) with the Scala/MLlib
   * idiom: data-parallel gradient computation via `mapPartitions` over the
-  * persisted triple blocks, parameters broadcast per batch, sparse per-
-  * partition deltas collected and merged on the driver (same shape as
-  * `ml.feature.Word2Vec`).
+  * persisted triple blocks, sparse per-partition deltas merged in
+  * partition order (same shape as `ml.feature.Word2Vec`).
   *
   * Faithfully preserved reference semantics:
   *  - Bernoulli batch sampling, fraction 1/batches (`TransE.py:120-122`);
@@ -100,26 +102,30 @@ final class BloomMembership(bloom: org.apache.spark.util.sketch.BloomFilter) ext
   *  - LAST-WRITER-WINS on cross-partition delta collisions — the reference's
   *    stale-synchronous merge (`TransE.py:159-170`, SURVEY §7.5-2) — made
   *    deterministic here by applying deltas in partition-index order;
-  *  - epoch loss via a DoubleAccumulator (`TransE.py:104,279`).
+  *  - epoch loss summed from the per-partition losses (`TransE.py:104,279`).
   *
   * Deliberate upgrades: seeded determinism end-to-end (SURVEY §7.5-3),
   * a rejection cap (§7.5-4), float32 parameters, Bloom-filter membership
   * option for at-scale rejection sets.
   *
-  * Scale ceiling (documented, same as reference `README.md:30`): both
-  * matrices must fit on the driver and each executor — n*k*4 bytes; at
-  * k=50 that is ~5 GB per 25M entities. Beyond that, use
-  * [[TransEPartitionedTrainer]]: the entity matrix lives as a distributed
-  * `(id, vec)` RDD co-partitioned with the per-batch updates, and is
-  * bit-for-bit equivalent to this trainer (asserted by TransESpec /
+  * One epoch/batch loop serves two parameter stores:
+  *  - [[fit]] keeps both matrices on the driver and broadcasts them per
+  *    batch ([[TransETrainer.BroadcastStore]]). Scale ceiling (same as
+  *    reference `README.md:30`): both matrices must fit on the driver and
+  *    each executor — n*k*4 bytes; at k=50 that is ~5 GB per 25M entities.
+  *  - [[fitDistributed]] keeps the entity matrix as a distributed
+  *    `(id, vec)` RDD co-partitioned with the per-batch updates
+  *    ([[TransETrainer.PartitionedStore]]), the route past that ceiling.
+  * Both train on the same layout, sampler, kernel and merge order, so they
+  * produce the same floats bit for bit (asserted by TransESpec /
   * ContractSpec).
   */
 class TransETrainer(params: TransEParams) extends Serializable {
 
-  /** Per-epoch hinge loss trajectory of the last `fit` call. */
+  /** Per-epoch hinge loss trajectory of the last fit call. */
   @volatile var lossHistory: Vector[Double] = Vector.empty
 
-  /** Per-epoch wall seconds of the last `fit` call. The host sandbox
+  /** Per-epoch wall seconds of the last fit call. The host sandbox
     * throttles sustained CPU (measured 3-65 s/epoch swings on identical
     * code), so the MIN is the steady-state epoch time; the mean is the
     * throttle lottery. Bench reports both. */
@@ -132,67 +138,85 @@ class TransETrainer(params: TransEParams) extends Serializable {
     *                  `TransE.py:28-29,73-76`: restore-then-continue). */
   def fit(triples: Dataset[Triple], nEntities: Int, nLabels: Int,
       warmStart: Option[TransEModel]): TransEModel = {
+    val store = train(triples, nEntities, nLabels, warmStart) { (prep, entity, label) =>
+      new TransETrainer.BroadcastStore(prep, params, entity, label)
+    }
+    TransEModel(store.entity, store.label, params)
+  }
+
+  /** At-scale surface: entity parameters stay distributed. The returned
+    * RDD is persisted; the caller owns unpersisting it. Cold start only:
+    * the seeded init is built on the driver once ([[Kernels.uniformInit]]'s
+    * sequential RNG stream does not split) and scattered to the cluster. */
+  def fitDistributed(triples: Dataset[Triple], nEntities: Int, nLabels: Int):
+      (RDD[(Int, Array[Float])], Array[Array[Float]]) = {
+    val store = train(triples, nEntities, nLabels, warmStart = None) { (prep, entity, label) =>
+      new TransETrainer.PartitionedStore(prep, params, entity, label)
+    }
+    (store.entParams, store.label)
+  }
+
+  /** [[fitDistributed]] collected into driver matrices: the parity surface
+    * that compares the partitioned store with [[fit]]. */
+  def fitPartitioned(triples: Dataset[Triple], nEntities: Int, nLabels: Int): TransEModel = {
+    val (entRdd, label) = fitDistributed(triples, nEntities, nLabels)
+    val entity = new Array[Array[Float]](nEntities)
+    entRdd.collect().foreach { case (id, v) => entity(id) = v }
+    entRdd.unpersist()
+    TransEModel(entity, label, params)
+  }
+
+  /** The epoch/batch loop over the store `open` builds from the prepared
+    * data and the initial matrices. Each partition's loss is added to the
+    * epoch sum one by one, in pid order, so both stores sum the same
+    * doubles in the same order. No job runs after the last batch unless
+    * that epoch checkpoints. On a throw the store releases what it holds,
+    * and [[TransETrainer.prepared]] releases the layout and broadcasts. */
+  private def train[S <: TransETrainer.ParamStore](triples: Dataset[Triple],
+      nEntities: Int, nLabels: Int, warmStart: Option[TransEModel])(
+      open: (TransETrainer.Prepared, Array[Array[Float]], Array[Array[Float]]) => S): S = {
     val spark = triples.sparkSession
-    val sc = spark.sparkContext
     val p = params
     TransETrainer.requireWarmStartShape(p, nEntities, nLabels, warmStart)
-
     TransETrainer.prepared(triples, nEntities, nLabels, p) { prep =>
-      val membBc = prep.membership
-      val bernBc = prep.bern
       val (entity, label) = TransETrainer.initialMatrices(p, nEntities, nLabels, warmStart)
-
-      var history = Vector.empty[Double]
-      var epochSecs = Vector.empty[Double]
-      var epoch = 0
-      while (epoch < p.epochs) {
-        val tEpoch0 = System.nanoTime()
-        // loss rides in the COLLECTED deltas, not an accumulator: updates
-        // from transformations are re-applied on task retry / speculative
-        // execution, which would inflate the metric nondeterministically on
-        // a real cluster; collect() results are exactly-once
-        var epochLoss = 0.0
-        var batch = 0
-        while (batch < p.batches) {
-          // Parameter sync: ONE fresh broadcast per batch bundling both
-          // matrices (the reference broadcasts two, TransE.py:116-117),
-          // destroyed after the merge (TransE.py:146-149 — epochs*batches
-          // generations would otherwise accumulate on executors).
-          val modelBc = sc.broadcast((entity, label))
-          try {
+      val store = open(prep, entity, label)
+      try {
+        var history = Vector.empty[Double]
+        var epochSecs = Vector.empty[Double]
+        var epoch = 0
+        while (epoch < p.epochs) {
+          val tEpoch0 = System.nanoTime()
+          // loss rides in the COLLECTED deltas, not an accumulator: updates
+          // from transformations are re-applied on task retry / speculative
+          // execution, which would inflate the metric nondeterministically on
+          // a real cluster; collect() results are exactly-once
+          var epochLoss = 0.0
+          var batch = 0
+          while (batch < p.batches) {
             val batchSeed = TransETrainer.batchSeedOf(p, epoch, batch)
             val sampled = TransETrainer.sampleBatch(prep.layout.blocks, p.batches, batchSeed)
-            val deltas = sampled.mapPartitionsWithIndex { (pid, it) =>
-              val (ent, lab) = modelBc.value
-              TransETrainer.partitionSgd(pid, it, ent(_), lab(_),
-                membBc.value, nEntities, p, batchSeed, bernBc.value)
-            }.collect()
-
-            // Deterministic last-writer-wins: partition-index order.
-            java.util.Arrays.sort(deltas, Ordering.by((d: TransETrainer.Delta) => d.pid))
-            deltas.foreach { d =>
-              epochLoss += d.loss
-              d.applyTo(entity, label, p.dim)
-            }
-          } finally modelBc.destroy()
-          batch += 1
-        }
-        history :+= epochLoss
-        epochSecs :+= (System.nanoTime() - tEpoch0) / 1e9
-        epoch += 1
-        // periodic VERSIONED checkpoint (reference writes per-epoch files
-        // entity_embedding_<id>.pkl, utils.py:44-49 / TransE.py:108-111):
-        // every checkpointed epoch is restorable from $dir/epoch=<n>
-        if (p.checkpointEvery > 0 && epoch % p.checkpointEvery == 0) {
-          p.checkpointDir.foreach { dir =>
-            EmbeddingIO.saveModel(spark, TransEModel(entity, label, p),
-              s"$dir/epoch=$epoch")
+            store.step(sampled, batchSeed).foreach(loss => epochLoss += loss)
+            batch += 1
+          }
+          history :+= epochLoss
+          epochSecs :+= (System.nanoTime() - tEpoch0) / 1e9
+          epoch += 1
+          // periodic VERSIONED checkpoint (reference writes per-epoch files
+          // entity_embedding_<id>.pkl, utils.py:44-49 / TransE.py:108-111):
+          // every checkpointed epoch is restorable from $dir/epoch=<n>
+          if (p.checkpointEvery > 0 && epoch % p.checkpointEvery == 0) {
+            p.checkpointDir.foreach(dir => store.save(spark, s"$dir/epoch=$epoch"))
           }
         }
+        lossHistory = history
+        epochSecsHistory = epochSecs
+        store
+      } catch {
+        case e: Throwable =>
+          store.release()
+          throw e
       }
-      lossHistory = history
-      epochSecsHistory = epochSecs
-      TransEModel(entity, label, params)
     }
   }
 }
@@ -335,10 +359,7 @@ object TransETrainer {
           TripleBlock.split(b, targetParts)
             .iterator.zipWithIndex.collect { case (a, q) if a.nonEmpty => (q, a) }
         }
-        .partitionBy(new org.apache.spark.Partitioner {
-          def numPartitions: Int = targetParts
-          def getPartition(key: Any): Int = key.asInstanceOf[Int]
-        })
+        .partitionBy(new IndexPartitioner(targetParts))
         .mapPartitions(it => Iterator(TripleBlock.sorted(keys, it.map(_._2))),
           preservesPartitioning = false)
         .persist(StorageLevel.MEMORY_AND_DISK)
@@ -436,6 +457,9 @@ object TransETrainer {
       labIds: Array[Int], labVals: Array[Float],
       loss: Double) {
 
+    /** This delta without its entity rows. */
+    def labelsOnly: Delta = copy(entIds = Array.emptyIntArray, entVals = Array.emptyFloatArray)
+
     /** In-place overwrite of the driver matrices (no per-row allocation —
       * safe: the previous round's broadcast is never read again once its
       * tasks' results are collected, and the next round re-broadcasts). */
@@ -451,6 +475,197 @@ object TransETrainer {
         i += 1
       }
     }
+  }
+
+  /** Where one fit keeps its parameters between batches. The trainer's
+    * loop samples each batch; the store runs its SGD and merge, writes a
+    * checkpoint, and releases what it holds when the fit throws. A store
+    * is not Serializable on purpose: a task closure that captured one
+    * would ship the driver matrices with every task, and Spark refuses
+    * such a closure instead. Task closures capture locals only. */
+  private[transe] sealed trait ParamStore {
+    /** SGD over one sampled batch, merged into the store; returns each
+      * partition's loss in pid order. */
+    def step(sampled: RDD[Triple], batchSeed: Long): Array[Double]
+
+    /** Writes the current parameters under `dir` as `entity/`, `label/`
+      * and `params/`, the layout [[EmbeddingIO.loadModel]] reads. */
+    def save(spark: SparkSession, dir: String): Unit
+
+    /** Releases the store's cluster state after a failed fit. */
+    def release(): Unit
+  }
+
+  /** Both matrices on the driver. Parameter sync: ONE fresh broadcast per
+    * batch bundling both matrices (the reference broadcasts two,
+    * TransE.py:116-117), destroyed after the merge (TransE.py:146-149 —
+    * epochs*batches generations would otherwise accumulate on executors). */
+  private[transe] final class BroadcastStore(prep: Prepared, params: TransEParams,
+      val entity: Array[Array[Float]], val label: Array[Array[Float]]) extends ParamStore {
+
+    def step(sampled: RDD[Triple], batchSeed: Long): Array[Double] = {
+      val modelBc = sampled.sparkContext.broadcast((entity, label))
+      try {
+        val membBc = prep.membership
+        val bernBc = prep.bern
+        val p = params
+        val n = entity.length
+        mergeInPidOrder(sampled.mapPartitionsWithIndex { (pid, it) =>
+          val (ent, lab) = modelBc.value
+          partitionSgd(pid, it, ent(_), lab(_), membBc.value, n, p, batchSeed, bernBc.value)
+        }.collect(), entity, label, p.dim)
+      } finally modelBc.destroy()
+    }
+
+    def save(spark: SparkSession, dir: String): Unit =
+      EmbeddingIO.saveModel(spark, TransEModel(entity, label, params), dir)
+
+    def release(): Unit = ()
+  }
+
+  /** The entity matrix as a distributed `(id, vec)` RDD, so training goes
+    * past the broadcast ceiling (SCALE.md): the design scales to entity
+    * counts where n*k*4 bytes no longer fits one heap. The label matrix
+    * stays on the driver and broadcasts per batch (10k relations × k=50
+    * is 2 MB), like the reference's label matrix.
+    *
+    * The floats equal [[BroadcastStore]]'s because of one property the
+    * kernel documents: corruption-RNG consumption is parameter-
+    * independent, so each partition's parameter READ SET is computable
+    * before the parameters are fetched ([[readSet]]).
+    *
+    * Per-batch dataflow (3 shuffles, each proportional to BATCH size, never
+    * to the full parameter matrix):
+    *
+    *   1. needs:   replay the RNG over the sampled partition -> (id, pid)
+    *               pairs, 8 bytes each, shuffled to the parameter layout;
+    *   2. fetch:   co-partitioned join needs × params (narrow on the param
+    *               side), ship the hit rows to their pid's partition;
+    *   3. sgd:     zipPartitions(sampled, fetched) runs the shared kernel
+    *               against the prefetched rows — bit-identical floats;
+    *   4. merge:   entity deltas reduceByKey(max pid) — equivalent to the
+    *               driver's ascending-pid overwrite because each partition
+    *               emits an id at most once — then a narrow join updates the
+    *               persisted parameter RDD. Label deltas + losses collect to
+    *               the driver.
+    *
+    * vs the broadcast store: broadcast ships n*k*4 bytes to EVERY executor
+    * EVERY batch regardless of batch size; this store ships
+    * O(touched rows × k) — the crossover is measured in SCALE.md.
+    *
+    * Lineage is truncated every round via the Checkpoints seam (the standard
+    * iterative-parameter pattern, as in GraphX Pregel); fault-tolerance at
+    * scale would move this to reliable checkpointing on the cluster FS. */
+  private[transe] final class PartitionedStore(prep: Prepared, params: TransEParams,
+      entity0: Array[Array[Float]], val label: Array[Array[Float]]) extends ParamStore {
+    private val nEntities = entity0.length
+    private val paramPart = new HashPartitioner(prep.layout.partitions)
+    private val pidPart = new IndexPartitioner(prep.layout.partitions)
+
+    /** The entity matrix, persisted and partitioned by `paramPart`. The
+      * seeded init matrix is scattered once and not kept. */
+    var entParams: RDD[(Int, Array[Float])] = prep.layout.blocks.sparkContext
+      .parallelize(entity0.indices.map(i => (i, entity0(i))), prep.layout.partitions)
+      .partitionBy(paramPart)
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    entParams.count()
+
+    def step(sampled: RDD[Triple], batchSeed: Long): Array[Double] = {
+      val membBc = prep.membership
+      val bernBc = prep.bern
+      val p = params
+      val n = nEntities
+      val labBc = sampled.sparkContext.broadcast(label)
+      var deltaRdd: RDD[Delta] = null
+      val prev = entParams
+      try {
+        // 1. parameter read set per partition (ids only)
+        val needs: RDD[(Int, Int)] = sampled.mapPartitionsWithIndex({ (pid, it) =>
+          readSet(pid, it, membBc.value, n, p, batchSeed, bernBc.value)
+            .asScala.iterator.map(id => (id.intValue, pid))
+        }, preservesPartitioning = false)
+
+        // 2. fetch the hit rows and ship them to their consumer partition
+        val fetched: RDD[(Int, (Int, Array[Float]))] = prev
+          .join(needs.partitionBy(paramPart)) // narrow: both sides on paramPart
+          .map { case (id, (vec, pid)) => (pid, (id, vec)) }
+          .partitionBy(pidPart)
+
+        // 3. the shared SGD kernel over prefetched rows
+        deltaRdd = sampled.zipPartitions(fetched) { (trIt, rowIt) =>
+          val pid = org.apache.spark.TaskContext.getPartitionId()
+          val rows = new java.util.HashMap[Integer, Array[Float]]()
+          rowIt.foreach { case (_, (id, vec)) => rows.put(id, vec) }
+          val entBase = (id: Int) => {
+            val v = rows.get(id)
+            if (v == null) throw new IllegalStateException(
+              s"entity row $id not prefetched for partition $pid — readSet drifted from partitionSgd")
+            v
+          }
+          val lab = labBc.value
+          partitionSgd(pid, trIt, entBase, lab(_), membBc.value, n, p, batchSeed, bernBc.value)
+        }.persist(StorageLevel.MEMORY_AND_DISK)
+
+        // 4a. labels + loss on the driver, in the broadcast store's merge
+        //     order; the entity rows stay on the cluster
+        val losses = mergeInPidOrder(deltaRdd.map(_.labelsOnly).collect(), null, label, p.dim)
+
+        // 4b. entity deltas merged distributed: max-pid wins == the
+        //     driver's ascending overwrite (each pid emits an id at most
+        //     once, so the combiner is associative with no ties)
+        val dim = p.dim
+        val updates: RDD[(Int, (Int, Array[Float]))] = deltaRdd.flatMap { d =>
+          Iterator.range(0, d.entIds.length).map { i =>
+            (d.entIds(i), (d.pid,
+              java.util.Arrays.copyOfRange(d.entVals, i * dim, (i + 1) * dim)))
+          }
+        }
+        val merged = updates
+          .reduceByKey(paramPart, (a, b) => if (a._1 >= b._1) a else b)
+        val next = prev
+          .leftOuterJoin(merged) // narrow: both sides on paramPart
+          .mapValues {
+            case (_, Some((_, row))) => row
+            case (old, None)         => old
+          }
+        entParams = next
+        graft.Checkpoints.truncateRdd(next) // truncate per-round lineage growth
+        next.count()
+        losses
+      } finally {
+        // teardown order matters: only after `next` is materialized is
+        // it safe to drop the inputs that produced it (on a failure
+        // they go anyway, and release() drops `next`)
+        labBc.destroy()
+        if (deltaRdd != null) deltaRdd.unpersist()
+        prev.unpersist()
+      }
+    }
+
+    def save(spark: SparkSession, dir: String): Unit = {
+      EmbeddingIO.saveDistributed(spark, entParams, s"$dir/entity")
+      EmbeddingIO.save(spark, label, s"$dir/label")
+      EmbeddingIO.saveParams(spark, params, dir)
+    }
+
+    def release(): Unit = entParams.unpersist()
+  }
+
+  /** Applies `deltas` to the driver matrices in partition-index order —
+    * the deterministic last-writer-wins merge — and returns their losses
+    * in that order. `entity` is not read when no delta carries entity rows. */
+  private def mergeInPidOrder(deltas: Array[Delta], entity: Array[Array[Float]],
+      label: Array[Array[Float]], dim: Int): Array[Double] = {
+    java.util.Arrays.sort(deltas, Ordering.by((d: Delta) => d.pid))
+    deltas.map { d =>
+      d.applyTo(entity, label, dim)
+      d.loss
+    }
+  }
+
+  /** Sends an Int key to the partition of that index. */
+  private final class IndexPartitioner(val numPartitions: Int) extends Partitioner {
+    def getPartition(key: Any): Int = key.asInstanceOf[Int]
   }
 
   /** Open-addressing Int -> row map holding one task's write-combined
@@ -518,13 +733,13 @@ object TransETrainer {
     * emitted as the partition delta.
     *
     * Parameter access is through `entBase`/`labBase` READ closures so the
-    * broadcast trainer (full matrices) and [[TransEPartitionedTrainer]]
+    * broadcast store (full matrices) and the [[PartitionedStore]]
     * (per-partition prefetched rows) share this kernel bit-for-bit; the
     * closures must return the batch-start value for every id in the
     * partition's read set ({h, t, final corruption candidate} entities and
     * {l} labels per sampled triple — see [[readSet]]).
     *
-    * RNG DISCIPLINE (the partitioned trainer depends on it): the
+    * RNG DISCIPLINE (the partitioned store depends on it): the
     * corruption stream consumes exactly `nextBoolean + nextInt*(1+redraws)`
     * per triple, and redraw count depends only on the membership set —
     * never on parameter values. That makes the stream replayable by
@@ -651,7 +866,7 @@ object TransETrainer {
     * set of entity ids one partition's [[partitionSgd]] call will read
     * ({h, t, final candidate} per sampled triple). Possible because RNG
     * consumption is parameter-independent (see partitionSgd scaladoc) —
-    * this is what lets [[TransEPartitionedTrainer]] prefetch exactly the
+    * this is what lets the [[PartitionedStore]] prefetch exactly the
     * needed parameter rows ahead of the SGD pass. */
   private[transe] def readSet(
       pid: Int,

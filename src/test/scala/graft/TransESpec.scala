@@ -160,7 +160,7 @@ class TransESpec extends SparkSpec {
     val bern = TransETrainer.bernProbs(kg.rdd, 2)
     assert(bern(0) == 4.0 / 5.0 && bern(1) == 1.0 / 5.0, bern.toSeq)
 
-    // with bern ON: same-seed determinism AND the partitioned trainer's
+    // with bern ON: same-seed determinism AND the partitioned store's
     // bit-equality contract must both survive the new corruption path
     // (readSet replays the bern draw — relation stats are data, not
     // parameters, so the prefetch contract holds)
@@ -171,8 +171,8 @@ class TransESpec extends SparkSpec {
     val t2 = new TransETrainer(p)
     val m2 = t2.fit(train, nEnt, nLab)
     assert(t1.lossHistory == t2.lossHistory, "bern training not deterministic")
-    val tp = new TransEPartitionedTrainer(p)
-    val mp = tp.fit(train, nEnt, nLab)
+    val tp = new TransETrainer(p)
+    val mp = tp.fitPartitioned(train, nEnt, nLab)
     assert(tp.lossHistory == t1.lossHistory,
       s"partitioned bern loss drifted:\n${tp.lossHistory}\n${t1.lossHistory}")
     assert(m1.entity.flatten.toSeq == mp.entity.flatten.toSeq,
@@ -240,7 +240,7 @@ class TransESpec extends SparkSpec {
   }
 
   test("partitioned-parameter trainer is BIT-identical to broadcast (matrices + loss)") {
-    // the whole contract of TransEPartitionedTrainer: same layout, same
+    // the whole contract of the partitioned store: same layout, same
     // sampler, same kernel, same LWW merge order => same floats. Run both
     // at a shape that exercises multiple partitions, batches and epochs.
     val (enc, nEnt, nLab) = encoded
@@ -248,8 +248,8 @@ class TransESpec extends SparkSpec {
       lr = 0.02f, seed = 7)
     val bTrainer = new TransETrainer(params)
     val bModel = bTrainer.fit(enc, nEnt, nLab)
-    val pTrainer = new TransEPartitionedTrainer(params)
-    val pModel = pTrainer.fit(enc, nEnt, nLab)
+    val pTrainer = new TransETrainer(params)
+    val pModel = pTrainer.fitPartitioned(enc, nEnt, nLab)
     assert(bTrainer.lossHistory == pTrainer.lossHistory,
       s"loss curves diverged:\n  ${bTrainer.lossHistory}\n  ${pTrainer.lossHistory}")
     (0 until nEnt).foreach { i =>
@@ -269,7 +269,7 @@ class TransESpec extends SparkSpec {
     import org.apache.spark.sql.functions.col
     val (enc, nEnt, nLab) = encoded
     val params = TransEParams(epochs = 2, batches = 2, dim = 8, seed = 11)
-    val (entRdd, label) = new TransEPartitionedTrainer(params)
+    val (entRdd, label) = new TransETrainer(params)
       .fitDistributed(enc, nEnt, nLab)
     import spark.implicits._
     val entDf = entRdd.toDF("id", "vec")

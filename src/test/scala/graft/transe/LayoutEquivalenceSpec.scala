@@ -110,7 +110,7 @@ class LayoutEquivalenceSpec extends SparkSpec {
       assert(probed.result.getMessage.contains(tr.toString), probed.result.getMessage)
       assert(probed.jobs == 1, s"$tr: ${probed.jobRows.map(_.callSite)}") // the packing pass
       intercept[IllegalArgumentException](
-        new TransEPartitionedTrainer(TransEParams(epochs = 2, dim = 4)).fit(ds, 10, 3))
+        new TransETrainer(TransEParams(epochs = 2, dim = 4)).fitPartitioned(ds, 10, 3))
     }
   }
 
@@ -124,7 +124,7 @@ class LayoutEquivalenceSpec extends SparkSpec {
     val outOfRange = dataset(Seq(Triple(0, 0, 1), Triple(0, 5, 1)), 2)
     intercept[IllegalArgumentException](new TransETrainer(TransEParams(dim = 4)).fit(outOfRange, 10, 3))
     intercept[IllegalArgumentException](
-      new TransEPartitionedTrainer(TransEParams(dim = 4)).fitDistributed(outOfRange, 10, 3))
+      new TransETrainer(TransEParams(dim = 4)).fitDistributed(outOfRange, 10, 3))
     assert(added.isEmpty, s"preparation left RDDs $added persisted")
     // after an epoch: the checkpoint write fails on a path under a file
     val file = java.nio.file.Files.createTempFile("graft_not_a_dir", "")
@@ -132,7 +132,7 @@ class LayoutEquivalenceSpec extends SparkSpec {
       checkpointDir = Some(file.resolve("ckpt").toString))
     intercept[Exception](new TransETrainer(p).fit(ok, 10, 3))
     assert(added.isEmpty, s"broadcast trainer left RDDs $added persisted")
-    intercept[Exception](new TransEPartitionedTrainer(p).fitDistributed(ok, 10, 3))
+    intercept[Exception](new TransETrainer(p).fitDistributed(ok, 10, 3))
     assert(added.isEmpty, s"partitioned trainer left RDDs $added persisted")
     java.nio.file.Files.delete(file)
   }

@@ -58,13 +58,13 @@ private[transe] object ReferenceSgd {
     * emitted as the partition delta.
     *
     * Parameter access is through `entBase`/`labBase` READ closures so the
-    * broadcast trainer (full matrices) and [[TransEPartitionedTrainer]]
-    * (per-partition prefetched rows) share this kernel bit-for-bit; the
+    * broadcast store (full matrices) and the partitioned store
+    * (`TransETrainer.fitDistributed`, per-partition prefetched rows) share this kernel bit-for-bit; the
     * closures must return the batch-start value for every id in the
     * partition's read set ({h, t, final corruption candidate} entities and
     * {l} labels per sampled triple — see [[readSet]]).
     *
-    * RNG DISCIPLINE (the partitioned trainer depends on it): the
+    * RNG DISCIPLINE (the partitioned store depends on it): the
     * corruption stream consumes exactly `nextBoolean + nextInt*(1+redraws)`
     * per triple, and redraw count depends only on the membership set —
     * never on parameter values. That makes the stream replayable by
