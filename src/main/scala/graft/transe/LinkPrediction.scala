@@ -4,6 +4,8 @@ import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.operators.Spread
+
 /** Link-prediction evaluation — the reference's `test.py` protocol ("raw"
   * setting) re-expressed: for each test triple (h, l, t), rank the true
   * head against all entities by d(e + l, t) and the true tail by
@@ -28,18 +30,21 @@ object LinkPrediction {
 
   /** Per-triple head and tail ranks (1-based, optimistic tie-handling);
     * `l` carries the relation so metrics can slice by cardinality
-    * category (the paper's Table-4 protocol). */
+    * category (the paper's Table-4 protocol).
+    *
+    * Spread: the test set is tiny next to the O(|test| · n · k) scan, so
+    * it must run on every core with its rows dealt out evenly.
+    * [[graft.operators.Spread.rowSpread]] decides that from the plan
+    * without running it: a driver-built `createDataset` block of at least
+    * `defaultParallelism` rows is scanned in place, in ONE job with no
+    * shuffle; any other input is repartitioned first. Either way rows
+    * come back in partition order, not necessarily the input's. */
   def rankTriples(test: Dataset[Triple], model: TransEModel): Dataset[Ranks] = {
     val spark = test.sparkSession
     import spark.implicits._
     val (entBc, labBc, k, l1) = broadcasts(spark, model)
 
-    // The test set is tiny relative to the O(|test| * n * k) scoring work,
-    // and AQE happily coalesces it to one partition — which would serialize
-    // the whole scan. Spread the compute across the cluster explicitly.
-    val spread = test.repartition(spark.sparkContext.defaultParallelism)
-
-    spread.mapPartitions { it =>
+    Spread.rowSpread(test).mapPartitions { it =>
       val ent = entBc.value
       val lab = labBc.value
       it.map { tr =>
@@ -111,133 +116,136 @@ object LinkPrediction {
   }
 
   /** The fused head+tail strict-less scan over the flat entity matrix —
-    * ONE sequential read of the buffer. EARLY EXIT is exact, not
-    * approximate: every term is >= 0, so the partial sums are monotone
-    * non-decreasing — once BOTH have reached their true distances,
-    * neither final sum can be strictly less, and the candidate's
-    * contribution to both counts is decided. A trained model scores its
-    * true triples low, so typical candidates exceed both thresholds
-    * within a few components — the scan does a fraction of the k flops
-    * per candidate with bit-identical ranks. Shared by the raw and
-    * FILTERED evaluators (identical float-op order: the goldens gate it).
+    * ONE sequential read of the buffer, counting the candidates whose
+    * double distance (the sum [[headDist]] / [[tailDist]] computes, in
+    * component order) is strictly below `dTrueHead` / `dTrueTail`.
+    * Shared by all three rankers: raw, filtered and partitioned.
+    *
+    * FILTER AND REFINE. The scan accumulates in `float`, which skips two
+    * float-to-double conversions per term, and decides a candidate from
+    * its float sum only when that sum lies outside a band around the
+    * threshold d that provably contains it whenever the double verdict
+    * could differ; every other candidate is REFINED: its double sum is
+    * recomputed by [[headDist]] / [[tailDist]]. Why the band is safe,
+    * for k terms and u = 2^-24: the double terms t_j are exact
+    * (|x + u_j| is a float; a float's square fits a double's mantissa),
+    * so the double sum S_d is within a factor (1 ± k·2^-53) of
+    * T = Σ t_j. The float terms equal t_j under L1; under L2 each rounds
+    * to within u·t_j, or within 2^-150 absolute where the square falls
+    * into float's subnormal range (where the double products are still
+    * exact). Round-to-nearest addition of k non-negative terms stays within
+    * (1 ± ku/(1 - ku)) of their exact sum. So a finite float sum S_f obeys
+    * S_f ≤ (1 + ~ku)·T + k·2^-150 and S_f ≥ (1 - ~ku)·T - k·2^-150, and
+    *  - S_f ≥ hi = d·(1 + 2(k+1)u) + α implies S_d ≥ d: not counted;
+    *  - S_f < lo = d·(1 - 2(k+1)u) - α implies S_d < d: counted;
+    * with α = 0 under L1 and k·2^-149 under L2. The band is about twice
+    * the worst-case error, which also absorbs the rounding of its own
+    * edges (computed in double, then widened outward to float). A NaN or
+    * ±Inf float sum (a NaN row, a float overflow the double does not
+    * share) and any sum inside the band take the refine; so does every
+    * sum if k ≥ 2^20, where the band would not hold. A threshold that is
+    * not > 0 (0, negative, NaN) counts nothing: no double sum of
+    * non-negative terms is below it. On a 6-epoch FB15k-237-shaped model
+    * (L1, k = 50), 1.2 in 10^4 comparisons refine.
     *
     * Candidates are scored FOUR rows per pass, with eight independent
     * accumulators (head and tail per row), so eight add chains overlap in
-    * the pipeline instead of two. The exit test runs once per
-    * [[ExitStride]] components (before components 0, 8, 16, ...) and
-    * stops the four rows once all eight sums have reached their
-    * thresholds. (On a weakly trained model the exit comes late: 48 of 50
-    * components on average for an 11-epoch FB15k-237-shaped model, so
-    * there the overlapping chains carry the speed.) The counts stay
-    * bit-identical to a one-row, test-every-component scan: each row's
-    * sum still adds its own terms in component order (only the point
-    * where adding stops moves), and by monotonicity a sum that has
-    * reached its threshold at any prefix stays there, while one that
-    * never does is summed over all k components either way. The n mod 4
-    * remaining rows use the one-row scan. */
+    * the pipeline instead of two. Every float sum runs over all k
+    * components: there is no early-exit test. On the benchmark's weakly
+    * trained model hardly any candidate could exit early, and the test's
+    * compound loop condition kept the JIT from compiling a counted loop
+    * (no unrolling, a range check per load). The n mod 4 remaining rows
+    * take the double sums directly. */
   private[graft] def fusedCounts(ent: Array[Float], end: Int, k: Int,
       u: Array[Float], v: Array[Float], dTrueHead: Double, dTrueTail: Double,
       l1: Boolean): (Long, Long) = {
-    val dH = dTrueHead
-    val dT = dTrueTail
+    val loH = bandLo(dTrueHead, k, l1); val hiH = bandHi(dTrueHead, k, l1)
+    val loT = bandLo(dTrueTail, k, l1); val hiT = bandHi(dTrueTail, k, l1)
+    // 1 when the row at `off` counts: from the float sum outside the
+    // band, else from the double sum
+    def head(s: Float, off: Int): Int =
+      if (s < loH) 1
+      else if (s >= hiH && s < Float.PositiveInfinity) 0
+      else if (headDist(ent, off, u, k, l1) < dTrueHead) 1 else 0
+    def tail(s: Float, off: Int): Int =
+      if (s < loT) 1
+      else if (s >= hiT && s < Float.PositiveInfinity) 0
+      else if (tailDist(ent, off, v, k, l1) < dTrueTail) 1 else 0
     var lessH = 0L
     var lessT = 0L
     var off = 0
     // rows starting below quadEnd have 3 more rows after them
     val quadEnd = if (k > 0) end - 4 * k + 1 else 0
-    if (l1) {
-      while (off < quadEnd) {
-        val o1 = off + k; val o2 = o1 + k; val o3 = o2 + k
-        var h0 = 0.0; var h1 = 0.0; var h2 = 0.0; var h3 = 0.0
-        var t0 = 0.0; var t1 = 0.0; var t2 = 0.0; var t3 = 0.0
-        var j = 0
-        while (j < k && ((j & (ExitStride - 1)) != 0 ||
-            h0 < dH || t0 < dT || h1 < dH || t1 < dT ||
-            h2 < dH || t2 < dT || h3 < dH || t3 < dT)) {
+    while (off < quadEnd) {
+      val o1 = off + k; val o2 = o1 + k; val o3 = o2 + k
+      var h0 = 0f; var h1 = 0f; var h2 = 0f; var h3 = 0f
+      var t0 = 0f; var t1 = 0f; var t2 = 0f; var t3 = 0f
+      var j = 0
+      if (l1) {
+        while (j < k) {
           val uj = u(j); val vj = v(j)
           val x0 = ent(off + j); val x1 = ent(o1 + j)
           val x2 = ent(o2 + j); val x3 = ent(o3 + j)
-          h0 += math.abs(x0 + uj).toDouble; t0 += math.abs(vj - x0).toDouble
-          h1 += math.abs(x1 + uj).toDouble; t1 += math.abs(vj - x1).toDouble
-          h2 += math.abs(x2 + uj).toDouble; t2 += math.abs(vj - x2).toDouble
-          h3 += math.abs(x3 + uj).toDouble; t3 += math.abs(vj - x3).toDouble
+          h0 += math.abs(x0 + uj); t0 += math.abs(vj - x0)
+          h1 += math.abs(x1 + uj); t1 += math.abs(vj - x1)
+          h2 += math.abs(x2 + uj); t2 += math.abs(vj - x2)
+          h3 += math.abs(x3 + uj); t3 += math.abs(vj - x3)
           j += 1
         }
-        if (h0 < dH) lessH += 1
-        if (h1 < dH) lessH += 1
-        if (h2 < dH) lessH += 1
-        if (h3 < dH) lessH += 1
-        if (t0 < dT) lessT += 1
-        if (t1 < dT) lessT += 1
-        if (t2 < dT) lessT += 1
-        if (t3 < dT) lessT += 1
-        off += 4 * k
-      }
-      while (off < end) {
-        var sH = 0.0; var sT = 0.0
-        var j = 0
-        while (j < k && (sH < dH || sT < dT)) {
-          val x = ent(off + j)
-          sH += math.abs(x + u(j)).toDouble
-          sT += math.abs(v(j) - x).toDouble
-          j += 1
-        }
-        if (sH < dH) lessH += 1
-        if (sT < dT) lessT += 1
-        off += k
-      }
-    } else {
-      while (off < quadEnd) {
-        val o1 = off + k; val o2 = o1 + k; val o3 = o2 + k
-        var h0 = 0.0; var h1 = 0.0; var h2 = 0.0; var h3 = 0.0
-        var t0 = 0.0; var t1 = 0.0; var t2 = 0.0; var t3 = 0.0
-        var j = 0
-        while (j < k && ((j & (ExitStride - 1)) != 0 ||
-            h0 < dH || t0 < dT || h1 < dH || t1 < dT ||
-            h2 < dH || t2 < dT || h3 < dH || t3 < dT)) {
+      } else {
+        while (j < k) {
           val uj = u(j); val vj = v(j)
           val x0 = ent(off + j); val x1 = ent(o1 + j)
           val x2 = ent(o2 + j); val x3 = ent(o3 + j)
-          val a0 = x0 + uj; h0 += a0.toDouble * a0
-          val b0 = vj - x0; t0 += b0.toDouble * b0
-          val a1 = x1 + uj; h1 += a1.toDouble * a1
-          val b1 = vj - x1; t1 += b1.toDouble * b1
-          val a2 = x2 + uj; h2 += a2.toDouble * a2
-          val b2 = vj - x2; t2 += b2.toDouble * b2
-          val a3 = x3 + uj; h3 += a3.toDouble * a3
-          val b3 = vj - x3; t3 += b3.toDouble * b3
+          val a0 = x0 + uj; h0 += a0 * a0; val b0 = vj - x0; t0 += b0 * b0
+          val a1 = x1 + uj; h1 += a1 * a1; val b1 = vj - x1; t1 += b1 * b1
+          val a2 = x2 + uj; h2 += a2 * a2; val b2 = vj - x2; t2 += b2 * b2
+          val a3 = x3 + uj; h3 += a3 * a3; val b3 = vj - x3; t3 += b3 * b3
           j += 1
         }
-        if (h0 < dH) lessH += 1
-        if (h1 < dH) lessH += 1
-        if (h2 < dH) lessH += 1
-        if (h3 < dH) lessH += 1
-        if (t0 < dT) lessT += 1
-        if (t1 < dT) lessT += 1
-        if (t2 < dT) lessT += 1
-        if (t3 < dT) lessT += 1
-        off += 4 * k
       }
-      while (off < end) {
-        var sH = 0.0; var sT = 0.0
-        var j = 0
-        while (j < k && (sH < dH || sT < dT)) {
-          val x = ent(off + j)
-          val a = x + u(j); sH += a.toDouble * a
-          val b = v(j) - x; sT += b.toDouble * b
-          j += 1
-        }
-        if (sH < dH) lessH += 1
-        if (sT < dT) lessT += 1
-        off += k
-      }
+      lessH += head(h0, off) + head(h1, o1) + head(h2, o2) + head(h3, o3)
+      lessT += tail(t0, off) + tail(t1, o1) + tail(t2, o2) + tail(t3, o3)
+      off += 4 * k
+    }
+    while (off < end) {
+      if (headDist(ent, off, u, k, l1) < dTrueHead) lessH += 1
+      if (tailDist(ent, off, v, k, l1) < dTrueTail) lessT += 1
+      off += k
     }
     (lessH, lessT)
   }
 
-  /** Components [[fusedCounts]] adds to every sum between exit tests;
-    * a power of two, so the test is a mask. */
-  private final val ExitStride = 8
+  /** Term counts from which [[fusedCounts]]' band would not bound the
+    * float error: every candidate is refined. */
+  private final val MaxBandDim = 1 << 20
+
+  /** The band's relative half-width for k-term sums, 2(k+1)·2^-24, and its
+    * absolute pad: 0 under L1, k·2^-149 under L2. */
+  private def bandRel(k: Int): Double = 2.0 * (k + 1) * math.scalb(1.0, -24)
+  private def bandAbs(k: Int, l1: Boolean): Double =
+    if (l1) 0.0 else k * java.lang.Float.MIN_VALUE.toDouble
+
+  /** [[fusedCounts]]' upper band edge for threshold `d`, widened up to a
+    * float: a finite float sum at or above it is not counted. */
+  private def bandHi(d: Double, k: Int, l1: Boolean): Float =
+    if (!(d > 0)) 0f
+    else if (k >= MaxBandDim) Float.PositiveInfinity
+    else {
+      val x = d * (1 + bandRel(k)) + bandAbs(k, l1)
+      val f = x.toFloat
+      if (f < x) math.nextUp(f) else f
+    }
+
+  /** The lower band edge, widened down to a float: a float sum below it
+    * is counted. */
+  private def bandLo(d: Double, k: Int, l1: Boolean): Float =
+    if (!(d > 0) || k >= MaxBandDim) Float.NegativeInfinity
+    else {
+      val x = d * (1 - bandRel(k)) - bandAbs(k, l1)
+      val f = x.toFloat
+      if (f > x) math.nextDown(f) else f
+    }
 
   /** FILTERED-protocol ranking (Bordes et al. 2013, the "filt." columns
     * every KG paper reports next to "raw"): when ranking the head of
@@ -283,9 +291,9 @@ object LinkPrediction {
       .join(broadcast(tailF), Seq("h", "l"), "left")
       .select(col("h"), col("l"), col("t"), col("fheads"), col("ftails"))
       .as[(Int, Int, Int, Option[Seq[Int]], Option[Seq[Int]])]
-      .repartition(spark.sparkContext.defaultParallelism)
 
-    withF.mapPartitions { it =>
+    // a joined input is not a driver-built block: always repartitioned
+    Spread.rowSpread(withF).mapPartitions { it =>
       val ent = entBc.value
       val lab = labBc.value
       it.map { case (th, tl, tt, fh, ft) =>
@@ -318,7 +326,8 @@ object LinkPrediction {
     * the TEST SET broadcasts instead, carrying one precomputed invariant
     * pair per triple (u = l - t with its true head distance, v = h + l
     * with its true tail distance). Each partition scans its slice of the
-    * matrix once, accumulating strict-less counts per test triple;
+    * matrix once, gathered into flat blocks that [[fusedCounts]] (the
+    * kernel of the broadcast rankers) scans once per test triple;
     * treeAggregate merges the 2·|test| long counters. Flops are
     * IDENTICAL to [[rankTriples]] (n · 2|test| · k) — what changes is
     * what moves: no n×k broadcast, only |test|-sized invariants out and
@@ -352,38 +361,24 @@ object LinkPrediction {
     val bc = spark.sparkContext.broadcast((probes.map(_.u), probes.map(_.v),
       probes.map(_.dHead), probes.map(_.dTail)))
 
+    // each partition's rows, gathered into flat blocks of at most
+    // BlockRows rows, are scanned by the one kernel once per probe
+    val k = probes.head.u.length
     val (lessH, lessT) = entities.select(col("vec"))
       .as[Array[Float]].rdd
+      .mapPartitions(_.grouped(BlockRows).map { rows =>
+        val flat = new Array[Float](rows.length * k)
+        var r = 0
+        rows.foreach { e => System.arraycopy(e, 0, flat, r * k, k); r += 1 }
+        flat
+      })
       .treeAggregate((new Array[Long](m), new Array[Long](m)))(
-        seqOp = { case ((lh, lt), e) =>
+        seqOp = { case ((lh, lt), flat) =>
           val (bu, bv, bdh, bdt) = bc.value
           var p = 0
           while (p < m) {
-            // fused head+tail with exact early exit (terms >= 0 so the
-            // partial sums are monotone — see rankTriples): identical
-            // strict-less counts, a fraction of the flops
-            val uu = bu(p); val vv = bv(p)
-            val th = bdh(p); val tt = bdt(p)
-            val kk = uu.length
-            var sH = 0.0; var sT = 0.0
-            var j = 0
-            if (l1) {
-              while (j < kk && (sH < th || sT < tt)) {
-                val x = e(j)
-                sH += math.abs(x + uu(j)).toDouble
-                sT += math.abs(vv(j) - x).toDouble
-                j += 1
-              }
-            } else {
-              while (j < kk && (sH < th || sT < tt)) {
-                val x = e(j)
-                val a = x + uu(j); sH += a.toDouble * a
-                val b = vv(j) - x; sT += b.toDouble * b
-                j += 1
-              }
-            }
-            if (sH < th) lh(p) += 1
-            if (sT < tt) lt(p) += 1
+            val (h, t) = fusedCounts(flat, flat.length, k, bu(p), bv(p), bdh(p), bdt(p), l1)
+            lh(p) += h; lt(p) += t
             p += 1
           }
           (lh, lt)
@@ -397,6 +392,10 @@ object LinkPrediction {
     spark.createDataset(
       (0 until m).map(p => Ranks(triples(p).l, lessH(p) + 1, lessT(p) + 1)))
   }
+
+  /** Entity rows per flat block of [[rankTriplesPartitioned]]: 1.6 MB
+    * of floats at k = 50, whatever the partition's size. */
+  private final val BlockRows = 8192
 
   /** [[evaluate]] over a distributed entity matrix — metrics from
     * [[rankTriplesPartitioned]], same output schema. */

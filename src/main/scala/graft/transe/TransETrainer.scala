@@ -562,13 +562,26 @@ object TransETrainer {
     private val paramPart = new HashPartitioner(prep.layout.partitions)
     private val pidPart = new IndexPartitioner(prep.layout.partitions)
 
-    /** The entity matrix, persisted and partitioned by `paramPart`. The
-      * seeded init matrix is scattered once and not kept. */
-    var entParams: RDD[(Int, Array[Float])] = prep.layout.blocks.sparkContext
-      .parallelize(entity0.indices.map(i => (i, entity0(i))), prep.layout.partitions)
-      .partitionBy(paramPart)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    entParams.count()
+    /** The seeded init matrix, broadcast once: each task of the init job
+      * reads the rows of its id range from it, so no task carries the
+      * matrix. It lives until the first round's parameter RDD is
+      * materialized and truncated; until then a lost init partition can
+      * still be recomputed from it. */
+    private var initBc = prep.layout.blocks.sparkContext.broadcast(entity0)
+
+    /** The entity matrix, persisted and partitioned by `paramPart`. */
+    var entParams: RDD[(Int, Array[Float])] = {
+      val bc = initBc // a local, so the task closure does not capture the store
+      val rows = prep.layout.blocks.sparkContext
+        .range(0L, nEntities.toLong, 1L, prep.layout.partitions)
+        .map { i => (i.toInt, bc.value(i.toInt)) }
+        .partitionBy(paramPart)
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      rows.count()
+      rows
+    }
+
+    private def dropInit(): Unit = if (initBc != null) { initBc.destroy(); initBc = null }
 
     def step(sampled: RDD[Triple], batchSeed: Long): Array[Double] = {
       val membBc = prep.membership
@@ -631,6 +644,7 @@ object TransETrainer {
         entParams = next
         graft.Checkpoints.truncateRdd(next) // truncate per-round lineage growth
         next.count()
+        dropInit() // no lineage reaches the init rows any more
         losses
       } finally {
         // teardown order matters: only after `next` is materialized is
@@ -648,7 +662,10 @@ object TransETrainer {
       EmbeddingIO.saveParams(spark, params, dir)
     }
 
-    def release(): Unit = entParams.unpersist()
+    def release(): Unit = {
+      entParams.unpersist()
+      dropInit()
+    }
   }
 
   /** Applies `deltas` to the driver matrices in partition-index order —

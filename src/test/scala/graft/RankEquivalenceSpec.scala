@@ -4,11 +4,12 @@ import java.util.SplittableRandom
 
 import graft.transe._
 
-/** Property gate for the fused early-exit ranking (LinkPrediction r5
-  * rewrite): against a NAIVE full-sum reimplementation on randomized
-  * models, both evaluators must produce IDENTICAL ranks. The early exit
-  * is exact only because every distance term is non-negative (monotone
-  * partial sums); this spec is the tripwire if a future distance breaks
+/** Property gate for the fused ranking scan (LinkPrediction's
+  * `fusedCounts`): against a NAIVE full-sum reimplementation on
+  * randomized models, both evaluators must produce IDENTICAL ranks. The
+  * scan decides from float sums outside an error band and recomputes in
+  * double inside it; the band is exact only because every distance term
+  * is non-negative. This spec is the tripwire if a future distance breaks
   * that precondition or the fused loops drift from the definition.
   * (scalacheck's scalatest bridge isn't in the offline cache, so
   * properties are seeded-loop style, like KernelsSpec.) */
@@ -82,20 +83,19 @@ class RankEquivalenceSpec extends SparkSpec {
       val want = naiveRanks(test, model)
       val got = LinkPrediction.rankTriples(test.toDS(), model)
         .collect().map(r => (r.rank_head, r.rank_tail)).toSeq
-      // rankTriples repartitions, so row order is not the input order —
-      // compare as sorted multisets
+      // rankTriples may spread the block over more partitions first, so
+      // row order is not the input order — compare as sorted multisets
       assert(got.sorted == want.sorted,
         s"dist=$dist trial=$trial n=$n k=$k: fused ranks diverged")
     }
   }
 
   test("fused scan counts == naive counts for 1-9 entities and k in {1, 7, 8, 9, 50}") {
-    // the scan takes 4 rows per pass and tests its exit every 8
-    // components: entity counts 1-9 run the n mod 4 remainder rows, and k
-    // around 8 runs partial exit strides. Thresholds sit exactly on, and
-    // one ulp either side of, every candidate's full sum and its partial
-    // sums at the exit tests — where an early exit that stopped one
-    // component too soon, or tested the wrong sums, would miscount.
+    // the scan takes 4 rows per pass: entity counts 1-9 run the n mod 4
+    // remainder rows. Thresholds sit exactly on, and one ulp either side
+    // of, every candidate's full sum and its partial sums at every 8th
+    // component — where a scan that dropped or misordered a term, or
+    // stopped short, would miscount.
     val rng = new SplittableRandom(11)
     for (dist <- Seq[Distance](L1, L2Squared); n <- 1 to 9; k <- Seq(1, 7, 8, 9, 50)) {
       val model = randomModel(rng, n, 2, k, dist)
@@ -113,8 +113,8 @@ class RankEquivalenceSpec extends SparkSpec {
           .flatMap(x => Seq(math.nextDown(x), x, math.nextUp(x))).distinct
       val hs = thresholds(headSums)
       val ts = thresholds(tailSums)
-      // a 0 threshold is reached before the first component, so pairing
-      // it with the other side's thresholds lets that side alone decide
+      // a 0 threshold counts nothing, so pairing it with the other
+      // side's thresholds lets that side alone decide
       val pairs = hs.flatMap(dh => Seq((dh, 0.0), (dh, ts(rng.nextInt(ts.length))))) ++
         ts.flatMap(dt => Seq((0.0, dt), (hs(rng.nextInt(hs.length)), dt)))
       for ((dh, dt) <- pairs) {
@@ -123,6 +123,85 @@ class RankEquivalenceSpec extends SparkSpec {
         assert(got == want, s"dist=$dist n=$n k=$k dh=$dh dt=$dt: fused counts diverged")
       }
     }
+  }
+
+  test("float band: fused counts == naive double counts at the band's hard cases") {
+    // fusedCounts decides from float sums outside a band around the
+    // threshold and recomputes in double inside it. Each case mixes rows
+    // that land in or next to the band: copies of the true rows with
+    // 1-ulp nudges (double sums within a few ulps of the threshold),
+    // tiny components whose float squares underflow (L2), components
+    // near Float.MaxValue / k whose float sums overflow, and NaN rows;
+    // thresholds are the true distances plus values that put candidate
+    // sums one ulp either side of a band edge. n runs 4 to 103, so most
+    // cases also leave n mod 4 rows for the double remainder loop.
+    val rng = new SplittableRandom(17)
+    val ks = Seq(1, 2, 7, 8, 9, 16, 50, 64)
+    for (dist <- Seq[Distance](L1, L2Squared); c <- 0 until 120) {
+      val l1 = dist == L1
+      val k = ks(rng.nextInt(ks.length))
+      val n = 4 + rng.nextInt(100)
+      val scale = c % 4 match {
+        case 0 => 1.0
+        case 1 => 1e-20
+        case 2 => Float.MaxValue / k * (0.25 + rng.nextDouble())
+        case _ => math.sqrt(Float.MaxValue / k) * (0.25 + rng.nextDouble())
+      }
+      def row() = Array.fill(k)(((rng.nextDouble() * 2 - 1) * scale).toFloat)
+      val ent = Array.fill(n)(row())
+      val lab = row()
+      val (hi, ti) = (rng.nextInt(n), rng.nextInt(n))
+      val u = Array.tabulate(k)(i => lab(i) - ent(ti)(i))
+      val v = Array.tabulate(k)(i => ent(hi)(i) + lab(i))
+      def nudge(src: Array[Float]) = src.map(x => rng.nextInt(3) match {
+        case 0 => math.nextUp(x)
+        case 1 => math.nextDown(x)
+        case _ => x
+      })
+      for (r <- 0 until n if r != hi && r != ti) rng.nextInt(6) match {
+        case 0 => ent(r) = nudge(ent(hi))
+        case 1 => ent(r) = nudge(ent(ti))
+        case 2 => ent(r) = ent(hi).clone()
+        case 3 => ent(r)(rng.nextInt(k)) = Float.NaN
+        case _ => ()
+      }
+      def f(z: Float): Double = if (l1) math.abs(z).toDouble else z.toDouble * z
+      val headSums = ent.map(e => (0 until k).foldLeft(0.0)((s, i) => s + f(e(i) + u(i))))
+      val tailSums = ent.map(e => (0 until k).foldLeft(0.0)((s, i) => s + f(v(i) - e(i))))
+      // a threshold that puts sum x one ulp inside or outside each edge
+      val rel = 2.0 * (k + 1) * math.scalb(1.0, -24)
+      def nearEdges(x: Double): Seq[Double] = Seq(x / (1 + rel), x / (1 - rel))
+        .flatMap(d => Seq(math.nextDown(d), d, math.nextUp(d)))
+      def thresholds(sums: Array[Double], dTrue: Double): Seq[Double] =
+        dTrue +: nearEdges(sums(rng.nextInt(n))) :+ math.nextUp(sums(rng.nextInt(n)))
+      val flat = ent.flatten
+      for (dh <- thresholds(headSums, headSums(hi)); dt <- thresholds(tailSums, tailSums(ti))) {
+        val want = (headSums.count(_ < dh).toLong, tailSums.count(_ < dt).toLong)
+        val got = LinkPrediction.fusedCounts(flat, n * k, k, u, v, dh, dt, l1)
+        assert(got == want, s"dist=$dist case=$c n=$n k=$k scale=$scale dh=$dh dt=$dt")
+      }
+    }
+  }
+
+  test("rankTriples on a driver-built block: one job, no shuffle; a 1-split block is spread") {
+    import spark.implicits._
+    val rng = new SplittableRandom(19)
+    val model = randomModel(rng, 64, 3, 10, L1)
+    val block = Seq.fill(500)(Triple(rng.nextInt(64), rng.nextInt(3), rng.nextInt(64)))
+    val p = spark.sparkContext.defaultParallelism
+    val want = naiveRanks(block, model).sorted
+    def ranked(ds: org.apache.spark.sql.Dataset[Triple]) =
+      graft.metrics.JobProbe.measure(spark)(LinkPrediction.rankTriples(ds, model).collect()
+        .map(r => (r.rank_head, r.rank_tail)).toSeq)
+
+    val inPlace = ranked(block.toDS())
+    assert(inPlace.jobs == 1, s"jobs: ${inPlace.jobRows.map(_.callSite)}")
+    assert(inPlace.work.shuffleWriteBytes == 0L && inPlace.work.tasks == p, inPlace.work)
+    assert(inPlace.result.sorted == want)
+
+    val starved = ranked(block.toDS().coalesce(1))
+    assert(starved.jobRows.map(_.work.tasks).max == p, starved.jobRows)
+    assert(starved.result.sorted == want)
   }
 
   test("filtered ranks == naive filtered ranks (L1 and L2, n not a multiple of 4)") {

@@ -4,11 +4,13 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.Spread
 
-/** Pins the two scale-adaptive repartition helpers the r15 optimizations
-  * lean on: both must preserve the row SET exactly (they are pure
-  * layout), cpuSpread must be a strict no-op once the input already has
-  * at least session parallelism, and fanoutSpread must never go below
-  * the session's parallelism nor below the plan's existing count. */
+/** Pins the scale-adaptive repartition helpers: each must preserve the
+  * row SET exactly (they are pure layout), cpuSpread must be a strict
+  * no-op once the input already has at least session parallelism,
+  * rowSpread may keep only a driver-built block of at least that many
+  * rows in place, none may run a job while the plan is being built, and
+  * fanoutSpread must never go below the session's parallelism nor below
+  * the plan's existing count. */
 class SpreadSpec extends SparkSpec {
   import spark.implicits._
 
@@ -27,6 +29,36 @@ class SpreadSpec extends SparkSpec {
     val out = Spread.cpuSpread(wide)
     // strict no-op: the SAME plan object comes back, nothing is inserted
     assert(out eq wide)
+  }
+
+  test("cpuSpread: building it over a grouped frame runs no job") {
+    // AQE could coalesce the grouping's shuffle at run time, so the
+    // adaptive plan is spread without reading its partition count
+    val grouped = (1L to 500L).toDF("v").groupBy(col("v") % 7).count()
+    val probed = graft.metrics.JobProbe.measure(spark)(Spread.cpuSpread(grouped))
+    assert(probed.jobs == 0, s"plan building ran ${probed.jobRows.map(_.callSite)}")
+    assert(probed.result ne grouped, "an adaptive input was not spread")
+    assert(probed.result.collect().map(_.getLong(1)).sum == 500L)
+  }
+
+  test("rowSpread: only a driver-built block of >= parallelism rows stays in place") {
+    val block = (1L to 500L).map(v => (v, v % 3)).toDF("v", "g")
+    assert(Spread.rowSpread(block) eq block)
+    val small = block.limit(p - 1)
+    assert(Spread.rowSpread(small) ne small)
+    // a filter over a cached frame of many splits, whose matches all sit
+    // in one of them: its split count would keep it in place, skewed
+    val cached = block.repartition(p + 3, col("g")).persist()
+    try {
+      cached.count()
+      val skewed = cached.filter(col("g") === 1)
+      val probed = graft.metrics.JobProbe.measure(spark)(Spread.rowSpread(skewed))
+      assert(probed.jobs == 0, s"plan building ran ${probed.jobRows.map(_.callSite)}")
+      assert(probed.result ne skewed)
+      assert(probed.result.rdd.getNumPartitions == p)
+      assert(probed.result.collect().map(_.getLong(0)).sorted.toSeq ==
+        (1L to 500L).filter(_ % 3 == 1))
+    } finally cached.unpersist()
   }
 
   test("fanoutSpread: never below parallelism, never below the plan") {
