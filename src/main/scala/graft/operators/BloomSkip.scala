@@ -63,17 +63,11 @@ object BloomSkip {
   /** Staged layout + sidecar: orders range-clustered by o_orderdate
     * under `<dir>/data`, the (file, pos) Bloom sidecar over o_orderkey
     * under `<dir>/index`. */
-  private[graft] def stagedDir(spark: SparkSession, sfDir: String): String = {
-    val src = Paths.get(sfDir, "orders.parquet").toAbsolutePath.normalize
+  private[graft] def stagedDir(spark: SparkSession, sfDir: String): String =
     // stage-format version: v2 added the per-file manifest — bumping it
     // here (not in callers) guarantees a format change can never reuse a
     // stale committed stage for an unchanged corpus
-    val key = java.security.MessageDigest.getInstance("SHA-256")
-      .digest(s"$src:${Files.getLastModifiedTime(src).toMillis}:bloom:v2"
-        .getBytes("UTF-8"))
-      .take(8).map("%02x".format(_)).mkString
-    val dir = Paths.get(sys.props("java.io.tmpdir"), s"graft_bloomskip_$key")
-    if (!Files.exists(dir.resolve("_DONE"))) {
+    graft.Assets.staged("bloomskip", Seq(Paths.get(sfDir, "orders.parquet")), "v2") { dir =>
       Tables.orders(spark, sfDir)
         .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
           col("o_totalprice"), col("o_orderdate"))
@@ -97,10 +91,7 @@ object BloomSkip {
         .groupBy("file").agg(count(lit(1)).as("n_bits_set"))
         .coalesce(1)
         .write.mode("overwrite").parquet(s"$dir/manifest")
-      Files.writeString(dir.resolve("_DONE"), "ok")
-    }
-    dir.toString
-  }
+    }.toString
 
   /** The K positions of EVERY key, one local job — the same expression
     * tree as the sidecar build (no per-key job, no hand-replicated md5

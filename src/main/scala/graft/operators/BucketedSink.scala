@@ -1,6 +1,6 @@
 package graft.operators
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Paths
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -18,10 +18,11 @@ import graft.Tables
   * the data.
   *
   * Mechanics: both tables are staged write-once per (sf dir, mtime)
-  * into catalog tables backed by EXPLICIT tmp-dir paths — never the
-  * session warehouse, because the driver session's default warehouse
-  * is the working directory. Bucket metadata lives in the catalog (not
-  * the files), so staging re-runs once per JVM but reuses within one.
+  * into catalog tables backed by EXPLICIT paths under
+  * [[graft.Assets.root]] — never the session warehouse, because the
+  * driver session's default warehouse is the working directory. Bucket
+  * metadata lives in the catalog (not the files), so staging re-runs
+  * once per JVM but reuses within one.
   * The query runs in a cloned session (`newSession`) with broadcast
   * disabled — the at-scale regime where neither fact side fits the
   * driver's broadcast budget — and aggregates to a tiny priority
@@ -32,15 +33,11 @@ object BucketedSink {
 
   private def stage(s: SparkSession, sfDir: String, table: String,
       df: DataFrame, key: String, buckets: Int): String = {
-    val src = Paths.get(sfDir, s"$table.parquet").toAbsolutePath.normalize
-    val tag = java.security.MessageDigest.getInstance("SHA-256")
-      .digest(s"bucket:$src:${Files.getLastModifiedTime(src).toMillis}"
-        .getBytes("UTF-8"))
-      .take(8).map("%02x".format(_)).mkString
-    val name = s"graft_b_${table}_$tag"
+    val path = graft.Assets.dirOf(s"b_$table", Seq(Paths.get(sfDir, s"$table.parquet")), "")
+    val name = path.getFileName.toString
     if (!s.catalog.tableExists(name)) {
       df.write.mode("overwrite")
-        .option("path", Paths.get(sys.props("java.io.tmpdir"), name).toString)
+        .option("path", path.toString)
         .bucketBy(buckets, key).sortBy(key)
         .saveAsTable(name)
     }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Paths
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -69,21 +69,14 @@ object Compaction {
   /** Write-once staging: the documents table deliberately fragmented
     * into 64 files, then compacted; keyed by (source path, mtime) like
     * PartitionedSink so re-runs and concurrent suites reuse it. */
-  private[graft] def stagedCompactedDir(spark: SparkSession, sfDir: String): String = {
-    val src = Paths.get(sfDir, "documents.parquet").toAbsolutePath.normalize
-    val key = java.security.MessageDigest.getInstance("SHA-256")
-      .digest(s"compact:$src:${Files.getLastModifiedTime(src).toMillis}".getBytes("UTF-8"))
-      .take(8).map("%02x".format(_)).mkString
-    val frag = Paths.get(sys.props("java.io.tmpdir"), s"graft_frag_$key")
-    val comp = Paths.get(sys.props("java.io.tmpdir"), s"graft_comp_$key")
-    if (!Files.exists(comp.resolve("_SUCCESS"))) {
+  private[graft] def stagedCompactedDir(spark: SparkSession, sfDir: String): String =
+    graft.Assets.staged("comp", Seq(Paths.get(sfDir, "documents.parquet")), "") { dir =>
       Tables.documents(spark, sfDir)
         .repartition(64) // the small-file problem, manufactured
-        .write.mode("overwrite").parquet(frag.toString)
-      compact(spark, frag.toString, comp.toString, targetBytes = 256L << 20)
-    }
-    comp.toString
-  }
+        .write.mode("overwrite").parquet(dir.resolve("frag").toString)
+      compact(spark, dir.resolve("frag").toString, dir.resolve("out").toString,
+        targetBytes = 256L << 20)
+    }.resolve("out").toString
 
   /** Round-trip proof through fragment -> compact: per-(lang, source)
     * counts + md5-derived content checksum computed off the COMPACTED
@@ -137,23 +130,15 @@ object Compaction {
   /** Staged fixture: lineitem keys deliberately fragmented into 64
     * randomly-laid-out files, then OPTIMIZEd (compact + z-order on
     * (l_partkey, l_suppkey)). */
-  private[graft] def stagedOptimizedDir(spark: SparkSession, sfDir: String): String = {
-    val src = Paths.get(sfDir, "lineitem.parquet").toAbsolutePath.normalize
-    val key = java.security.MessageDigest.getInstance("SHA-256")
-      .digest(s"optimize:$src:${Files.getLastModifiedTime(src).toMillis}".getBytes("UTF-8"))
-      .take(8).map("%02x".format(_)).mkString
-    val frag = Paths.get(sys.props("java.io.tmpdir"), s"graft_optfrag_$key")
-    val opt = Paths.get(sys.props("java.io.tmpdir"), s"graft_opt_$key")
-    if (!Files.exists(opt.resolve("_SUCCESS"))) {
+  private[graft] def stagedOptimizedDir(spark: SparkSession, sfDir: String): String =
+    graft.Assets.staged("opt", Seq(Paths.get(sfDir, "lineitem.parquet")), "") { dir =>
       Tables.lineitem(spark, sfDir)
         .select(col("l_orderkey"), col("l_partkey"), col("l_suppkey"))
         .repartition(64)
-        .write.mode("overwrite").parquet(frag.toString)
-      optimize(spark, frag.toString, opt.toString,
+        .write.mode("overwrite").parquet(dir.resolve("frag").toString)
+      optimize(spark, dir.resolve("frag").toString, dir.resolve("out").toString,
         targetBytes = 256L << 20, colA = "l_partkey", colB = "l_suppkey")
-    }
-    opt.toString
-  }
+    }.resolve("out").toString
 
   /** Round-trip proof through fragment -> OPTIMIZE: whole-content
     * checksum off the rewritten copy; the z-order clustering itself is

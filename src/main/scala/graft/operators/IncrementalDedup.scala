@@ -145,24 +145,18 @@ object IncrementalDedup {
     * the same asset per micro-batch without restaging. */
   def stagedIndex(spark: org.apache.spark.sql.SparkSession, sfDir: String,
       corpus: DataFrame, n: Int = 5, maxDocFreq: Int = 500): CorpusIndex = {
-    import java.nio.file.{Files, Paths}
-    val target = Paths.get(sfDir, "documents.parquet").toAbsolutePath.normalize
-    val mtime = Files.getLastModifiedTime(target).toMillis
     // the CORPUS FRAME's canonicalized plan is part of the key (ADVICE r5
     // #1): two callers slicing the same file differently must not share a
-    // staged index — same plan-keyed discipline as ModelStaging.keyOf
+    // staged index — same plan-keyed discipline as ModelStaging
     val corpusPlan = corpus.queryExecution.analyzed.canonicalized.toString
-    val key = java.security.MessageDigest.getInstance("SHA-256")
-      .digest(s"$target:$mtime:$n:$maxDocFreq|$corpusPlan".getBytes("UTF-8"))
-      .take(8).map("%02x".format(_)).mkString
-    val dir = Paths.get(sys.props("java.io.tmpdir"), s"graft_dedupidx_$key")
-    if (!Files.exists(dir.resolve("_DONE"))) {
+    val dir = graft.Assets.staged("dedupidx",
+        Seq(java.nio.file.Paths.get(sfDir, "documents.parquet")),
+        s"$n:$maxDocFreq|$corpusPlan") { d =>
       val idx = buildIndex(corpus, n, maxDocFreq)
-      idx.md5.write.mode("overwrite").parquet(dir.resolve("md5").toString)
-      idx.shingles.write.mode("overwrite").parquet(dir.resolve("shingles").toString)
-      idx.sizes.write.mode("overwrite").parquet(dir.resolve("sizes").toString)
-      idx.hot.write.mode("overwrite").parquet(dir.resolve("hot").toString)
-      Files.writeString(dir.resolve("_DONE"), "ok")
+      idx.md5.write.mode("overwrite").parquet(d.resolve("md5").toString)
+      idx.shingles.write.mode("overwrite").parquet(d.resolve("shingles").toString)
+      idx.sizes.write.mode("overwrite").parquet(d.resolve("sizes").toString)
+      idx.hot.write.mode("overwrite").parquet(d.resolve("hot").toString)
     }
     CorpusIndex(
       spark.read.parquet(dir.resolve("md5").toString),

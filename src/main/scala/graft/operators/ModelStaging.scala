@@ -1,6 +1,6 @@
 package graft.operators
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
 
 import org.apache.spark.sql.DataFrame
 
@@ -15,9 +15,10 @@ import org.apache.spark.sql.DataFrame
   * files and their mtimes (a regenerated file invalidates), plus a tag
   * carrying the training hyperparameters. Training is deterministic
   * (integer Lloyd, md5-ordered seeds), so the memo is semantically
-  * transparent. Frames with no file lineage (in-memory test data) skip
-  * staging and always train fresh. Artifacts round-trip via Java
-  * serialization to an atomically-moved tmp file; the in-JVM map keeps
+  * transparent. Frames with no local file lineage (in-memory test data)
+  * skip staging and always train fresh. Artifacts round-trip via Java
+  * serialization as staged assets ([[graft.Assets]], whose per-user 0700
+  * root is what makes deserializing them safe); the in-JVM map keeps
   * re-reads free within a sweep.
   */
 object ModelStaging {
@@ -40,41 +41,17 @@ object ModelStaging {
         }
     }.flatten.toArray
 
-  private def keyOf(df: DataFrame, tag: String): Option[String] = {
-    val files = try analyzedInputFiles(df) catch { case _: Throwable => Array.empty[String] }
-    if (files.isEmpty) None
-    else try {
-      val plan = df.queryExecution.analyzed.canonicalized.toString
-      // semanticHash folds LocalRelation DATA into the key (the planted
-      // slice unions a derived local table whose rows the plan STRING
-      // does not print — two corpora differing only in local rows must
-      // not collide)
-      val semHash = df.queryExecution.analyzed.semanticHash()
-      val sig = files.sorted.map { f =>
-        // URI parse inside the guard (ADVICE r5 #2): a path needing URI
-        // escaping (spaces etc.) degrades to fresh training, not a throw
-        val p = Paths.get(new java.net.URI(f).getPath)
-        val m = try Files.getLastModifiedTime(p).toMillis catch { case _: Throwable => -1L }
-        s"$p:$m"
-      }.mkString(";")
-      Some(java.security.MessageDigest.getInstance("SHA-256")
-        .digest(s"$tag|$plan|$semHash|$sig".getBytes("UTF-8"))
-        .take(8).map("%02x".format(_)).mkString)
-    } catch { case _: Throwable => None }
-  }
-
-  /** Per-user private staging directory (0700): artifacts deserialize at
-    * readObject time, so a world-writable shared path would let a
-    * pre-planted file execute code in this JVM (ADVICE r5 #2). */
-  private lazy val stageDir: java.nio.file.Path = {
-    val d = Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_stage_${sys.props.getOrElse("user.name", "anon")}")
-    Files.createDirectories(d)
-    try {
-      import java.nio.file.attribute.PosixFilePermissions
-      Files.setPosixFilePermissions(d, PosixFilePermissions.fromString("rwx------"))
-    } catch { case _: UnsupportedOperationException => () } // non-POSIX FS
-    d
+  /** The frame's input files as local paths, sorted; None (train fresh)
+    * when it has none, or when one is not a local `file:` URI — a key
+    * must cover every input's mtime, and only a local file has one here. */
+  private def localInputs(df: DataFrame): Option[Seq[Path]] = {
+    val uris = analyzedInputFiles(df).sorted.toSeq.map { f =>
+      // ADVICE r5 #2: a listed path that is not a valid URI (an unescaped
+      // space, say) cannot be keyed; it trains fresh instead of throwing
+      try Some(new java.net.URI(f)) catch { case _: java.net.URISyntaxException => None }
+    }
+    if (uris.isEmpty || uris.exists(!_.exists(_.getScheme == "file"))) None
+    else Some(uris.map(u => Paths.get(u.get)))
   }
 
   /** Deserialization allowlist: model artifacts are primitive arrays,
@@ -84,28 +61,25 @@ object ModelStaging {
     "graft.**;scala.**;java.lang.*;java.util.*;maxdepth=20;maxrefs=1000000;!*")
 
   def memo[T <: Serializable](df: DataFrame, tag: String)(build: => T): T =
-    keyOf(df, tag) match {
+    localInputs(df) match {
       case None => build
-      case Some(k) =>
-        mem.get(k) match {
-          case Some(v) => v.asInstanceOf[T]
-          case None =>
-            val file = stageDir.resolve(s"graft_model_$k.bin")
-            val v: T =
-              if (Files.exists(file)) {
-                val in = new java.io.ObjectInputStream(Files.newInputStream(file))
-                in.setObjectInputFilter(deserFilter)
-                try in.readObject().asInstanceOf[T] finally in.close()
-              } else {
-                val built = build
-                val tmp = Files.createTempFile(stageDir, "graft_model", ".bin")
-                val out = new java.io.ObjectOutputStream(Files.newOutputStream(tmp))
-                try out.writeObject(built) finally out.close()
-                Files.move(tmp, file, StandardCopyOption.REPLACE_EXISTING)
-                built
-              }
-            mem.put(k, v.asInstanceOf[AnyRef])
-            v
+      case Some(files) =>
+        val plan = df.queryExecution.analyzed.canonicalized.toString
+        // semanticHash folds LocalRelation DATA into the key (the planted
+        // slice unions a derived local table whose rows the plan STRING
+        // does not print — two corpora differing only in local rows must
+        // not collide)
+        val semHash = df.queryExecution.analyzed.semanticHash()
+        val dir = graft.Assets.staged("model", files, s"$tag|$plan|$semHash") { d =>
+          val built = build
+          val out = new java.io.ObjectOutputStream(Files.newOutputStream(d.resolve("model.bin")))
+          try out.writeObject(built) finally out.close()
+          mem.put(d.toString, built.asInstanceOf[AnyRef])
         }
+        mem.getOrElseUpdate(dir.toString, {
+          val in = new java.io.ObjectInputStream(Files.newInputStream(dir.resolve("model.bin")))
+          in.setObjectInputFilter(deserFilter)
+          try in.readObject() finally in.close()
+        }).asInstanceOf[T]
     }
 }

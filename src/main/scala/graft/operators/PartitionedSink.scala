@@ -1,6 +1,6 @@
 package graft.operators
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Paths
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -29,23 +29,16 @@ import graft.Tables
   */
 object PartitionedSink {
 
-  /** Write-once staging: events re-written partitioned by event_type under
-    * a tmp dir keyed by (source path, mtime) — re-runs and concurrent
-    * suites reuse the finished write (keyed `_SUCCESS` marker). */
-  private[graft] def stagedDir(spark: SparkSession, sfDir: String): String = {
-    val src = Paths.get(sfDir, "events.parquet").toAbsolutePath.normalize
-    val key = java.security.MessageDigest.getInstance("SHA-256")
-      .digest(s"$src:${Files.getLastModifiedTime(src).toMillis}".getBytes("UTF-8"))
-      .take(8).map("%02x".format(_)).mkString
-    val dir = Paths.get(sys.props("java.io.tmpdir"), s"graft_part_$key")
-    if (!Files.exists(dir.resolve("_SUCCESS"))) {
+  /** Write-once staging: events re-written partitioned by event_type as
+    * a staged asset keyed by (source path, mtime) — re-runs and
+    * concurrent suites reuse the finished write. */
+  private[graft] def stagedDir(spark: SparkSession, sfDir: String): String =
+    graft.Assets.staged("part", Seq(Paths.get(sfDir, "events.parquet")), "") { dir =>
       Tables.events(spark, sfDir)
         .write.mode("overwrite")
         .partitionBy("event_type")
         .parquet(dir.toString)
-    }
-    dir.toString
-  }
+    }.toString
 
   /** Daily aggregate of ONE event type read through the partitioned
     * layout: the event_type predicate prunes at planning time. */
@@ -84,30 +77,23 @@ object PartitionedSink {
     * partitions must survive byte-exact, the touched one must show the
     * rewrite — both provable by the batch oracle.
     *
-    * Staging keyed on (source, mtime) with a `_DONE` marker; idempotent
-    * across invocations like the other staged sinks. */
+    * Staged once per (source, mtime); idempotent across invocations
+    * like the other staged sinks. */
   def dynamicOverwriteSummary(spark: SparkSession, sfDir: String): DataFrame = {
     val s = spark.newSession()
     s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    val src = Paths.get(sfDir, "events.parquet").toAbsolutePath.normalize
-    val key = java.security.MessageDigest.getInstance("SHA-256")
-      .digest(s"$src:${Files.getLastModifiedTime(src).toMillis}:dynow".getBytes("UTF-8"))
-      .take(8).map("%02x".format(_)).mkString
-    val dir = Paths.get(sys.props("java.io.tmpdir"), s"graft_dynow_$key")
-    val done = dir.resolve("_GRAFT_DONE")
-    if (!Files.exists(done)) {
+    val dir = graft.Assets.staged("dynow", Seq(Paths.get(sfDir, "events.parquet")), "") { d =>
       val events = Tables.events(s, sfDir)
         .select(col("event_id"), col("user_id"), col("event_type"),
           col("value").cast("decimal(18,2)").as("value"))
       events.write.mode("overwrite").partitionBy("event_type")
-        .parquet(dir.toString)
+        .parquet(d.toString)
       // the incremental batch: clicks redacted (value -> 0); with
       // dynamic mode this replaces ONLY event_type=click
       events.filter(col("event_type") === "click")
         .withColumn("value", lit(java.math.BigDecimal.ZERO).cast("decimal(18,2)"))
         .write.mode("overwrite").partitionBy("event_type")
-        .parquet(dir.toString)
-      Files.writeString(done, "ok")
+        .parquet(d.toString)
     }
     s.read.parquet(dir.toString)
       .groupBy("event_type")

@@ -1,6 +1,6 @@
 package graft.operators
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Paths
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -74,8 +74,8 @@ object Search {
   // economics require a STANDING token-bucketed positional-postings
   // table (the search-engine term dictionary), built once per corpus
   // version and probed by every query. The staged asset is three
-  // parquet tables under one _DONE-committed dir (the BloomSkip staging
-  // discipline, keyed by source path + mtime + format version):
+  // parquet tables under one staged-asset dir ([[graft.Assets]], keyed
+  // by source path + mtime + format version):
   //
   //   postings/bucket=<b>/  (tok, doc_id, pos) — partitioned by
   //       pmod(xxhash64(tok), 64), so a probe for |terms| terms prunes
@@ -103,13 +103,9 @@ object Search {
     * part of the staging key, so slices never collide with the full
     * asset. */
   private[graft] def stagedDirSlice(spark: SparkSession, sfDir: String,
-      pred: Option[String]): String = {
-    val src = Paths.get(sfDir, "documents.parquet").toAbsolutePath.normalize
-    val key = graft.streaming.StagedRuns.contentKey(
-      s"$src:${Files.getLastModifiedTime(src).toMillis}:postings:v2" +
-        pred.fold("")(p => s":slice=$p"))
-    val dir = Paths.get(sys.props("java.io.tmpdir"), s"graft_postings_$key")
-    if (!Files.exists(dir.resolve("_DONE"))) {
+      pred: Option[String]): String =
+    graft.Assets.staged("postings", Seq(Paths.get(sfDir, "documents.parquet")),
+        "v2" + pred.fold("")(p => s":slice=$p")) { dir =>
       val toks = pred.foldLeft(graft.Tables.documents(spark, sfDir))(_.filter(_))
         .select(col("doc_id"),
           regexp_extract_all(lower(col("text")),
@@ -136,10 +132,7 @@ object Search {
         .agg(count(lit(1)).as("n_docs"), sum("dl").as("sum_dl"))
         .coalesce(1).write.mode("overwrite")
         .parquet(dir.resolve("stats").toString)
-      Files.writeString(dir.resolve("_DONE"), "ok")
-    }
-    dir.toString
-  }
+    }.toString
 
   /** Bucket ids of `terms`, computed DRIVER-LOCALLY by invoking the very
     * interpreter Spark's `xxhash64` expression evaluates

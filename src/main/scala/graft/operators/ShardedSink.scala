@@ -1,6 +1,6 @@
 package graft.operators
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Paths
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -29,21 +29,13 @@ import graft.Tables
 object ShardedSink {
 
   /** Write-once staged shard directories keyed by (source, mtime). */
-  private[graft] def stagedDir(spark: SparkSession, sfDir: String, nShards: Int): String = {
-    val src = Paths.get(sfDir, "documents.parquet").toAbsolutePath.normalize
-    val key = java.security.MessageDigest.getInstance("SHA-256")
-      .digest(s"shards:$nShards:$src:${Files.getLastModifiedTime(src).toMillis}"
-        .getBytes("UTF-8"))
-      .take(8).map("%02x".format(_)).mkString
-    val dir = Paths.get(sys.props("java.io.tmpdir"), s"graft_shards_$key")
-    if (!Files.exists(dir.resolve("_SUCCESS"))) {
+  private[graft] def stagedDir(spark: SparkSession, sfDir: String, nShards: Int): String =
+    graft.Assets.staged("shards", Seq(Paths.get(sfDir, "documents.parquet")), s"$nShards") { dir =>
       Tables.documents(spark, sfDir)
         .withColumn("shard", pmod(Dedup.hash64Col(col("text")), lit(nShards)))
         .repartition(nShards, col("shard"))
         .write.mode("overwrite").partitionBy("shard").parquet(dir.toString)
-    }
-    dir.toString
-  }
+    }.toString
 
   /** The shard manifest, computed from the RE-READ shard files:
     * (shard, n_docs, sum_chars, content_sum) — full hash oracle

@@ -579,21 +579,15 @@ object SimilaritySearch {
     * the brute-force top-k truth of both slices is fully deterministic
     * per (fixture path + mtime, queryIds, k) — recomputing two exact
     * 20-probe corpus scans inside every report run is pure waste. Built
-    * ONCE under a `_DONE`-committed dir (the Search.stagedDir staging
-    * discipline: content-keyed tmp dir, commit marker written after the
-    * parquet lands, concurrent/re-runs read the committed asset) and
-    * probed by the registered report. At 100 TB the truth table is
+    * ONCE as a staged asset ([[graft.Assets]]) and probed by the
+    * registered report. At 100 TB the truth table is
     * |slices| * |queryIds| * k id-rows — KBs, while the brute scans it
     * replaces are full-corpus. */
   private[graft] def truthStagedDir(spark: org.apache.spark.sql.SparkSession,
-      sfDir: String, queryIds: Seq[Long], k: Int): String = {
-    import java.nio.file.{Files, Paths}
-    val src = Paths.get(sfDir, "embeddings.parquet").toAbsolutePath.normalize
-    val key = graft.streaming.StagedRuns.contentKey(
-      s"$src:${Files.getLastModifiedTime(src).toMillis}:anntruth:" +
-        s"k=$k:q=${queryIds.mkString(",")}:v1")
-    val dir = Paths.get(sys.props("java.io.tmpdir"), s"graft_anntruth_$key")
-    if (!Files.exists(dir.resolve("_DONE"))) {
+      sfDir: String, queryIds: Seq[Long], k: Int): String =
+    graft.Assets.staged("anntruth",
+        Seq(java.nio.file.Paths.get(sfDir, "embeddings.parquet")),
+        s"k=$k:q=${queryIds.mkString(",")}:v1") { dir =>
       val emb = graft.Tables.embeddings(spark, sfDir)
         .select("vec_id", "embedding")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -606,19 +600,15 @@ object SimilaritySearch {
         .select(lit("planted").as("slice"), col("query_id"), col("neighbor_id"))
       bg.unionAll(pl).coalesce(1).write.mode("overwrite")
         .parquet(dir.resolve("truth").toString)
-      Files.writeString(dir.resolve("_DONE"), "ok")
-    }
-    dir.toString
-  }
+    }.toString
 
   /** Standing background-slice INDEX assets for the recall report
     * (VERDICT r14 next #1): the three bucketed methods' corpus-side
     * artifacts — LSH bucket signatures, IVF cell assignments, IVF-PQ
     * codes — are deterministic per (fixture path + mtime, index params):
     * exactly the standing serving indexes a deployment maintains next to
-    * the corpus (the vector twin of Search's postings). Built ONCE under
-    * a `_DONE`-committed dir (content-keyed tmp dir, marker written after
-    * the parquet lands) and probed by the registered report; the PLANTED
+    * the corpus (the vector twin of Search's postings). Built ONCE as a
+    * staged asset and probed by the registered report; the PLANTED
     * slice's builds stay live — its corpus embeds the probe set, which a
     * standing index must not. At 100 TB this turns the report from six
     * full-corpus index builds into three probe joins plus one
@@ -627,14 +617,10 @@ object SimilaritySearch {
     * mtime), so they are not duplicated here. */
   private[graft] def annIndexStagedDir(
       spark: org.apache.spark.sql.SparkSession, sfDir: String,
-      nTables: Int, bitsPerTable: Int, seed: Long): String = {
-    import java.nio.file.{Files, Paths}
-    val src = Paths.get(sfDir, "embeddings.parquet").toAbsolutePath.normalize
-    val key = graft.streaming.StagedRuns.contentKey(
-      s"$src:${Files.getLastModifiedTime(src).toMillis}:annindex:" +
-        s"t=$nTables:b=$bitsPerTable:s=$seed:v1")
-    val dir = Paths.get(sys.props("java.io.tmpdir"), s"graft_annindex_$key")
-    if (!Files.exists(dir.resolve("_DONE"))) {
+      nTables: Int, bitsPerTable: Int, seed: Long): String =
+    graft.Assets.staged("annindex",
+        Seq(java.nio.file.Paths.get(sfDir, "embeddings.parquet")),
+        s"t=$nTables:b=$bitsPerTable:s=$seed:v1") { dir =>
       val emb = graft.Tables.embeddings(spark, sfDir)
         .select("vec_id", "embedding")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -650,10 +636,7 @@ object SimilaritySearch {
       Quantization.codedTable(emb, coarse, codebooks, dim)
         .write.mode("overwrite").parquet(dir.resolve("pq_coded").toString)
       emb.unpersist()
-      Files.writeString(dir.resolve("_DONE"), "ok")
-    }
-    dir.toString
-  }
+    }.toString
 
   /** [[annRecallReport]] probing the staged exact-truth asset AND the
     * staged background-slice indexes — identical rows (every staged table

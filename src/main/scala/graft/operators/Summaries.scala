@@ -1,6 +1,6 @@
 package graft.operators
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Paths
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -28,16 +28,11 @@ object Summaries {
   /** Build + register the (event_type, day) count rollup; returns the
     * summary path. Idempotent per (source, mtime). */
   def ensureEventsDailySummary(spark: SparkSession, sfDir: String): String = {
-    val src = Paths.get(sfDir, "events.parquet").toAbsolutePath.normalize
-    val key = java.security.MessageDigest.getInstance("SHA-256")
-      .digest(s"evsum:$src:${Files.getLastModifiedTime(src).toMillis}".getBytes("UTF-8"))
-      .take(8).map("%02x".format(_)).mkString
-    val dir = Paths.get(sys.props("java.io.tmpdir"), s"graft_evsum_$key")
-    if (!Files.exists(dir.resolve("_SUCCESS"))) {
+    val dir = graft.Assets.staged("evsum", Seq(Paths.get(sfDir, "events.parquet")), "") { d =>
       eventsWithDay(spark, sfDir)
         .groupBy("event_type", "day")
         .agg(count(lit(1)).as("cnt"))
-        .write.mode("overwrite").parquet(dir.toString)
+        .write.mode("overwrite").parquet(d.toString)
     }
     SummaryRewrite.register(eventsWithDay(spark, sfDir),
       SummaryRewrite.Entry(dir.toString, Seq("event_type", "day"),

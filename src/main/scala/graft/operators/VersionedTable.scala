@@ -74,14 +74,8 @@ object VersionedTable {
 
   /** v0 = orders snapshot; v1..v3 = after the update / delete / insert
     * CDC batches (the stream_upsert construction, one commit each). */
-  private[graft] def stagedBase(spark: SparkSession, sfDir: String): Path = {
-    val src = Paths.get(sfDir, "orders.parquet").toAbsolutePath.normalize
-    val key = java.security.MessageDigest.getInstance("SHA-256")
-      .digest(s"vtable:$src:${Files.getLastModifiedTime(src).toMillis}".getBytes("UTF-8"))
-      .take(8).map("%02x".format(_)).mkString
-    val base = Paths.get(sys.props("java.io.tmpdir"), s"graft_vtable_$key")
-    if (!Files.exists(base.resolve("_DONE"))) {
-      Files.createDirectories(base)
+  private[graft] def stagedBase(spark: SparkSession, sfDir: String): Path =
+    graft.Assets.staged("vtable", Seq(Paths.get(sfDir, "orders.parquet")), "") { base =>
       val snap = Tables.orders(spark, sfDir)
         .select(orderCols.map(col): _*)
       commit(base, snap)
@@ -101,10 +95,7 @@ object VersionedTable {
           readCurrent(spark, base), changes, "o_orderkey")
         commit(base, merged)
       }
-      Files.writeString(base.resolve("_DONE"), "ok")
     }
-    base
-  }
 
   // ---------------------------------------------------------- queries
   private def rowHash = conv(substring(md5(concat_ws("|",

@@ -45,13 +45,8 @@ object ZoneMaps {
     * epoch micros, the clustering key) + the analysis columns, written
     * once per (source file, mtime) as [[NFiles]] range-disjoint files
     * with a footer-derived manifest alongside. */
-  private[graft] def stagedDir(spark: SparkSession, sfDir: String): String = {
-    val src = Paths.get(sfDir, "events.parquet").toAbsolutePath.normalize
-    val key = java.security.MessageDigest.getInstance("SHA-256")
-      .digest(s"$src:${Files.getLastModifiedTime(src).toMillis}:v1".getBytes("UTF-8"))
-      .take(8).map("%02x".format(_)).mkString
-    val dir = Paths.get(sys.props("java.io.tmpdir"), s"graft_zonemap_$key")
-    if (!Files.exists(dir.resolve("_MANIFEST.json"))) {
+  private[graft] def stagedDir(spark: SparkSession, sfDir: String): String =
+    graft.Assets.staged("zonemap", Seq(Paths.get(sfDir, "events.parquet")), "v1") { dir =>
       Tables.events(spark, sfDir)
         .select(expr("unix_micros(ts)").as(SkipCol),
           col("event_type"), col("value"))
@@ -63,9 +58,7 @@ object ZoneMaps {
         s"""{"file":"$f","min":$lo,"max":$hi}"""
       }.mkString("[", ",", "]")
       Files.writeString(dir.resolve("_MANIFEST.json"), json)
-    }
-    dir.toString
-  }
+    }.toString
 
   /** (fileName, min, max) for the skip column, from parquet footer
     * statistics only — no row is read. Multi-row-group files fold their

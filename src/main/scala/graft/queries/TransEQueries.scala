@@ -409,7 +409,7 @@ object TransEQueries {
     * agreement with the float eval. */
   def transeEvalQuantized(spark: SparkSession, dir: String): DataFrame = {
     val (fit, test) = fitted(spark, dir)
-    QuantizedEval.run(spark, dir, fit.model, test)
+    QuantizedEval.run(spark, fit.model, test)
   }
 
   /** [[transeEvalQuantized]] under the FILTERED protocol — the oracle
@@ -419,7 +419,7 @@ object TransEQueries {
   def transeEvalQuantizedFiltered(spark: SparkSession, dir: String): DataFrame = {
     val (fit, test) = fitted(spark, dir)
     val (encodedAll, _, _, _, _) = encodedKg(spark, dir)
-    QuantizedEval.runFiltered(spark, dir, fit.model, test, encodedAll)
+    QuantizedEval.runFiltered(spark, fit.model, test, encodedAll)
   }
 
   /** Link-prediction SERVING: top-5 NOVEL tail suggestions for the 10
@@ -430,7 +430,7 @@ object TransEQueries {
   def transeLinkSuggest(spark: SparkSession, dir: String): DataFrame = {
     val (fit, test) = fitted(spark, dir)
     val (encodedAll, _, _, _, _) = encodedKg(spark, dir)
-    QuantizedEval.suggest(spark, dir, fit.model, test, encodedAll)
+    QuantizedEval.suggest(spark, fit.model, test, encodedAll)
   }
 
   // ----------------------------------------- transe_entity_embeddings

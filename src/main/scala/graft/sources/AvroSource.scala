@@ -43,8 +43,8 @@ import graft.Tables
   *
   * Writer: distributed `foreachPartition` — each task encodes its
   * partition into `part-NNNNN.avro` with deflate compression. This is the
-  * fixture/staging sink (local filesystem, driver-written _SUCCESS
-  * marker); a production table write would layer the
+  * fixture/staging sink (local filesystem; the staged twins commit
+  * through [[graft.Assets]]); a production table write would layer the
   * [[graft.operators.VersionedTable]] commit protocol on top, exactly as
   * the parquet sinks do.
   *
@@ -340,7 +340,7 @@ object AvroSource {
       // task-commit protocol (ADVICE r9 #4): encode into an attempt-
       // suffixed temp file and atomically rename on task success, so a
       // retried or speculative attempt can never leave a truncated
-      // container under the final name for _SUCCESS to bless
+      // container under the final name
       val attempt = Option(org.apache.spark.TaskContext.get())
         .map(_.taskAttemptId()).getOrElse(0L)
       val finalFile = new File(dir, f"part-$idx%05d.avro")
@@ -377,7 +377,6 @@ object AvroSource {
       } finally { w.close(); Files.deleteIfExists(tmpFile.toPath) }
       Iterator.single(n)
     }.collect() // materialize the write; per-task row counts back
-    Files.write(d.resolve("_SUCCESS"), Array.emptyByteArray)
   }
 
   /** External (Row-side) value → Avro generic value, recursive so array
@@ -458,37 +457,23 @@ object AvroSource {
   // ------------------------------------------------- staged documents twin
   /** Write-once staging of the documents table as Avro, keyed by
     * (source path, mtime) like the ORC/JSONL/CSV twins. */
-  private[graft] def stagedDir(spark: SparkSession, sfDir: String): String = {
-    val src = Paths.get(sfDir, "documents.parquet").toAbsolutePath.normalize
-    val key = java.security.MessageDigest.getInstance("SHA-256")
-      .digest(s"avro:$src:${Files.getLastModifiedTime(src).toMillis}".getBytes("UTF-8"))
-      .take(8).map("%02x".format(_)).mkString
-    val dir = Paths.get(sys.props("java.io.tmpdir"), s"graft_avro_$key")
-    if (!Files.exists(dir.resolve("_SUCCESS"))) {
+  private[graft] def stagedDir(spark: SparkSession, sfDir: String): String =
+    graft.Assets.staged("avro", Seq(Paths.get(sfDir, "documents.parquet")), "") { dir =>
       write(Tables.documents(spark, sfDir), dir.toString)
-    }
-    dir.toString
-  }
+    }.toString
 
   /** Write-once Avro staging of the EVENTS table with the logical-type
     * columns a landing format actually carries: `ts` as timestamp-micros
     * and `amount` as decimal(12,2) (VERDICT r9 #3 — the reference-shaped
     * event-data gap). Keyed by (source path, mtime) like the documents
     * twin. */
-  private[graft] def stagedEventsDir(spark: SparkSession, sfDir: String): String = {
-    val src = Paths.get(sfDir, "events.parquet").toAbsolutePath.normalize
-    val key = java.security.MessageDigest.getInstance("SHA-256")
-      .digest(s"avroev:$src:${Files.getLastModifiedTime(src).toMillis}".getBytes("UTF-8"))
-      .take(8).map("%02x".format(_)).mkString
-    val dir = Paths.get(sys.props("java.io.tmpdir"), s"graft_avro_ev_$key")
-    if (!Files.exists(dir.resolve("_SUCCESS"))) {
+  private[graft] def stagedEventsDir(spark: SparkSession, sfDir: String): String =
+    graft.Assets.staged("avro_ev", Seq(Paths.get(sfDir, "events.parquet")), "") { dir =>
       write(Tables.events(spark, sfDir)
         .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
           col("value").cast("decimal(12,2)").as("amount")),
         dir.toString)
-    }
-    dir.toString
-  }
+    }.toString
 
   /** Logical-type round trip: events → Avro (timestamp-micros + decimal
     * bytes) → scan → aggregate. Any micros truncation moves the min/max
@@ -517,18 +502,11 @@ object AvroSource {
 
   /** Write-once Avro staging of the EMBEDDINGS table — the ARRAY-typed
     * landing case (vec_id, embedding array<float>, label). */
-  private[graft] def stagedEmbeddingsDir(spark: SparkSession, sfDir: String): String = {
-    val src = Paths.get(sfDir, "embeddings.parquet").toAbsolutePath.normalize
-    val key = java.security.MessageDigest.getInstance("SHA-256")
-      .digest(s"avroemb:$src:${Files.getLastModifiedTime(src).toMillis}".getBytes("UTF-8"))
-      .take(8).map("%02x".format(_)).mkString
-    val dir = Paths.get(sys.props("java.io.tmpdir"), s"graft_avro_emb_$key")
-    if (!Files.exists(dir.resolve("_SUCCESS"))) {
+  private[graft] def stagedEmbeddingsDir(spark: SparkSession, sfDir: String): String =
+    graft.Assets.staged("avro_emb", Seq(Paths.get(sfDir, "embeddings.parquet")), "") { dir =>
       write(Tables.embeddings(spark, sfDir)
         .select(col("vec_id"), col("embedding"), col("label")), dir.toString)
-    }
-    dir.toString
-  }
+    }.toString
 
   /** Array round trip: embeddings → Avro ARRAY(float) → scan → per-label
     * aggregate with a QUANTIZED element checksum. floor(x·2^20) on a
@@ -563,22 +541,15 @@ object AvroSource {
   /** Write-once Avro staging of events re-shaped with a NESTED payload
     * record — (event_id, ts, meta STRUCT(event_type, amount, user_id)) —
     * the typed sub-object shape real event buses land. */
-  private[graft] def stagedNestedDir(spark: SparkSession, sfDir: String): String = {
-    val src = Paths.get(sfDir, "events.parquet").toAbsolutePath.normalize
-    val key = java.security.MessageDigest.getInstance("SHA-256")
-      .digest(s"avronest:$src:${Files.getLastModifiedTime(src).toMillis}".getBytes("UTF-8"))
-      .take(8).map("%02x".format(_)).mkString
-    val dir = Paths.get(sys.props("java.io.tmpdir"), s"graft_avro_nest_$key")
-    if (!Files.exists(dir.resolve("_SUCCESS"))) {
+  private[graft] def stagedNestedDir(spark: SparkSession, sfDir: String): String =
+    graft.Assets.staged("avro_nest", Seq(Paths.get(sfDir, "events.parquet")), "") { dir =>
       write(Tables.events(spark, sfDir)
         .select(col("event_id"), col("ts"),
           struct(col("event_type"),
             col("value").cast("decimal(12,2)").as("amount"),
             col("user_id")).as("meta")),
         dir.toString)
-    }
-    dir.toString
-  }
+    }.toString
 
   /** Nested-record round trip: the aggregate reads every meta field back
     * THROUGH the struct (decimal-exact sums, micros max), so a field
@@ -606,20 +577,14 @@ object AvroSource {
     * generation files (doc_id % 10 < 8) were written BEFORE the producer
     * added the `lang` column; new-generation files carry it. The split
     * is deterministic on doc_id so DuckDB replays which rows null-fill. */
-  private[graft] def stagedEvolvedDir(spark: SparkSession, sfDir: String): String = {
-    val src = Paths.get(sfDir, "documents.parquet").toAbsolutePath.normalize
-    val key = java.security.MessageDigest.getInstance("SHA-256")
-      .digest(s"avroevo:$src:${Files.getLastModifiedTime(src).toMillis}".getBytes("UTF-8"))
-      .take(8).map("%02x".format(_)).mkString
-    val dir = Paths.get(sys.props("java.io.tmpdir"), s"graft_avro_evo_$key")
-    if (!Files.exists(dir.resolve("_SUCCESS"))) {
+  private[graft] def stagedEvolvedDir(spark: SparkSession, sfDir: String): String =
+    graft.Assets.staged("avro_evo", Seq(Paths.get(sfDir, "documents.parquet")), "") { dir =>
       val docs = Tables.documents(spark, sfDir)
       val genDirs = Seq(
         ("g1", docs.filter(col("doc_id") % 10 < 8)
           .select("doc_id", "text", "source", "n_chars")),
         ("g2", docs.filter(col("doc_id") % 10 >= 8)
           .select("doc_id", "text", "lang", "source", "n_chars")))
-      Files.createDirectories(dir)
       genDirs.foreach { case (gen, df) =>
         val tmp = dir.resolve(s"tmp_$gen")
         write(df, tmp.toString)
@@ -636,10 +601,7 @@ object AvroSource {
         finally rest.close()
         Files.deleteIfExists(tmp)
       }
-      Files.write(dir.resolve("_SUCCESS"), Array.emptyByteArray)
-    }
-    dir.toString
-  }
+    }.toString
 
   /** Evolved-directory read: both generations in ONE scan through the
     * merged schema — old rows null-fill `lang`, new rows carry it, and

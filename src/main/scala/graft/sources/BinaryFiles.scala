@@ -34,16 +34,10 @@ object BinaryFiles {
   /** Which docs stage as binary files (bounded fixture at any sf). */
   private val Stride = 5
 
-  private[graft] def stagedDir(spark: SparkSession, sfDir: String): String = {
-    val src = Paths.get(sfDir, "documents.parquet").toAbsolutePath.normalize
-    val key = java.security.MessageDigest.getInstance("SHA-256")
-      // v2 = staging rule version (empty/null blobs excluded): a rule
-      // change must bust the stage or a reused dir silently diverges
-      .digest(s"binfiles:v2:$src:${Files.getLastModifiedTime(src).toMillis}".getBytes("UTF-8"))
-      .take(8).map("%02x".format(_)).mkString
-    val dir = Paths.get(sys.props("java.io.tmpdir"), s"graft_binfiles_$key")
-    if (!Files.exists(dir.resolve("_DONE"))) {
-      Files.createDirectories(dir)
+  private[graft] def stagedDir(spark: SparkSession, sfDir: String): String =
+    // v2 = staging rule version (empty/null blobs excluded): a rule
+    // change must bust the stage or a reused dir silently diverges
+    graft.Assets.staged("binfiles", Seq(Paths.get(sfDir, "documents.parquet")), "v2") { dir =>
       val dirStr = dir.toString
       // executor-side writes (local-FS staging; a cluster points this at
       // DFS) — one file per row, names carry the key so reruns are moot
@@ -61,10 +55,7 @@ object BinaryFiles {
             Files.write(p, r.getString(1).getBytes("UTF-8"))
           }
         }
-      Files.writeString(dir.resolve("_DONE"), "ok")
-    }
-    dir.toString
-  }
+    }.toString
 
   /** The source contract: list + read the staged blob directory, emit
     * one (name, bytes, content_hash) row per file. `length` comes from

@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Paths
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -28,13 +28,8 @@ object CsvLines {
 
   /** Write-once staging of the documents table as CSV, keyed by
     * (source path, mtime) like [[JsonLines.stagedDir]]. */
-  private[graft] def stagedDir(spark: SparkSession, sfDir: String): String = {
-    val src = Paths.get(sfDir, "documents.parquet").toAbsolutePath.normalize
-    val key = java.security.MessageDigest.getInstance("SHA-256")
-      .digest(s"csv:v3:$src:${Files.getLastModifiedTime(src).toMillis}".getBytes("UTF-8"))
-      .take(8).map("%02x".format(_)).mkString
-    val dir = Paths.get(sys.props("java.io.tmpdir"), s"graft_csv_$key")
-    if (!Files.exists(dir.resolve("_SUCCESS"))) {
+  private[graft] def stagedDir(spark: SparkSession, sfDir: String): String =
+    graft.Assets.staged("csv", Seq(Paths.get(sfDir, "documents.parquet")), "v3") { dir =>
       // the WRITE path defaults ignoreLeading/TrailingWhiteSpace to TRUE
       // (silent field trimming — a lossy default the checksum would catch
       // only on data that HAS edge whitespace); pin both off explicitly
@@ -50,9 +45,7 @@ object CsvLines {
         .option("ignoreLeadingWhiteSpace", "false")
         .option("ignoreTrailingWhiteSpace", "false")
         .csv(dir.toString)
-    }
-    dir.toString
-  }
+    }.toString
 
   /** Round-trip proof: documents -> CSV -> explicit-schema FAILFAST read
     * -> per-(lang, source) aggregate with an md5-derived content

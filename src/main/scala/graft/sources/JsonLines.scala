@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Paths
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -36,17 +36,10 @@ object JsonLines {
 
   /** Write-once staging of the documents table as JSONL, keyed by
     * (source path, mtime) like PartitionedSink. */
-  private[graft] def stagedDir(spark: SparkSession, sfDir: String): String = {
-    val src = Paths.get(sfDir, "documents.parquet").toAbsolutePath.normalize
-    val key = java.security.MessageDigest.getInstance("SHA-256")
-      .digest(s"jsonl:$src:${Files.getLastModifiedTime(src).toMillis}".getBytes("UTF-8"))
-      .take(8).map("%02x".format(_)).mkString
-    val dir = Paths.get(sys.props("java.io.tmpdir"), s"graft_jsonl_$key")
-    if (!Files.exists(dir.resolve("_SUCCESS"))) {
+  private[graft] def stagedDir(spark: SparkSession, sfDir: String): String =
+    graft.Assets.staged("jsonl", Seq(Paths.get(sfDir, "documents.parquet")), "") { dir =>
       Tables.documents(spark, sfDir).write.mode("overwrite").json(dir.toString)
-    }
-    dir.toString
-  }
+    }.toString
 
   /** Round-trip proof: documents -> JSONL -> explicit-schema read ->
     * per-(lang, source) aggregate including an md5-derived content

@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Paths
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -43,13 +43,8 @@ object JsonQuarantine {
 
   /** Write-once staging: documents as JSONL with deterministically
     * corrupted lines (closing brace chopped on doc_id % 37 == 0). */
-  private[graft] def stagedDir(spark: SparkSession, sfDir: String): String = {
-    val src = Paths.get(sfDir, "documents.parquet").toAbsolutePath.normalize
-    val key = java.security.MessageDigest.getInstance("SHA-256")
-      .digest(s"jsonq:v1:$src:${Files.getLastModifiedTime(src).toMillis}".getBytes("UTF-8"))
-      .take(8).map("%02x".format(_)).mkString
-    val dir = Paths.get(sys.props("java.io.tmpdir"), s"graft_jsonq_$key")
-    if (!Files.exists(dir.resolve("_SUCCESS"))) {
+  private[graft] def stagedDir(spark: SparkSession, sfDir: String): String =
+    graft.Assets.staged("jsonq", Seq(Paths.get(sfDir, "documents.parquet")), "v1") { dir =>
       Tables.documents(spark, sfDir)
         .select(col("doc_id"), to_json(struct(
           col("doc_id"), col("text"), col("lang"), col("source"),
@@ -59,9 +54,7 @@ object JsonQuarantine {
             expr("substring(j, 1, length(j) - 1)"))
             .otherwise(col("j")).as("value"))
         .write.mode("overwrite").text(dir.toString)
-    }
-    dir.toString
-  }
+    }.toString
 
   /** PERMISSIVE read + routing split. Returns (clean, quarantine,
     * release): both frames read through a cached parse (the SPARK-21610

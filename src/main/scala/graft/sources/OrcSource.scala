@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Paths
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -19,17 +19,10 @@ object OrcSource {
 
   /** Write-once staging of the documents table as ORC, keyed by
     * (source path, mtime) like the other staged sources. */
-  private[graft] def stagedDir(spark: SparkSession, sfDir: String): String = {
-    val src = Paths.get(sfDir, "documents.parquet").toAbsolutePath.normalize
-    val key = java.security.MessageDigest.getInstance("SHA-256")
-      .digest(s"orc:$src:${Files.getLastModifiedTime(src).toMillis}".getBytes("UTF-8"))
-      .take(8).map("%02x".format(_)).mkString
-    val dir = Paths.get(sys.props("java.io.tmpdir"), s"graft_orc_$key")
-    if (!Files.exists(dir.resolve("_SUCCESS"))) {
+  private[graft] def stagedDir(spark: SparkSession, sfDir: String): String =
+    graft.Assets.staged("orc", Seq(Paths.get(sfDir, "documents.parquet")), "") { dir =>
       Tables.documents(spark, sfDir).write.mode("overwrite").orc(dir.toString)
-    }
-    dir.toString
-  }
+    }.toString
 
   /** Round-trip proof with the same output contract (and therefore the
     * same oracle) as the JSONL and CSV round trips: any encode/decode

@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Paths
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -38,13 +38,8 @@ object SchemaEvolution {
 
   /** Write-once staging: one directory holding v1 (2-column) and v2
     * (3-column) parquet parts, keyed by (source path, mtime). */
-  private[graft] def stagedDir(spark: SparkSession, sfDir: String): String = {
-    val src = Paths.get(sfDir, "events.parquet").toAbsolutePath.normalize
-    val key = java.security.MessageDigest.getInstance("SHA-256")
-      .digest(s"schemaevo:$src:${Files.getLastModifiedTime(src).toMillis}".getBytes("UTF-8"))
-      .take(8).map("%02x".format(_)).mkString
-    val dir = Paths.get(sys.props("java.io.tmpdir"), s"graft_schemaevo_$key")
-    if (!Files.exists(dir.resolve("_DONE"))) {
+  private[graft] def stagedDir(spark: SparkSession, sfDir: String): String =
+    graft.Assets.staged("schemaevo", Seq(Paths.get(sfDir, "events.parquet")), "") { dir =>
       val daily = Tables.events(spark, sfDir)
         .select(expr("unix_micros(ts) DIV 1000000 DIV 86400").as("day_id"),
           col("user_id"))
@@ -57,10 +52,7 @@ object SchemaEvolution {
       daily.filter(col("day_id") >= splitDay)
         .select("day_id", "n_events", "n_users") // v2: evolved
         .write.mode("overwrite").parquet(s"$dir/v2")
-      Files.createFile(dir.resolve("_DONE"))
-    }
-    dir.toString
-  }
+    }.toString
 
   /** The merged read: old rows surface n_users as the -1 sentinel. */
   def evolvedRead(spark: SparkSession, sfDir: String): DataFrame = {

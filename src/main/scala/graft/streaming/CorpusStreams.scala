@@ -1,6 +1,6 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -51,17 +51,9 @@ object CorpusStreams {
     // memoized replay keyed on the input file's identity, the same
     // discipline as restartRecoveryDedup: the streaming run is the
     // evidence; re-invocations read the completed sink
-    val target = Paths.get(sfDir, "documents.parquet").toAbsolutePath.normalize
-    val mtime = Files.getLastModifiedTime(target).toMillis
-    val key = StagedRuns.contentKey(s"$target:$mtime:$n:$tau:$maxDocFreq")
-    val base = Paths.get(sys.props("java.io.tmpdir"), s"graft_streamdedup_$key")
-    val (src, out, chk) = (base.resolve("src"), base.resolve("out"), base.resolve("chk"))
-    val done = base.resolve("_DONE")
-
-    if (!Files.exists(done)) {
-      // a crash-interrupted previous attempt left a poisoned half-state:
-      // wipe and rebuild (StagedRuns scaladoc — _DONE is the commit point)
-      StagedRuns.freshBase(base, done)
+    val base = graft.Assets.staged("streamdedup",
+        Seq(Paths.get(sfDir, "documents.parquet")), s"$n:$tau:$maxDocFreq") { base =>
+      val (src, out, chk) = (base.resolve("src"), base.resolve("out"), base.resolve("chk"))
       Files.createDirectories(src)
       // four disjoint arrival files (doc_id % 40 ∈ {7,17,27,37}) — the
       // stream sees them as four micro-batches in file order
@@ -85,9 +77,8 @@ object CorpusStreams {
         .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
         .start()
       try q.processAllAvailable() finally q.stop()
-      Files.writeString(done, "ok")
     }
-    spark.read.parquet(out.toString).orderBy("doc_id")
+    spark.read.parquet(base.resolve("out").toString).orderBy("doc_id")
   }
 
   /** Shared with the batch twin — see the header's order-insensitivity
@@ -112,18 +103,9 @@ object CorpusStreams {
     val corpus = emb.filter(col("vec_id") % 10 =!= 7)
     val arrivals = emb.filter(col("vec_id") % 10 === 7)
 
-    val target = Paths.get(sfDir, "embeddings.parquet").toAbsolutePath.normalize
-    val mtime = Files.getLastModifiedTime(target).toMillis
-    val key = java.security.MessageDigest.getInstance("SHA-256")
-      .digest(s"$target:$mtime:annprobe:$nCells:$nProbe:$k:$iters".getBytes("UTF-8"))
-      .take(8).map("%02x".format(_)).mkString
-    val base = Paths.get(sys.props("java.io.tmpdir"), s"graft_annprobe_$key")
-    val (src, out, chk) = (base.resolve("src"), base.resolve("out"), base.resolve("chk"))
-    val done = base.resolve("_DONE")
-
-    if (!Files.exists(done)) {
-      // crash discipline: _DONE is the commit point, a half-state is wiped
-      StagedRuns.freshBase(base, done)
+    val base = graft.Assets.staged("annprobe", Seq(Paths.get(sfDir, "embeddings.parquet")),
+        s"$nCells:$nProbe:$k:$iters") { base =>
+      val (src, out, chk) = (base.resolve("src"), base.resolve("out"), base.resolve("chk"))
       val centroids = IvfAnn.trainCentroids(corpus, nCells, iters)
       val assigned = IvfAnn.assign(corpus, centroids).persist()
       assigned.count()
@@ -148,9 +130,8 @@ object CorpusStreams {
         .start()
       try q.processAllAvailable() finally q.stop()
       assigned.unpersist()
-      Files.writeString(done, "ok")
     }
-    spark.read.parquet(out.toString).orderBy("query_id", "rank")
+    spark.read.parquet(base.resolve("out").toString).orderBy("query_id", "rank")
   }
 
   def streamingAnnProbeSql(nCells: Int = 16, nProbe: Int = 4, k: Int = 5,
@@ -185,21 +166,14 @@ object CorpusStreams {
     val arrivals = emb.filter(col("vec_id") % 10 === 5)
     val queries = emb.filter(col("vec_id") % 10 === 7)
 
-    val target = Paths.get(sfDir, "embeddings.parquet").toAbsolutePath.normalize
-    val mtime = Files.getLastModifiedTime(target).toMillis
-    val base = Paths.get(sys.props("java.io.tmpdir"), "graft_annmaint_" +
-      StagedRuns.contentKey(s"$target:$mtime:annmaint:$nCells:$nProbe:$k:$iters:v1"))
-    val (src, baseIdx, delta, chk) = (base.resolve("src"),
-      base.resolve("base_idx"), base.resolve("delta"), base.resolve("chk"))
-    val done = base.resolve("_DONE")
-
     // the frozen quantizer: deterministic integer Lloyd over the base
     // slice, memoized by ModelStaging — identical on build and probe
     val centroids = IvfAnn.trainCentroids(baseSlice, nCells, iters)
 
-    if (!Files.exists(done)) {
-      // crash discipline: _DONE is the commit point, a half-state is wiped
-      StagedRuns.freshBase(base, done)
+    val base = graft.Assets.staged("annmaint", Seq(Paths.get(sfDir, "embeddings.parquet")),
+        s"$nCells:$nProbe:$k:$iters:v1") { base =>
+      val (src, baseIdx, delta, chk) = (base.resolve("src"),
+        base.resolve("base_idx"), base.resolve("delta"), base.resolve("chk"))
       // stage the base assignment once — the standing cell index,
       // partitioned by cell so probes prune to nProbe dirs
       IvfAnn.assign(baseSlice, centroids)
@@ -226,7 +200,6 @@ object CorpusStreams {
         .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
         .start()
       try q.processAllAvailable() finally { q.stop(); q.awaitTermination() }
-      Files.writeString(done, "ok")
     }
     val deltaSchema = StructType(Seq(
       StructField("vec_id", LongType),
@@ -234,9 +207,9 @@ object CorpusStreams {
         org.apache.spark.sql.types.ArrayType(
           org.apache.spark.sql.types.FloatType)),
       StructField("cell", org.apache.spark.sql.types.IntegerType)))
-    val assignedAll = spark.read.parquet(baseIdx.toString)
+    val assignedAll = spark.read.parquet(base.resolve("base_idx").toString)
       .select("vec_id", "embedding", "cell")
-      .unionByName(spark.read.schema(deltaSchema).parquet(delta.toString)
+      .unionByName(spark.read.schema(deltaSchema).parquet(base.resolve("delta").toString)
         .select("vec_id", "embedding", "cell"))
     IvfAnn.probeAssigned(assignedAll, centroids, queries, nProbe, k)
       .orderBy("query_id", "rank")
@@ -267,18 +240,9 @@ object CorpusStreams {
     val corpus = docs.filter(col("doc_id") % 10 =!= 7)
     val arrivals = docs.filter(col("doc_id") % 10 === 7)
 
-    val target = Paths.get(sfDir, "documents.parquet").toAbsolutePath.normalize
-    val mtime = Files.getLastModifiedTime(target).toMillis
-    val key = java.security.MessageDigest.getInstance("SHA-256")
-      .digest(s"$target:$mtime:dsir:$targetSource:$buckets".getBytes("UTF-8"))
-      .take(8).map("%02x".format(_)).mkString
-    val base = Paths.get(sys.props("java.io.tmpdir"), s"graft_streamdsir_$key")
-    val (src, out, chk) = (base.resolve("src"), base.resolve("out"), base.resolve("chk"))
-    val done = base.resolve("_DONE")
-
-    if (!Files.exists(done)) {
-      // crash discipline: _DONE is the commit point, a half-state is wiped
-      StagedRuns.freshBase(base, done)
+    val base = graft.Assets.staged("streamdsir", Seq(Paths.get(sfDir, "documents.parquet")),
+        s"$targetSource:$buckets") { base =>
+      val (src, out, chk) = (base.resolve("src"), base.resolve("out"), base.resolve("chk"))
       val model = ImportanceSampling.bucketModel(corpus, targetSource, buckets)
         .persist()
       model.count()
@@ -303,13 +267,12 @@ object CorpusStreams {
         }
         .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
         .start()
-      // stop() is asynchronous — await termination before _DONE/cleanup,
-      // or a re-invocation's freshBase races the dying query's checkpoint
+      // stop() is asynchronous — await termination before the commit,
+      // or a rebuild's wipe races the dying query's checkpoint
       try q.processAllAvailable() finally { q.stop(); q.awaitTermination() }
       model.unpersist()
-      Files.writeString(done, "ok")
     }
-    spark.read.parquet(out.toString).orderBy("doc_id")
+    spark.read.parquet(base.resolve("out").toString).orderBy("doc_id")
   }
 
   def streamingDsirScoreSql(targetSource: String = "src1",
@@ -341,16 +304,9 @@ object CorpusStreams {
     val (evalDocs, train) = Decontaminate.evalSplit(docs, evalRate)
     val arrivals = train.filter(col("doc_id") % 10 === 7)
 
-    val target = Paths.get(sfDir, "documents.parquet").toAbsolutePath.normalize
-    val mtime = Files.getLastModifiedTime(target).toMillis
-    val key = StagedRuns.contentKey(s"$target:$mtime:decon:$n:$evalRate")
-    val base = Paths.get(sys.props("java.io.tmpdir"), s"graft_streamdecon_$key")
-    val (src, out, chk) = (base.resolve("src"), base.resolve("out"), base.resolve("chk"))
-    val done = base.resolve("_DONE")
-
-    if (!Files.exists(done)) {
-      // crash discipline: _DONE is the commit point, a half-state is wiped
-      StagedRuns.freshBase(base, done)
+    val base = graft.Assets.staged("streamdecon", Seq(Paths.get(sfDir, "documents.parquet")),
+        s"$n:$evalRate") { base =>
+      val (src, out, chk) = (base.resolve("src"), base.resolve("out"), base.resolve("chk"))
       val grams = Decontaminate.evalGramSet(evalDocs, n).persist()
       grams.count()
       Files.createDirectories(src)
@@ -373,13 +329,12 @@ object CorpusStreams {
         }
         .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
         .start()
-      // stop() is asynchronous — await termination before _DONE/cleanup,
-      // or a re-invocation's freshBase races the dying query's checkpoint
+      // stop() is asynchronous — await termination before the commit,
+      // or a rebuild's wipe races the dying query's checkpoint
       try q.processAllAvailable() finally { q.stop(); q.awaitTermination() }
       grams.unpersist()
-      Files.writeString(done, "ok")
     }
-    spark.read.parquet(out.toString).orderBy("doc_id")
+    spark.read.parquet(base.resolve("out").toString).orderBy("doc_id")
   }
 
   def streamingDecontaminateSql(n: Int = 8, evalRate: Double = 0.05): String =
@@ -405,14 +360,16 @@ object CorpusStreams {
     * verbatim. This is the 100 TB ingest economics for lexical search:
     * index once, append forever, queries prune to |terms| buckets of
     * base + delta. */
-  /** Staged base dir of [[streamingSearchMaintained]]'s memoized run —
-    * ONE derivation shared by the producer and any spec that re-enters
-    * the committed dirs (key drift would silently split them). */
-  private[graft] def searchMaintainedBase(sfDir: String): java.nio.file.Path = {
-    val target = Paths.get(sfDir, "documents.parquet").toAbsolutePath.normalize
-    val mtime = Files.getLastModifiedTime(target).toMillis
-    Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_streamsearch_${StagedRuns.contentKey(s"$target:$mtime:searchmaint:v4")}")
+  /** Asset (kind, inputs, params) of [[streamingSearchMaintained]]'s
+    * memoized run — ONE derivation shared by the producer and any spec
+    * that re-enters the committed dirs (key drift would silently split
+    * them). */
+  private def searchRun(sfDir: String) =
+    ("streamsearch", Seq(Paths.get(sfDir, "documents.parquet")), "v4")
+
+  private[graft] def searchMaintainedBase(sfDir: String): Path = {
+    val (kind, inputs, params) = searchRun(sfDir)
+    graft.Assets.dirOf(kind, inputs, params)
   }
 
   def streamingSearchMaintained(spark: SparkSession, sfDir: String,
@@ -427,16 +384,23 @@ object CorpusStreams {
   /** The committed dirs of one maintained-index streaming run — handed
     * out by [[ensureSearchMaintainedRun]] so no consumer ever re-derives
     * a path (drift would silently split producer and probe). */
-  private case class MaintainedRun(delta: java.nio.file.Path,
-      deltaDl: java.nio.file.Path, tombs: java.nio.file.Path)
+  private case class MaintainedRun(base: Path) {
+    val delta: Path = base.resolve("delta")
+    val deltaDl: Path = base.resolve("delta_dl")
+    val tombs: Path = base.resolve("tomb")
+    val compacted: Path = base.resolve("compacted")
+    val purged: Path = base.resolve("purged")
+  }
 
   /** Ensure [[streamingSearchMaintained]]'s memoized streaming run has
     * executed: arrivals chopped into four micro-batches, each appending
     * its own postings AND its own doclen rows (the statistics half the
     * ranked searches need), then a SECOND stream of four delete-request
     * micro-batches (takedowns for base docs with doc_id % 20 == 2)
-    * appending tombstones — the data-governance half. Returns all three
-    * committed delta paths. */
+    * appending tombstones — the data-governance half — and finally the
+    * two lifecycle rewrites of base ∪ delta: the full compaction
+    * ([[graft.operators.Search.compactIndex]]) and the purge compaction
+    * ([[graft.operators.Search.purgeIndex]]). One asset holds all of it. */
   private def ensureSearchMaintainedRun(spark: SparkSession,
       sfDir: String): MaintainedRun = {
     import graft.operators.Search
@@ -444,17 +408,13 @@ object CorpusStreams {
       .filter(col("doc_id") % 10 === 7)
       .select(col("doc_id"), col("text"))
 
-    val base = searchMaintainedBase(sfDir)
-    val (src, delta, chk) =
-      (base.resolve("src"), base.resolve("delta"), base.resolve("chk"))
-    val deltaDl = base.resolve("delta_dl")
-    val (srcTomb, tomb, chkTomb) = (base.resolve("src_tomb"),
-      base.resolve("tomb"), base.resolve("chk_tomb"))
-    val done = base.resolve("_DONE")
-
-    if (!Files.exists(done)) {
-      // crash discipline: _DONE is the commit point, a half-state is wiped
-      StagedRuns.freshBase(base, done)
+    val (kind, inputs, params) = searchRun(sfDir)
+    MaintainedRun(graft.Assets.staged(kind, inputs, params) { base =>
+      val run = MaintainedRun(base)
+      val (src, delta, deltaDl, chk) =
+        (base.resolve("src"), run.delta, run.deltaDl, base.resolve("chk"))
+      val (srcTomb, tomb, chkTomb) = (base.resolve("src_tomb"),
+        run.tombs, base.resolve("chk_tomb"))
       Files.createDirectories(src)
       Files.createDirectories(delta)
       Files.createDirectories(deltaDl)
@@ -484,8 +444,8 @@ object CorpusStreams {
         }
         .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
         .start()
-      // stop() is asynchronous — await termination before _DONE/cleanup,
-      // or a re-invocation's freshBase races the dying query's checkpoint
+      // stop() is asynchronous — await termination before the commit,
+      // or a rebuild's wipe races the dying query's checkpoint
       try q.processAllAvailable() finally { q.stop(); q.awaitTermination() }
       // the DELETION stream: takedown requests (doc_id only) arrive in
       // four micro-batches of their own, each appended as tombstones —
@@ -513,9 +473,12 @@ object CorpusStreams {
         .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
         .start()
       try q2.processAllAvailable() finally { q2.stop(); q2.awaitTermination() }
-      Files.writeString(done, "ok")
-    }
-    MaintainedRun(delta, deltaDl, tomb)
+      val baseDir = Search.stagedDirSlice(spark, sfDir, Some("doc_id % 10 != 7"))
+      Search.compactIndex(spark, baseDir, delta.toString, deltaDl.toString,
+        run.compacted.toString)
+      Search.purgeIndex(spark, baseDir, delta.toString, deltaDl.toString,
+        tomb.toString, run.purged.toString)
+    })
   }
 
   /** RANKED retrieval over the maintained index — exact BM25 with
@@ -548,16 +511,16 @@ object CorpusStreams {
     * lost doclen row or a stale stats table breaks the shared oracle). */
   def streamingSearchBm25Compacted(spark: SparkSession, sfDir: String,
       terms: Seq[String], k: Int = 10): DataFrame = {
-    import graft.operators.Search
-    val cdir = ensureSearchCompacted(spark, sfDir)
-    Search.bm25SearchOver(spark, cdir.toString, terms, k).orderBy("doc_id")
+    val cdir = ensureSearchMaintainedRun(spark, sfDir).compacted
+    graft.operators.Search.bm25SearchOver(spark, cdir.toString, terms, k)
+      .orderBy("doc_id")
   }
 
   /** COMPACTION of the maintained index — the lifecycle step "append
     * forever" eventually demands: the streamed delta (one small file per
     * micro-batch x bucket) is folded back into the base's
     * bucket-partitioned layout, producing a single-source postings asset
-    * under its own `_DONE`-committed dir. The merge reads only index
+    * inside the maintained run's asset. The merge reads only index
     * rows (never the corpus text), writes exactly one file per bucket,
     * and — because postings are a pure per-document function — the
     * compacted table equals the from-scratch index over corpus ∪
@@ -569,30 +532,9 @@ object CorpusStreams {
     * layout bound. */
   def streamingSearchCompacted(spark: SparkSession, sfDir: String,
       terms: Seq[String]): DataFrame = {
-    import graft.operators.Search
-    val cdir = ensureSearchCompacted(spark, sfDir)
-    Search.keywordSearchOver(spark, cdir.toString, terms)
+    val cdir = ensureSearchMaintainedRun(spark, sfDir).compacted
+    graft.operators.Search.keywordSearchOver(spark, cdir.toString, terms)
       .orderBy("doc_id")
-  }
-
-  /** Ensure the FULL-asset compaction of the maintained run has been
-    * committed (postings + doclen + stats folded —
-    * [[graft.operators.Search.compactIndex]]); returns the compacted
-    * dir, interchangeable with the standing corpus asset. */
-  private def ensureSearchCompacted(spark: SparkSession,
-      sfDir: String): java.nio.file.Path = {
-    import graft.operators.Search
-    val baseDir = Search.stagedDirSlice(spark, sfDir, Some("doc_id % 10 != 7"))
-    val run = ensureSearchMaintainedRun(spark, sfDir)
-    val cdir = searchMaintainedBase(sfDir).resolve("compacted")
-    val cdone = cdir.resolve("_DONE")
-    if (!Files.exists(cdone)) {
-      StagedRuns.freshBase(cdir, cdone)
-      Search.compactIndex(spark, baseDir, run.delta.toString,
-        run.deltaDl.toString, cdir.toString)
-      Files.writeString(cdone, "ok")
-    }
-    cdir
   }
 
   /** Maintained-index search UNDER DELETION: streamed takedown requests
@@ -625,23 +567,9 @@ object CorpusStreams {
       .orderBy("doc_id")
   }
 
-  /** Ensure the purge compaction of the maintained run has been
-    * committed; returns the purged full-asset dir. */
-  private[graft] def ensureSearchPurged(spark: SparkSession,
-      sfDir: String): java.nio.file.Path = {
-    import graft.operators.Search
-    val baseDir = Search.stagedDirSlice(spark, sfDir, Some("doc_id % 10 != 7"))
-    val run = ensureSearchMaintainedRun(spark, sfDir)
-    val pdir = searchMaintainedBase(sfDir).resolve("purged")
-    val pdone = pdir.resolve("_DONE")
-    if (!Files.exists(pdone)) {
-      StagedRuns.freshBase(pdir, pdone)
-      Search.purgeIndex(spark, baseDir, run.delta.toString,
-        run.deltaDl.toString, run.tombs.toString, pdir.toString)
-      Files.writeString(pdone, "ok")
-    }
-    pdir
-  }
+  /** The purged full-asset dir of the committed maintained run. */
+  private[graft] def ensureSearchPurged(spark: SparkSession, sfDir: String): Path =
+    ensureSearchMaintainedRun(spark, sfDir).purged
 
   /** Shared oracle of the deletion pair: the batch conjunctive search
     * over documents minus the takedown slice. */

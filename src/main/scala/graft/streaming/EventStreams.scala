@@ -1,5 +1,6 @@
 package graft.streaming
 
+import java.nio.file.{Files, Path, Paths}
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
@@ -63,9 +64,10 @@ object EventStreams {
     * hardcoded nanos schema here collapsed the 720 h event span to 0.72 h). */
   def readEventStream(spark: SparkSession, sfDir: String,
       sentinelGapMs: Option[Long] = None): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val rawSchema = graft.Tables.eventsRawSchema(spark, sfDir)
-    val streamDir = stagedDir(spark, sfDir, sentinelGapMs, rawSchema)
+    val (streamDir, rawSchema) = stagedEvents(spark, sfDir, "events",
+        sentinelGapMs.fold("")(g => s"s$g")) { (dir, target, rawSchema) =>
+      stageReplay(spark, dir, target, rawSchema, sentinelGapMs)
+    }
     val reader = spark.readStream
       .schema(rawSchema)
       // one file per micro-batch so a staged sentinel file lands AFTER
@@ -156,106 +158,91 @@ object EventStreams {
        |  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
        |FROM bus GROUP BY 1, 2 ORDER BY bucket, event_type""".stripMargin
 
-  /** Stage a temp directory for the file source. With `sentinelGapMs`
-    * set, additionally writes a one-row far-future sentinel file (user_id
-    * -1, ts = max(ts) + gap + 1s): once that batch is processed the
-    * event-time watermark passes EVERY real session's timeout, so
-    * stateful operators flush all final state — on static input the
-    * stream then equals the batch answer exactly instead of a
-    * watermark-governed subset. Callers filter user_id >= 0. */
-  private def stagedDir(spark: SparkSession, sfDir: String,
-      sentinelGapMs: Option[Long], rawSchema: StructType): String = {
-    import java.nio.file.{Files, Paths}
+  /** The replay dir of the events file as a staged asset (keyed by the
+    * file's path and mtime plus `params`) and the file's raw schema. The
+    * build probes the schema once and keeps it in the asset
+    * ([[RawSchemaFile]]; `_`-prefixed names are invisible to the file
+    * source), so a repeat call runs no Spark job. `build` gets the dir,
+    * the data file and its raw schema. */
+  private def stagedEvents(spark: SparkSession, sfDir: String, kind: String,
+      params: String)(build: (Path, Path, StructType) => Unit): (String, StructType) = {
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val target = Paths.get(sfDir, "events.parquet").toAbsolutePath.normalize
-    // collision-free key (SHA-256 of the absolute path — String.hashCode
-    // can collide across sfDirs, silently reusing the wrong symlink)
-    val suffix = sentinelGapMs.map(g => s"_s$g").getOrElse("")
-    val key = java.security.MessageDigest.getInstance("SHA-256")
-      .digest(target.toString.getBytes("UTF-8"))
-      .take(8).map("%02x".format(_)).mkString + suffix
-    val dir = Paths.get(sys.props("java.io.tmpdir"), s"graft_events_$key")
-    val link = dir.resolve("events.parquet")
-    Files.createDirectories(dir)
-    // verify an existing link still points at the requested file; recreate
-    // stale links from deleted/replaced prior targets — and repair a
-    // REGULAR file squatting on the link path (stale content would
-    // silently stream as the events table)
-    if (Files.isSymbolicLink(link)) {
-      if (Files.readSymbolicLink(link) != target) {
-        Files.delete(link)
-        Files.createSymbolicLink(link, target)
-      }
-    } else if (Files.exists(link)) {
-      Files.delete(link)
-      Files.createSymbolicLink(link, target)
-    } else {
-      Files.createSymbolicLink(link, target)
+    val dir = graft.Assets.staged(kind, Seq(target), params) { d =>
+      val raw = graft.Tables.eventsRawSchema(spark, sfDir)
+      Files.writeString(d.resolve(RawSchemaFile), raw.json)
+      build(d, target, raw)
     }
+    (dir.toString, DataType.fromJson(Files.readString(dir.resolve(RawSchemaFile)))
+      .asInstanceOf[StructType])
+  }
+
+  private val RawSchemaFile = "_raw_schema.json"
+
+  /** Stage the file source's dir: a symlink to the events file (no data
+    * copy). With `sentinelGapMs` set, additionally writes a one-row
+    * far-future sentinel file (user_id -1, ts = max(ts) + gap + 1s): once
+    * that batch is processed the event-time watermark passes EVERY real
+    * session's timeout, so stateful operators flush all final state — on
+    * static input the stream then equals the batch answer exactly
+    * instead of a watermark-governed subset. Callers filter user_id >= 0.
+    *
+    * TWO sentinel files, one batch each (maxFilesPerTrigger=1): the
+    * watermark a batch observes comes from the PREVIOUS batch, so the
+    * second sentinel batch is what processes timeouts under the first
+    * sentinel's watermark (> every real session timeout). Relying on a
+    * trailing no-data micro-batch instead is racy with
+    * processAllAvailable (measured: the very last session stayed
+    * unflushed). The file source processes files in modification-time
+    * order, so the sentinels, written after the link, sort after the
+    * data; the asset is keyed by the data file's mtime, so a regenerated
+    * file gets fresh sentinels and max(ts) is scanned once per asset. */
+  private def stageReplay(spark: SparkSession, dir: Path, target: Path,
+      rawSchema: StructType, sentinelGapMs: Option[Long]): Unit = {
+    Files.createSymbolicLink(dir.resolve("events.parquet"), target)
     sentinelGapMs.foreach { gapMs =>
-      // TWO sentinel files, one batch each (maxFilesPerTrigger=1): the
-      // watermark a batch observes comes from the PREVIOUS batch, so the
-      // second sentinel batch is what processes timeouts under the first
-      // sentinel's watermark (> every real session timeout). Relying on a
-      // trailing no-data micro-batch instead is racy with
-      // processAllAvailable (measured: the very last session stayed
-      // unflushed).
-      import spark.implicits._
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // the sentinel files must carry `ts` in the FILE's exact raw type
-      // (they share the data file's probed schema) — compute the max in
-      // micros via the shared normalizer, convert back at write time
-      val rawTsType = rawSchema("ts").dataType
+      // max in micros via the shared normalizer; the sentinels carry `ts`
+      // in the FILE's exact raw type (they share its probed schema)
       val maxTsMicros = graft.Tables.normalizeEventTs(
           spark.read.schema(rawSchema).parquet(target.toString))
         .agg(max(unix_micros(col("ts")))).head().getLong(0)
-      // Sentinels are valid only for the CURRENT target file: keyed on
-      // max(ts) AND the target's mtime. The mtime matters because the
-      // file source processes files in modification-time order — a
-      // REGENERATED data file (same content, fresh mtime) would sort
-      // AFTER cached sentinels, the sentinel batches would run first,
-      // and the far-future watermark would drop every real event as
-      // late (empty output). Regenerating the sentinels restores
-      // data-before-sentinel ordering. Both sentinel files must exist:
-      // with only the second, its batch would run under the data
-      // watermark and no batch would flush the final sessions.
-      val targetMtime = Files.getLastModifiedTime(target).toMillis
-      val stamp = s"$maxTsMicros:$targetMtime:${rawTsType.simpleString}"
-      val marker = dir.resolve("_graft_sentinel_maxts")
-      val fresh = Files.exists(marker) &&
-        Files.readString(marker).trim == stamp &&
-        Files.exists(dir.resolve("zz_sentinel1.parquet")) &&
-        Files.exists(dir.resolve("zz_sentinel2.parquet"))
-      if (!fresh) {
-        (1 to 2).foreach { k =>
-          val sentinel = dir.resolve(s"zz_sentinel$k.parquet")
-          val sentinelMicros = maxTsMicros + k * (gapMs + 1000L) * 1000L
-          val tmp = Files.createTempDirectory("graft_sentinel")
-          val tsCol = rawTsType match {
-            case LongType => col("us") * 1000L // micros -> raw nanos long
-            case TimestampNTZType =>
-              timestamp_micros(col("us")).cast(TimestampNTZType)
-            case _ => timestamp_micros(col("us"))
-          }
-          Seq((-k.toLong, sentinelMicros, -1L, "__sentinel__", 0.0, ""))
-            .toDF("event_id", "us", "user_id", "event_type", "value", "props")
-            .withColumn("ts", tsCol)
-            .select("event_id", "ts", "user_id", "event_type", "value", "props")
-            .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-          val listing = Files.list(tmp)
-          val part = try listing.filter(_.toString.endsWith(".parquet"))
-            .findFirst().get()
-          finally listing.close()
-          Files.move(part, sentinel,
-            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-          // clean the scratch dir (leftover _SUCCESS/.crc files)
-          val rest = Files.list(tmp)
-          try rest.forEach(p => Files.deleteIfExists(p)) finally rest.close()
-          Files.deleteIfExists(tmp)
-        }
-        Files.writeString(marker, stamp)
+      (1 to 2).foreach { k =>
+        writeSingleFile(sentinel(spark, k, maxTsMicros + k * (gapMs + 1000L) * 1000L,
+          rawSchema("ts").dataType), dir.resolve(s"zz_sentinel$k.parquet"))
       }
     }
-    dir.toString
+  }
+
+  /** Sentinel row `k` at event time `micros`, with `ts` in `rawTsType`. */
+  private def sentinel(spark: SparkSession, k: Int, micros: Long,
+      rawTsType: DataType): DataFrame = {
+    import spark.implicits._
+    val ts = rawTsType match {
+      case LongType => col("us") * 1000L // micros -> raw nanos long
+      case TimestampNTZType => timestamp_micros(col("us")).cast(TimestampNTZType)
+      case _ => timestamp_micros(col("us"))
+    }
+    Seq((-k.toLong, micros, -1L, "__sentinel__", 0.0, ""))
+      .toDF("event_id", "us", "user_id", "event_type", "value", "props")
+      .withColumn("ts", ts)
+      .select("event_id", "ts", "user_id", "event_type", "value", "props")
+  }
+
+  /** Writes `df` as ONE parquet file at `dst` (through a hidden scratch
+    * dir beside it), with modification time `mtimeMs` when given. */
+  private[streaming] def writeSingleFile(df: DataFrame, dst: Path,
+      mtimeMs: Option[Long] = None): Unit = {
+    val tmp = dst.resolveSibling(s".${dst.getFileName}.tmp")
+    df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+    val part = { val l = Files.list(tmp)
+      try l.filter(_.toString.endsWith(".parquet")).findFirst().get()
+      finally l.close() }
+    Files.move(part, dst, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    val rest = Files.list(tmp)
+    try rest.forEach(p => Files.deleteIfExists(p)) finally rest.close()
+    Files.deleteIfExists(tmp)
+    mtimeMs.foreach(m => Files.setLastModifiedTime(dst,
+      java.nio.file.attribute.FileTime.fromMillis(m)))
   }
 
   private val liveSinks = new java.util.concurrent.ConcurrentLinkedQueue[String]()
@@ -403,7 +390,7 @@ object EventStreams {
     * never by stream length (Complete mode's result table grows forever).
     *
     * Finite-replay equality (same oracle as windowedCounts): the staged
-    * far-future sentinels (see [[stagedDir]]) push the watermark past
+    * far-future sentinels (see [[stageReplay]]) push the watermark past
     * every real window's end, so Append emits ALL real windows before the
     * replay drains. The 2h sentinel gap makes the FIRST sentinel's
     * watermark (gap - 1h delay = 1h past max ts) clear the last real
@@ -538,7 +525,7 @@ object EventStreams {
     * closed after `gapMinutes` of event-time silence. Sessions are emitted
     * when the gap is observed in-stream; final open sessions are emitted
     * on event-time timeout — the staged far-future sentinel (see
-    * stagedDir) pushes the watermark past every real timeout, so on the
+    * stageReplay) pushes the watermark past every real timeout, so on the
     * static replay the output equals the batch gaps-and-islands answer
     * EXACTLY and shares its DuckDB oracle. Value sums are accumulated in
     * integer cents (the testdata values have 2 decimals), matching the
@@ -675,7 +662,7 @@ object EventStreams {
     * delay) — fine for a finite replay; state is bounded by the open
     * session count. */
   /** OOO replay lateness bounds, shared by every out-of-order consumer
-    * AND kept in lockstep with stagedOutOfOrderDir's slice-span formula
+    * AND kept in lockstep with readEventStreamOutOfOrder's slice-span formula
     * ((max - min) / slices + 1): a swapped slice arrives <= 2 slice-spans
     * after a later-timestamped event, so delay = 2.5 spans + margin
     * covers it. Memoized per (events file, mtime, slices) — the min/max
@@ -857,7 +844,8 @@ object EventStreams {
   }
 
   // ------------------------- out-of-order replay + buffered PIT features
-  /** Stage the events table as `slices` time-sliced parquet files
+  /** File replay of the events table with bounded out-of-order delivery:
+    * the table is staged as `slices` time-sliced parquet files
     * DELIVERED OUT OF ORDER — adjacent slices swapped (2,1,4,3,...) —
     * plus the two far-future sentinel files, with strictly increasing
     * modification times so the file source (mtime order,
@@ -868,98 +856,44 @@ object EventStreams {
     * max event time already seen — a Kafka-shaped delivery pattern the
     * strict-order replay contract of [[streamingPitFeatures]] forbids.
     * Staged files carry the data file's exact RAW schema (nanos-long or
-    * timestamp), like the sentinel writer; cached per (target mtime,
-    * ts type, slices, gap) and rebuilt when stale. */
-  private def stagedOutOfOrderDir(spark: SparkSession, sfDir: String,
-      slices: Int, sentinelGapMs: Long, rawSchema: StructType): String = {
-    import java.nio.file.{Files, Paths}
-    import spark.implicits._
-    val target = Paths.get(sfDir, "events.parquet").toAbsolutePath.normalize
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val rawTsType = rawSchema("ts").dataType
-    // the PARAMETERS are part of the directory key (not just the stamp):
-    // two consumers with different (slices, gap) — the buffered PIT fold
-    // vs the OOO sessionizer — must not evict each other's staging on
-    // every alternation (each restage is a full events rewrite)
-    val key = java.security.MessageDigest.getInstance("SHA-256")
-      .digest(s"$target:$slices:$sentinelGapMs".getBytes("UTF-8"))
-      .take(8).map("%02x".format(_)).mkString
-    val dir = Paths.get(sys.props("java.io.tmpdir"), s"graft_events_ooo_$key")
-    Files.createDirectories(dir)
-    val targetMtime = Files.getLastModifiedTime(target).toMillis
-    val stamp = s"$targetMtime:${rawTsType.simpleString}:$slices:$sentinelGapMs"
-    val marker = dir.resolve("_graft_ooo_stamp")
-    if (Files.exists(marker) && Files.readString(marker).trim == stamp)
-      return dir.toString
-    val old = Files.list(dir)
-    try old.forEach(p => Files.deleteIfExists(p)) finally old.close()
-
-    def writeOne(df: DataFrame, name: String, mtimeMs: Long): Unit = {
-      val tmp = Files.createTempDirectory("graft_ooo")
-      df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      val listing = Files.list(tmp)
-      val part = try listing.filter(_.toString.endsWith(".parquet"))
-        .findFirst().get()
-      finally listing.close()
-      Files.move(part, dir.resolve(name),
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      val rest = Files.list(tmp)
-      try rest.forEach(p => Files.deleteIfExists(p)) finally rest.close()
-      Files.deleteIfExists(tmp)
-      Files.setLastModifiedTime(dir.resolve(name),
-        java.nio.file.attribute.FileTime.fromMillis(mtimeMs))
-    }
-
-    val raw = spark.read.schema(rawSchema).parquet(target.toString)
-    val tsm = rawTsType match {
-      case LongType => expr("ts div 1000")
-      case TimestampNTZType => unix_micros(col("ts").cast(TimestampType))
-      case _ => unix_micros(col("ts"))
-    }
-    val withTsm = raw.withColumn("__tsm", tsm).persist()
-    val mm = withTsm.agg(min(col("__tsm")), max(col("__tsm"))).head()
-    val (minM, maxM) = (mm.getLong(0), mm.getLong(1))
-    val sliceSpan = (maxM - minM) / slices + 1
-    // delivery order: adjacent slices swapped (a lone trailing slice
-    // stays in place when `slices` is odd)
-    val order = (0 until slices).map(i =>
-      if (i % 2 == 0) math.min(i + 1, slices - 1) else i - 1)
-    val base = System.currentTimeMillis()
-    order.zipWithIndex.foreach { case (sliceIdx, pos) =>
-      // `div` (integer division), not `/` (double): a double quotient at
-      // an exact slice boundary could truncate into the wrong slice
-      val df = withTsm
-        .filter(expr(s"(__tsm - ${minM}L) div ${sliceSpan}L") === sliceIdx)
-        .drop("__tsm")
-      writeOne(df, f"slice_$pos%02d.parquet", base + pos * 2000L)
-    }
-    (1 to 2).foreach { k =>
-      val sentinelMicros = maxM + k * (sentinelGapMs + 1000L) * 1000L
-      val tsColS = rawTsType match {
-        case LongType => col("us") * 1000L
-        case TimestampNTZType =>
-          timestamp_micros(col("us")).cast(TimestampNTZType)
-        case _ => timestamp_micros(col("us"))
-      }
-      val sdf = Seq((-k.toLong, sentinelMicros, -1L, "__sentinel__", 0.0, ""))
-        .toDF("event_id", "us", "user_id", "event_type", "value", "props")
-        .withColumn("ts", tsColS)
-        .select("event_id", "ts", "user_id", "event_type", "value", "props")
-      writeOne(sdf, s"zz_sentinel$k.parquet", base + (slices + k) * 2000L)
-    }
-    withTsm.unpersist()
-    Files.writeString(marker, stamp)
-    dir.toString
-  }
-
-  /** File replay of the events table with bounded out-of-order delivery
-    * (see [[stagedOutOfOrderDir]]); schema probed and `ts` normalized
-    * exactly like [[readEventStream]]. */
+    * timestamp), like the sentinel writer; (slices, gap) are part of the
+    * asset key, so two consumers with different parameters never evict
+    * each other's staging. Schema probed once and `ts` normalized exactly
+    * like [[readEventStream]]. */
   def readEventStreamOutOfOrder(spark: SparkSession, sfDir: String,
       slices: Int, sentinelGapMs: Long): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val rawSchema = graft.Tables.eventsRawSchema(spark, sfDir)
-    val dir = stagedOutOfOrderDir(spark, sfDir, slices, sentinelGapMs, rawSchema)
+    val (dir, rawSchema) = stagedEvents(spark, sfDir, "events_ooo",
+        s"$slices:$sentinelGapMs") { (dir, target, rawSchema) =>
+      val rawTsType = rawSchema("ts").dataType
+      val tsm = rawTsType match {
+        case LongType => expr("ts div 1000")
+        case TimestampNTZType => unix_micros(col("ts").cast(TimestampType))
+        case _ => unix_micros(col("ts"))
+      }
+      val withTsm = spark.read.schema(rawSchema).parquet(target.toString)
+        .withColumn("__tsm", tsm).persist()
+      val mm = withTsm.agg(min(col("__tsm")), max(col("__tsm"))).head()
+      val (minM, maxM) = (mm.getLong(0), mm.getLong(1))
+      val sliceSpan = (maxM - minM) / slices + 1
+      // delivery order: adjacent slices swapped (a lone trailing slice
+      // stays in place when `slices` is odd)
+      val order = (0 until slices).map(i =>
+        if (i % 2 == 0) math.min(i + 1, slices - 1) else i - 1)
+      val base = System.currentTimeMillis()
+      order.zipWithIndex.foreach { case (sliceIdx, pos) =>
+        // `div` (integer division), not `/` (double): a double quotient at
+        // an exact slice boundary could truncate into the wrong slice
+        val df = withTsm
+          .filter(expr(s"(__tsm - ${minM}L) div ${sliceSpan}L") === sliceIdx)
+          .drop("__tsm")
+        writeSingleFile(df, dir.resolve(f"slice_$pos%02d.parquet"), Some(base + pos * 2000L))
+      }
+      (1 to 2).foreach { k =>
+        writeSingleFile(sentinel(spark, k, maxM + k * (sentinelGapMs + 1000L) * 1000L,
+          rawTsType), dir.resolve(s"zz_sentinel$k.parquet"), Some(base + (slices + k) * 2000L))
+      }
+      withTsm.unpersist()
+    }
     graft.Tables.normalizeEventTs(spark.readStream
       .schema(rawSchema)
       .option("maxFilesPerTrigger", "1")
@@ -1263,25 +1197,13 @@ object EventStreams {
     * snapshot side. State is the TABLE, not stream state — nothing
     * unbounded in the query itself. */
   def streamingUpsert(spark: SparkSession, sfDir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
-    val target = Paths.get(sfDir, "orders.parquet").toAbsolutePath.normalize
-    val mtime = Files.getLastModifiedTime(target).toMillis
     // "v2" = change-batch construction version (insert offset 1e12): a
     // semantic change to the staged feed MUST bust the stage or a reused
     // table silently diverges from the recompiled oracle (seen live in r6
     // when the ADVICE r5 #4 offset fix landed mid-verify)
-    val key = java.security.MessageDigest.getInstance("SHA-256")
-      .digest(s"$target:$mtime:cdc:v2".getBytes("UTF-8"))
-      .take(8).map("%02x".format(_)).mkString
-    val base = Paths.get(sys.props("java.io.tmpdir"), s"graft_cdc_$key")
-    val (src, table, chk) =
-      (base.resolve("src"), base.resolve("table"), base.resolve("chk"))
-    val done = base.resolve("_DONE")
-
-    if (!Files.exists(done)) {
-      // a crash-interrupted previous attempt left a poisoned half-state:
-      // wipe and rebuild (StagedRuns scaladoc — _DONE is the commit point)
-      StagedRuns.freshBase(base, done)
+    val base = graft.Assets.staged("cdc", Seq(Paths.get(sfDir, "orders.parquet")), "v2") { base =>
+      val (src, table, chk) =
+        (base.resolve("src"), base.resolve("table"), base.resolve("chk"))
       Files.createDirectories(src)
       val snap = graft.Tables.orders(spark, sfDir)
         .select("o_orderkey", "o_custkey", "o_orderstatus", "o_orderpriority")
@@ -1301,27 +1223,17 @@ object EventStreams {
         .withColumn("o_orderpriority", lit("5-LOW"))
         .withColumn("op", lit("insert"))
       Seq(updates, deletes, inserts).zipWithIndex.foreach { case (df, i) =>
-        df.coalesce(1).write.mode("overwrite")
-          .parquet(src.resolve(s"batch$i.tmp").toString)
-        val part = { val l = Files.list(src.resolve(s"batch$i.tmp"))
-          try l.filter(_.toString.endsWith(".parquet")).findFirst().get()
-          finally l.close() }
-        Files.move(part, src.resolve(s"batch$i.parquet"))
-        val rest = Files.list(src.resolve(s"batch$i.tmp"))
-        try rest.forEach(p => Files.deleteIfExists(p)) finally rest.close()
-        Files.deleteIfExists(src.resolve(s"batch$i.tmp"))
+        writeSingleFile(df, src.resolve(s"batch$i.parquet"))
       }
       applyCdc(spark, src, table, chk)
-      Files.writeString(done, "ok")
     }
-    spark.read.parquet(table.toString).orderBy("o_orderkey")
+    spark.read.parquet(base.resolve("table").toString).orderBy("o_orderkey")
   }
 
   /** Run the CDC stream over `src`, merging each micro-batch into the
     * parquet table at `tablePath` with an atomic directory swap. */
   private[graft] def applyCdc(spark: SparkSession, src: java.nio.file.Path,
       tablePath: java.nio.file.Path, chk: java.nio.file.Path): Unit = {
-    import java.nio.file.Files
     recoverTable(tablePath)
     val changeSchema = spark.read.parquet(
       { val l = Files.list(src)
@@ -1352,7 +1264,6 @@ object EventStreams {
     * reading, or every retry of a staged run fails on a missing table
     * (ADVICE r5 #3). */
   private def recoverTable(tablePath: java.nio.file.Path): Unit = {
-    import java.nio.file.Files
     val oldPath = tablePath.resolveSibling(tablePath.getFileName.toString + "_old")
     if (!Files.exists(tablePath) && Files.exists(oldPath))
       Files.move(oldPath, tablePath)
@@ -1364,7 +1275,6 @@ object EventStreams {
     * cleanup) is cleared first or the first rename throws forever. */
   private def swapInto(tablePath: java.nio.file.Path, batchId: Long)(
       write: java.nio.file.Path => Unit): Unit = {
-    import java.nio.file.Files
     def deleteTree(p: java.nio.file.Path): Unit = if (Files.exists(p)) {
       val walk = Files.walk(p)
       try walk.sorted(java.util.Comparator.reverseOrder())
@@ -1395,39 +1305,18 @@ object EventStreams {
     * log is never rescanned. Emits the maintained rollup; the oracle is
     * the direct GROUP BY over raw events. */
   def streamingMvMaintenance(spark: SparkSession, sfDir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
-    val target = Paths.get(sfDir, "events.parquet").toAbsolutePath.normalize
-    val mtime = Files.getLastModifiedTime(target).toMillis
-    val key = java.security.MessageDigest.getInstance("SHA-256")
-      .digest(s"$target:$mtime:mvmaint".getBytes("UTF-8"))
-      .take(8).map("%02x".format(_)).mkString
-    val base = Paths.get(sys.props("java.io.tmpdir"), s"graft_mvmaint_$key")
-    val (src, table, chk) =
-      (base.resolve("src"), base.resolve("rollup"), base.resolve("chk"))
-    val done = base.resolve("_DONE")
-
-    if (!Files.exists(done)) {
-      // a crash-interrupted previous attempt left a poisoned half-state:
-      // wipe and rebuild (StagedRuns scaladoc — _DONE is the commit point)
-      StagedRuns.freshBase(base, done)
+    val base = graft.Assets.staged("mvmaint", Seq(Paths.get(sfDir, "events.parquet")), "") { base =>
+      val (src, table, chk) =
+        (base.resolve("src"), base.resolve("rollup"), base.resolve("chk"))
       Files.createDirectories(src)
       // four event micro-batches (hash split on event_id — any
       // partitioning works: counts are additive)
       val ev = graft.Tables.events(spark, sfDir)
         .select(col("event_type"), to_date(col("ts")).as("day"), col("event_id"))
       (0 until 4).foreach { i =>
-        val tmp = src.resolve(s"batch$i.tmp")
-        ev.filter(pmod(col("event_id"), lit(4)) === i)
-          .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val part = { val l = Files.list(tmp)
-          try l.filter(_.toString.endsWith(".parquet")).findFirst().get()
-          finally l.close() }
-        Files.move(part, src.resolve(s"batch$i.parquet"))
-        val rest = Files.list(tmp)
-        try rest.forEach(p => Files.deleteIfExists(p)) finally rest.close()
-        Files.deleteIfExists(tmp)
+        writeSingleFile(ev.filter(pmod(col("event_id"), lit(4)) === i),
+          src.resolve(s"batch$i.parquet"))
       }
-      recoverTable(table)
       val schema = spark.read.parquet(src.resolve("batch0.parquet").toString).schema
       val q = spark.readStream
         .schema(schema)
@@ -1455,11 +1344,10 @@ object EventStreams {
         }
         .start()
       try q.processAllAvailable() finally q.stop()
-      Files.writeString(done, "ok")
     }
     // epoch-day integers cross the engine boundary (the repo's date
     // discipline: pandas reads parquet DATE as object, not datetime)
-    spark.read.parquet(table.toString)
+    spark.read.parquet(base.resolve("rollup").toString)
       .select(col("event_type"),
         datediff(col("day"), lit("1970-01-01")).cast("long").as("day_epoch"),
         col("cnt"))
@@ -1486,24 +1374,12 @@ object EventStreams {
     * across restarts (the production exactly-once contract; the memory
     * sink used by the other stream queries cannot survive a restart).
     *
-    * Staging is keyed on (path, mtime) and the two-phase run executes
-    * once per key (`_DONE` marker); re-invocations read the completed
-    * sink — idempotent, like the other staged sinks. */
+    * Staged once per (path, mtime) as an asset the two-phase run writes
+    * in place (the sink's log records absolute paths); re-invocations
+    * read the completed sink — idempotent, like the other staged sinks. */
   def restartRecoveryDedup(spark: SparkSession, sfDir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
-    val target = Paths.get(sfDir, "events.parquet").toAbsolutePath.normalize
-    val mtime = Files.getLastModifiedTime(target).toMillis
-    val key = java.security.MessageDigest.getInstance("SHA-256")
-      .digest(s"$target:$mtime".getBytes("UTF-8"))
-      .take(8).map("%02x".format(_)).mkString
-    val base = Paths.get(sys.props("java.io.tmpdir"), s"graft_restart_$key")
-    val (src, out, chk) = (base.resolve("src"), base.resolve("out"), base.resolve("chk"))
-    val done = base.resolve("_DONE")
-
-    if (!Files.exists(done)) {
-      // a crash-interrupted previous attempt left a poisoned half-state:
-      // wipe and rebuild (StagedRuns scaladoc — _DONE is the commit point)
-      StagedRuns.freshBase(base, done)
+    val base = graft.Assets.staged("restart", Seq(Paths.get(sfDir, "events.parquet")), "") { base =>
+      val (src, out, chk) = (base.resolve("src"), base.resolve("out"), base.resolve("chk"))
       Files.createDirectories(src)
       val events = graft.Tables.events(spark, sfDir)
         .select(col("user_id"), col("event_type"), col("event_id"))
@@ -1529,9 +1405,8 @@ object EventStreams {
       runOnce() // phase 1: two files, then the query is STOPPED
       writeSplit(2); writeSplit(3)
       runOnce() // phase 2: restart from checkpoint, finish the input
-      Files.writeString(done, "ok")
     }
-    spark.read.parquet(out.toString).orderBy("user_id", "event_type")
+    spark.read.parquet(base.resolve("out").toString).orderBy("user_id", "event_type")
   }
 
   // --------------------------- batchId-transactional foreachBatch sink
@@ -1549,7 +1424,6 @@ object EventStreams {
     * batchId is a no-op. Returns false when skipped. */
   private[graft] def txnAppend(dataDir: java.nio.file.Path, batchId: Long)(
       write: java.nio.file.Path => Unit): Boolean = {
-    import java.nio.file.Files
     val marker = dataDir.resolve(s"_committed_$batchId")
     if (Files.exists(marker)) {
       txnSkips.incrementAndGet()
@@ -1589,21 +1463,9 @@ object EventStreams {
     * the final table equals the batch GROUP BY regardless of delivery
     * order or replay count. */
   def streamingTxnAppend(spark: SparkSession, sfDir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
-    val target = Paths.get(sfDir, "events.parquet").toAbsolutePath.normalize
-    val mtime = Files.getLastModifiedTime(target).toMillis
-    val key = java.security.MessageDigest.getInstance("SHA-256")
-      .digest(s"$target:$mtime:txn:v1".getBytes("UTF-8"))
-      .take(8).map("%02x".format(_)).mkString
-    val base = Paths.get(sys.props("java.io.tmpdir"), s"graft_txn_$key")
-    val (src, data, chk) =
-      (base.resolve("src"), base.resolve("data"), base.resolve("chk"))
-    val done = base.resolve("_DONE")
-
-    if (!Files.exists(done)) {
-      // a crash-interrupted previous attempt left a poisoned half-state:
-      // wipe and rebuild (StagedRuns scaladoc — _DONE is the commit point)
-      StagedRuns.freshBase(base, done)
+    val base = graft.Assets.staged("txn", Seq(Paths.get(sfDir, "events.parquet")), "v1") { base =>
+      val (src, data, chk) =
+        (base.resolve("src"), base.resolve("data"), base.resolve("chk"))
       Files.createDirectories(src)
       Files.createDirectories(data)
       val events = graft.Tables.events(spark, sfDir)
@@ -1649,10 +1511,9 @@ object EventStreams {
         newest.resolveSibling("." + newest.getFileName.toString + ".crc"))
       writeSplit(2); writeSplit(3)
       runOnce() // phase 2: batch 1 REPLAYED (skipped by the txn log), 2-3 fresh
-      Files.writeString(done, "ok")
     }
     spark.read
-      .parquet({ val l = Files.list(data)
+      .parquet({ val l = Files.list(base.resolve("data"))
         try l.filter(p => p.getFileName.toString.startsWith("b"))
           .map[String](_.toString).toArray(n => new Array[String](n)).toSeq
         finally l.close() }: _*)

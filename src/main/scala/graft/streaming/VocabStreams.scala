@@ -1,7 +1,6 @@
 package graft.streaming
 
 import java.nio.file.{Files, Paths}
-import java.nio.file.attribute.FileTime
 
 import scala.jdk.CollectionConverters._
 
@@ -36,50 +35,12 @@ object VocabStreams {
     * verbatim, then each batch's new names in sorted order. */
   def streamingVocabGrowth(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val raw = graft.queries.TransEQueries.kgTriples(spark, sfDir)
-    val hv = conv(substring(md5(
-      concat_ws("|", col("h"), col("l"), col("t"))), 1, 6), 16, 10)
-      .cast("long")
-    // DIV, not `/`: Column `/` is ALWAYS fractional (double) division in
-    // Spark, so (hv / 10) % 3 yields non-integral k values that match no
-    // equality filter — integral DIV keeps the sub-bucket exact and
-    // engine-identical to DuckDB's `//`
-    val withK = raw.select(col("h"), col("l"), col("t"), hv.as("hv"))
-      .select(col("h"), col("l"), col("t"),
-        (col("hv") % 10).as("bucket"), expr("(hv DIV 10) % 3").as("k"))
-
-    val target = Paths.get(sfDir, "events.parquet").getParent
-      .resolve("lineitem.parquet").toAbsolutePath.normalize
-    val mtime = Files.getLastModifiedTime(target).toMillis
-    val key = java.security.MessageDigest.getInstance("SHA-256")
-      .digest(s"vocabstream:v2:$target:$mtime".getBytes("UTF-8"))
-      .take(8).map("%02x".format(_)).mkString
-    val base = Paths.get(sys.props("java.io.tmpdir"), s"graft_vocabstream_$key")
-    val (src, out, chk) =
-      (base.resolve("src"), base.resolve("out"), base.resolve("chk"))
-    val done = base.resolve("_DONE")
-
-    if (!Files.exists(done)) {
-      StagedRuns.freshBase(base, done)
-      Files.createDirectories(src)
-      // one file per content-defined sub-batch, mtimes forced ascending
-      // so the file source's timestamp order IS the batch order
-      (0 until 3).foreach { k =>
-        val tmp = base.resolve(s"tmp$k")
-        withK.filter(col("bucket") >= 9 && col("k") === k)
-          .select("h", "l", "t")
-          .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val part = {
-          val s = Files.list(tmp)
-          try s.filter(p => p.getFileName.toString.endsWith(".parquet"))
-            .findFirst().get()
-          finally s.close()
-        }
-        val dst = src.resolve(f"b$k%03d.parquet")
-        Files.copy(part, dst)
-        Files.setLastModifiedTime(dst,
-          FileTime.fromMillis(1700000000000L + k * 60000L))
-      }
+    val base = graft.Assets.staged("vocabstream",
+        Seq(Paths.get(sfDir, "lineitem.parquet")), "v2") { base =>
+      val (src, out, chk) =
+        (base.resolve("src"), base.resolve("out"), base.resolve("chk"))
+      val withK = contentSplit(spark, sfDir)
+      stageArrivals(withK, src)
 
       // the standing dictionary: built once from the old corpus
       val oldRaw = withK.filter(col("bucket") < 9)
@@ -111,12 +72,38 @@ object VocabStreams {
         .start()
       try q.processAllAvailable() finally { q.stop(); q.awaitTermination() }
       ents.write.mode("overwrite").parquet(out.toString)
-      Files.writeString(done, "ok")
     }
-    spark.read.parquet(out.toString)
+    spark.read.parquet(base.resolve("out").toString)
       .select(col("name"), col("id").cast("long").as("id"))
       .orderBy("id")
   }
+
+  /** kgTriples with the content-defined split: `bucket` = hash % 10
+    * (>= 9 is the arriving slice) and `k` = (hash div 10) % 3, the
+    * arrival sub-batch. DIV, not `/`: Column `/` is ALWAYS fractional
+    * (double) division in Spark, so (hv / 10) % 3 yields non-integral k
+    * values that match no equality filter — integral DIV keeps the
+    * sub-bucket exact and engine-identical to DuckDB's `//`. */
+  private def contentSplit(spark: SparkSession, sfDir: String): DataFrame = {
+    val hv = conv(substring(md5(
+      concat_ws("|", col("h"), col("l"), col("t"))), 1, 6), 16, 10)
+      .cast("long")
+    graft.queries.TransEQueries.kgTriples(spark, sfDir)
+      .select(col("h"), col("l"), col("t"), hv.as("hv"))
+      .select(col("h"), col("l"), col("t"),
+        (col("hv") % 10).as("bucket"), expr("(hv DIV 10) % 3").as("k"),
+        col("hv"))
+  }
+
+  /** The arriving slice as one file per content-defined sub-batch, mtimes
+    * forced ascending so the file source's timestamp order IS the batch
+    * order. */
+  private def stageArrivals(withK: DataFrame, src: java.nio.file.Path): Unit =
+    (0 until 3).foreach { k =>
+      EventStreams.writeSingleFile(
+        withK.filter(col("bucket") >= 9 && col("k") === k).select("h", "l", "t"),
+        src.resolve(f"b$k%03d.parquet"), Some(1700000000000L + k * 60000L))
+    }
 
   /** STREAMING CONTINUAL TRAINER (VERDICT r10 #3) — the foreachBatch
     * composition of the round-10 continual pieces that previously only
@@ -143,42 +130,33 @@ object VocabStreams {
     * the behavioral gate lives in StreamingSpec's continual-contract
     * twin (see `gating.json`). Deterministic end-to-end (seeded SGD over
     * content-defined batches), memoized on disk like the growth query. */
-  def streamingContinualTrain(spark: SparkSession, sfDir: String): DataFrame = {
+  def streamingContinualTrain(spark: SparkSession, sfDir: String): DataFrame =
+    spark.read.parquet(ensureContinualRun(spark, sfDir).resolve("out").toString)
+      .orderBy("k")
+
+  /** The committed continual-train run for `sfDir` (layout v3 added the
+    * quantized eval checkpoint under `evalq/`). */
+  private def ensureContinualRun(spark: SparkSession,
+      sfDir: String): java.nio.file.Path = {
     import spark.implicits._
     import graft.transe.RawTriple
-
-    val base = contStreamBase(sfDir)
-    val (src, out, chk) =
-      (base.resolve("src"), base.resolve("out"), base.resolve("chk"))
-    val done = base.resolve("_DONE")
-
-    if (!Files.exists(done)) {
-      StagedRuns.freshBase(base, done)
-      Files.createDirectories(src)
-      val raw = graft.queries.TransEQueries.kgTriples(spark, sfDir)
-      val hv = conv(substring(md5(
-        concat_ws("|", col("h"), col("l"), col("t"))), 1, 6), 16, 10)
-        .cast("long")
-      val withK = raw.select(col("h"), col("l"), col("t"), hv.as("hv"))
-        .select(col("h"), col("l"), col("t"),
-          (col("hv") % 10).as("bucket"), expr("(hv DIV 10) % 3").as("k"),
-          col("hv"))
-      (0 until 3).foreach { k =>
-        val tmp = base.resolve(s"tmp$k")
-        withK.filter(col("bucket") >= 9 && col("k") === k)
-          .select("h", "l", "t")
-          .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val part = {
-          val s = Files.list(tmp)
-          try s.filter(p => p.getFileName.toString.endsWith(".parquet"))
-            .findFirst().get()
-          finally s.close()
-        }
-        val dst = src.resolve(f"b$k%03d.parquet")
-        Files.copy(part, dst)
-        Files.setLastModifiedTime(dst,
-          FileTime.fromMillis(1700000000000L + k * 60000L))
-      }
+    // durable per-stage state in a SIBLING dir, outside the asset's wipe
+    // path: an uncommitted asset (src/chk/out) is disposable and rebuilt,
+    // but committed SGD stages are exactly what a killed run must RESUME
+    // from — wiping them with the asset would refit the old corpus from
+    // scratch and make every persistStage write dead weight. The fresh
+    // checkpoint re-delivers all files with the same deterministic
+    // batchIds (one file per trigger in forced-mtime order), and the
+    // committed-id guard skips the already-trained ones, so recovery
+    // stays exactly-once and bit-identical.
+    def stateDirOf(base: java.nio.file.Path) =
+      base.resolveSibling(s"${base.getFileName}_v${StateFormatVersion}_state")
+    val base = graft.Assets.staged("contstream",
+        Seq(Paths.get(sfDir, "lineitem.parquet")), "v3") { base =>
+      val (src, out, chk) =
+        (base.resolve("src"), base.resolve("out"), base.resolve("chk"))
+      val withK = contentSplit(spark, sfDir)
+      stageArrivals(withK, src)
 
       // old corpus: dictionaries + initial fit (seeded, small budget —
       // the query proves the continual PLUMBING; learning quality is
@@ -189,19 +167,8 @@ object VocabStreams {
       // deterministic 5% replay slice, fixed for the run
       val replay = withK.filter(col("bucket") < 9 && col("hv") % 20 === 0)
         .select($"h", $"l", $"t").as[RawTriple]
-      // durable per-stage state in a SIBLING dir, outside freshBase's
-      // wipe path: absent _DONE the base (src/chk/out) is disposable and
-      // rebuilt, but committed SGD stages are exactly what a killed run
-      // must RESUME from — wiping them with the base would refit the old
-      // corpus from scratch and make every persistStage write dead
-      // weight. The fresh checkpoint re-delivers all files with the same
-      // deterministic batchIds (one file per trigger in forced-mtime
-      // order), and the committed-id guard skips the already-trained
-      // ones, so recovery stays exactly-once and bit-identical.
-      val stateDir = Paths.get(sys.props("java.io.tmpdir"),
-        s"${base.getFileName}_v${StateFormatVersion}_state")
       val outcome = runContinualStream(spark, src.toString, chk.toString,
-        oldRaw, replay, p, batchEpochs = 1, stateDir = Some(stateDir))
+        oldRaw, replay, p, batchEpochs = 1, stateDir = Some(stateDirOf(base)))
       // QUANTIZED EVAL CHECKPOINT (VERDICT r12 #4): stage the final
       // continually-trained model plus a deterministic test sample drawn
       // from the STREAMED slice (the triples the warm continuations
@@ -214,33 +181,20 @@ object VocabStreams {
         outcome.entities, outcome.labels)
       val evalSample = encNew.orderBy("h", "l", "t")
         .limit(graft.transe.QuantizedEval.SampleN).collect()
-      graft.transe.QuantizedEval.stageAt(spark,
-        base.resolve("evalq").toString, outcome.model, evalSample)
+      graft.transe.QuantizedEval.stageAt(spark, base.resolve("evalq").toString,
+        graft.transe.QuantizedEval.quantize(outcome.model.entity),
+        graft.transe.QuantizedEval.quantize(outcome.model.label), evalSample)
       outcome.entities.unpersist(); outcome.labels.unpersist()
       outcome.stages
         .toDF("k", "n_entities", "n_labels", "n_new_entities",
           "n_train_triples", "hinge_loss")
         .coalesce(1).write.mode("overwrite").parquet(out.toString)
-      Files.writeString(done, "ok")
-      // committed SGD stages exist to RESUME a killed run; once _DONE
-      // commits the run can never resume again, so the sibling state dir
-      // is dead weight — drop it (ADVICE r11)
-      deleteRecursively(stateDir)
     }
-    spark.read.parquet(out.toString).orderBy("k")
-  }
-
-  /** Committed staging base of the continual-train run for `sfDir` —
-    * keyed by source path + mtime + layout version (v3 added the
-    * quantized eval checkpoint under `evalq/`). */
-  private def contStreamBase(sfDir: String): java.nio.file.Path = {
-    val target = Paths.get(sfDir, "events.parquet").getParent
-      .resolve("lineitem.parquet").toAbsolutePath.normalize
-    val mtime = Files.getLastModifiedTime(target).toMillis
-    val key = java.security.MessageDigest.getInstance("SHA-256")
-      .digest(s"contstream:v3:$target:$mtime".getBytes("UTF-8"))
-      .take(8).map("%02x".format(_)).mkString
-    Paths.get(sys.props("java.io.tmpdir"), s"graft_contstream_$key")
+    // committed SGD stages exist to RESUME a killed run; once the asset
+    // is committed the run can never resume again, so the sibling state
+    // dir is dead weight — drop it (ADVICE r11)
+    deleteRecursively(stateDirOf(base))
+    base
   }
 
   /** The registered continual run's hyperparameters — the SINGLE source
@@ -275,9 +229,8 @@ object VocabStreams {
     * staged matrices. */
   def streamingContinualEval(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.transe.{QuantizedEval, Triple}
-    // ensure the continual run (and its evalq checkpoint) is committed
-    streamingContinualTrain(spark, sfDir)
-    val dir = contStreamBase(sfDir).resolve("evalq").toString
+    // the committed continual run's evalq checkpoint
+    val dir = ensureContinualRun(spark, sfDir).resolve("evalq").toString
     val entities = spark.read.parquet(s"$dir/entity")
     val labQ: Array[Array[Long]] = spark.read.parquet(s"$dir/label")
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1).toArray)
@@ -320,8 +273,12 @@ object VocabStreams {
     * (ADVICE r11). */
   private[graft] val StateFormatVersion = 1
 
+  /** A stage's marker inside its batch=<id> dir: a resume log, not a
+    * staged asset (apps/Train's `state/batch=N/_DONE` reads the same). */
+  private val StageMarker = "_DONE"
+
   private def stageDone(stateDir: java.nio.file.Path, id: Long) =
-    stateDir.resolve(s"batch=$id").resolve("_DONE")
+    stateDir.resolve(s"batch=$id").resolve(StageMarker)
 
   private def committedStages(stateDir: java.nio.file.Path): Seq[Long] = {
     if (!Files.exists(stateDir)) Seq.empty
@@ -360,7 +317,7 @@ object VocabStreams {
       tmp.resolve("model").toString)
     Files.writeString(tmp.resolve("stage.csv"),
       s"${row._1},${row._2},${row._3},${row._4},${row._5},${row._6}")
-    Files.writeString(tmp.resolve("_DONE"), "ok")
+    Files.writeString(tmp.resolve(StageMarker), "ok")
     val dst = stateDir.resolve(s"batch=$id")
     deleteRecursively(dst)
     Files.move(tmp, dst, java.nio.file.StandardCopyOption.ATOMIC_MOVE)

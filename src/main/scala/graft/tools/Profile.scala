@@ -13,7 +13,8 @@ import graft.metrics.{JobProbe, Work}
   * `noop` sink, under [[JobProbe]]. Per run it prints the wall time, the
   * probe's totals and one line per job (call site and its engine frames,
   * seconds, executor CPU, shuffle bytes); for a stream query also each micro-batch's phase
-  * durations and state commit time. `--plan` prints the formatted
+  * durations and state commit time; then the staged-asset hits, builds
+  * and build seconds of the kinds the run touched ([[graft.Assets]]). `--plan` prints the formatted
   * physical plan of the first run. An untimed `q1_agg` warms the session
   * first, and query-scoped caches are released after every run.
   *
@@ -65,6 +66,7 @@ object Profile {
     spark.streams.addListener(batches)
     try for (name <- queries; r <- 1 to runs) {
       batches.seen.clear()
+      val assetsBefore = graft.Assets.snapshot
       val p = JobProbe.measure(spark) {
         val t0 = System.nanoTime()
         val df = registry(name)(spark, sfDir)
@@ -91,6 +93,13 @@ object Profile {
         out(s"[profile]   batch ${b.batchId} ${b.name}: ${b.numInputRows} rows, " +
           s"$phases ms, state commit $commitMs ms")
       }
+      val moved = graft.Assets.snapshot.toSeq.sortBy(_._1).flatMap { case (kind, a) =>
+        val b = assetsBefore.getOrElse(kind, graft.Assets.Stats())
+        if (a == b) None
+        else Some(f"$kind hits=${a.hits - b.hits} builds=${a.builds - b.builds} " +
+          f"build=${a.buildSecs - b.buildSecs}%.2f s")
+      }
+      out(s"[profile]   assets: ${if (moved.isEmpty) "none" else moved.mkString(", ")}")
       if (plan && r == 1)
         out(df.queryExecution.explainString(FormattedMode))
       graft.CacheScope.releaseAll()

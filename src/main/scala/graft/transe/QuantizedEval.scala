@@ -1,7 +1,5 @@
 package graft.transe
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -43,19 +41,6 @@ object QuantizedEval {
   def quantize(m: Array[Array[Float]]): Array[Array[Long]] =
     m.map(_.map(x => math.floor(x.toDouble * (1L << Shift)).toLong))
 
-  /** Staging root keyed by the sfDir so a bench run at another SF can't
-    * clobber the verify run's checkpoint between the dump and the
-    * driver's DuckDB compare. Content is overwritten on every run (it is
-    * cheap: a few MB) so stale matrices from an older code version can
-    * never leak into the oracle. */
-  private[graft] def stagedDir(sfDir: String): String = {
-    val canon = Paths.get(sfDir).toAbsolutePath.normalize.toString
-    val key = java.security.MessageDigest.getInstance("SHA-256")
-      .digest(s"evalq:$canon".getBytes("UTF-8"))
-      .take(8).map("%02x".format(_)).mkString
-    Paths.get(sys.props("java.io.tmpdir"), s"graft_evalq_$key").toString
-  }
-
   /** The staging dir of the most recent run in this JVM — Verify dumps
     * oracle SQL AFTER running the queries, so by then this points at the
     * checkpoint the registered query actually ranked. Fallback: the
@@ -64,16 +49,15 @@ object QuantizedEval {
   @volatile private var lastDim: Int = 32
   @volatile private var lastL1: Boolean = false
 
-  /** Quantize + write (entity, label, test) parquet under an EXPLICIT
-    * dir — the staging core shared by the registered eval family (via
-    * [[stage]]) and the continual-trainer eval (VERDICT r12 #4), which
-    * stages into the continual stream's own committed base. */
+  /** Write quantized (entity, label) matrices and the test sample as
+    * parquet under an EXPLICIT dir — the staging core shared by the
+    * registered eval family (via [[stage]]) and the continual-trainer
+    * eval (VERDICT r12 #4), which stages into the continual stream's own
+    * committed base. */
   private[graft] def stageAt(spark: SparkSession, dir: String,
-      model: TransEModel,
-      sample: Array[Triple]): (Array[Array[Long]], Array[Array[Long]]) = {
+      entQ: Array[Array[Long]], labQ: Array[Array[Long]],
+      sample: Array[Triple]): Unit = {
     import spark.implicits._
-    val entQ = quantize(model.entity)
-    val labQ = quantize(model.label)
     spark.sparkContext
       .parallelize(entQ.zipWithIndex.map { case (v, i) => (i.toLong, v) }.toIndexedSeq)
       .toDF("id", "vec").write.mode("overwrite").parquet(s"$dir/entity")
@@ -82,20 +66,26 @@ object QuantizedEval {
       .toDF("id", "vec").coalesce(1).write.mode("overwrite").parquet(s"$dir/label")
     sample.toSeq.toDF("h", "l", "t")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/test")
-    (entQ, labQ)
   }
 
   /** Quantize + stage the checkpoint and the deterministic test sample;
     * returns (stagingDir, sample, labQ, entity DF read BACK from the
     * staged parquet — proving the matrix DuckDB sees is the matrix the
     * ranks came from). */
-  private def stage(spark: SparkSession, sfDir: String, model: TransEModel,
+  private def stage(spark: SparkSession, model: TransEModel,
       test: Dataset[Triple]): (String, Array[Triple], Array[Array[Long]],
       org.apache.spark.sql.DataFrame) = {
     val sample: Array[Triple] =
       test.orderBy("h", "l", "t").limit(SampleN).collect()
-    val dir = stagedDir(sfDir)
-    val (_, labQ) = stageAt(spark, dir, model, sample)
+    val (entQ, labQ) = (quantize(model.entity), quantize(model.label))
+    // keyed by the checkpoint's content: a model from another fit or
+    // code version is another asset, so stale matrices never reach the
+    // oracle, and the dir outlives the run for the driver's DuckDB compare
+    def rows(m: Array[Array[Long]]) = m.map(java.util.Arrays.hashCode).mkString(",")
+    val dir = graft.Assets.staged("evalq", Nil,
+        s"${rows(entQ)}|${rows(labQ)}|${sample.mkString(",")}") { d =>
+      stageAt(spark, d.toString, entQ, labQ, sample)
+    }.toString
     lastDir = Some(dir)
     lastDim = model.params.dim
     lastL1 = model.params.distance == L1
@@ -114,9 +104,9 @@ object QuantizedEval {
     * Output: one row per sampled triple, (h, l, t, rank_head, rank_tail)
     * all BIGINT, ordered by (h, l, t) — a per-triple surface hashes much
     * harder than one summary row. */
-  def run(spark: SparkSession, sfDir: String, model: TransEModel,
+  def run(spark: SparkSession, model: TransEModel,
       test: Dataset[Triple]): DataFrame = {
-    val (_, sample, labQ, entities) = stage(spark, sfDir, model, test)
+    val (_, sample, labQ, entities) = stage(spark, model, test)
     toRankDf(spark,
       rankQuantized(entities, labQ, sample, l1 = model.params.distance == L1))
   }
@@ -129,10 +119,10 @@ object QuantizedEval {
     * every distance is exact int64, so DuckDB replays the whole protocol
     * (raw count minus an anti-join against the relationally re-derived
     * encoded KG) to the bit. */
-  def runFiltered(spark: SparkSession, sfDir: String, model: TransEModel,
+  def runFiltered(spark: SparkSession, model: TransEModel,
       test: Dataset[Triple], known: Dataset[Triple]): DataFrame = {
     import spark.implicits._
-    val (_, sample, labQ, entities) = stage(spark, sfDir, model, test)
+    val (_, sample, labQ, entities) = stage(spark, model, test)
     val l1 = model.params.distance == L1
     val raw = rankQuantized(entities, labQ, sample, l1)
 
@@ -206,11 +196,11 @@ object QuantizedEval {
     * final exact top-k is a window over that tiny table. Integer
     * distances + (dist, id) total order make the cut deterministic, so
     * DuckDB replays it hash-exactly from the staged checkpoint. */
-  def suggest(spark: SparkSession, sfDir: String, model: TransEModel,
+  def suggest(spark: SparkSession, model: TransEModel,
       test: Dataset[Triple], known: Dataset[Triple],
       nQueries: Int = 10, k: Int = 5): org.apache.spark.sql.DataFrame = {
     import spark.implicits._
-    val (_, sample, labQ, entities) = stage(spark, sfDir, model, test)
+    val (_, sample, labQ, entities) = stage(spark, model, test)
     val l1 = model.params.distance == L1
 
     val pairs: Seq[(Int, Int)] =

@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.{FormattedMode, SimpleMode}
 import org.apache.spark.sql.functions._
@@ -832,5 +834,38 @@ class PlanSpec extends SparkSpec {
     assert(offenders.isEmpty,
       s"queries with un-whitelisted repeated base-table scans: $offenders")
     graft.CacheScope.releaseAll()
+  }
+
+  test("repo-wide: staged assets go through graft.Assets only") {
+    // One seam for derived state on disk: only Assets.scala may read the
+    // JVM temp dir, spell the SHA-256 key recipe, or test or write a
+    // `_DONE` / `_SUCCESS` / `_GRAFT_DONE` commit marker. Two logs kept
+    // inside assets are not memoized assets and keep their own protocol:
+    // EventStreams.txnAppend's `_committed_<id>` slots match none of the
+    // patterns, and VocabStreams' per-batch resume state is exempt below.
+    val exempt = Map(
+      ("VocabStreams.scala", "private val StageMarker = \"_DONE\"") ->
+        ("per-batch resume state, staged as batch=<id>.tmp and moved with " +
+          "ATOMIC_MOVE; apps/Train reads state/batch=N/_DONE"))
+    val rules = Seq(
+      "reads java.io.tmpdir" -> "java.io.tmpdir",
+      "spells the SHA-256 key recipe" -> "MessageDigest.getInstance(\"SHA-256\")",
+      "tests or writes a commit marker" -> "\"_DONE\"",
+      "tests or writes a commit marker" -> "\"_SUCCESS\"",
+      "tests or writes a commit marker" -> "\"_GRAFT_DONE\"")
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(root), root.toAbsolutePath)
+    val files = {
+      val w = java.nio.file.Files.walk(root)
+      try w.iterator().asScala.filter(_.toString.endsWith(".scala")).toList finally w.close()
+    }
+    assert(files.exists(_.endsWith("graft/Assets.scala")))
+    val offending = for {
+      f <- files.filterNot(_.endsWith("graft/Assets.scala"))
+      (line, i) <- java.nio.file.Files.readAllLines(f).asScala.zipWithIndex
+      (why, needle) <- rules
+      if line.contains(needle) && !exempt.contains((f.getFileName.toString, line.trim))
+    } yield s"$f:${i + 1}: $why: ${line.trim}"
+    assert(offending.isEmpty, offending.mkString("\n", "\n", ""))
   }
 }

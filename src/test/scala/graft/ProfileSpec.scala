@@ -30,6 +30,9 @@ class ProfileSpec extends SparkSpec {
     assert(jobs("stream_sessionize").exists(l =>
       l.endsWith("[stream]") && l.contains("EventStreams.scala:")),
       stream.mkString("\n"))
+    // the replay's source dir is a staged asset: its kind is counted
+    assert(stream.exists(l => l.startsWith("[profile]   assets:") &&
+      l.contains("events hits=")), stream.mkString("\n"))
   }
 
   test("JobProbe counts exactly the jobs of a one-action body") {

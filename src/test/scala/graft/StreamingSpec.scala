@@ -207,6 +207,13 @@ class StreamingSpec extends SparkSpec {
       s"stream != batch: missing=${(batch -- streamed).take(3)} extra=${(streamed -- batch).take(3)}")
   }
 
+  test("sentinel replay staging: a repeat readEventStream call runs no job") {
+    val gap = Some(30L * 60 * 1000)
+    EventStreams.readEventStream(spark, sf, gap)
+    val p = metrics.JobProbe.measure(spark)(EventStreams.readEventStream(spark, sf, gap))
+    assert(p.jobs == 0, p.jobRows.mkString("\n"))
+  }
+
   test("session_window absorbs the out-of-order replay (same sessions as batch)") {
     // the declarative late-data story: swapped-slice delivery + a
     // lateness-covering watermark must still equal the batch answer
