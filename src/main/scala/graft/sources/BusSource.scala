@@ -9,7 +9,8 @@ import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsAdmissionControl}
+import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit,
+  SupportsTriggerAvailableNow}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -224,9 +225,12 @@ object BusOffset {
   * watermark). Each batch plans ONE InputPartition PER LANE with
   * unserved rows — a skewed backlog drains in parallel exactly like
   * Kafka partitions, and a restart resumes every lane from its own
-  * committed position. */
+  * committed position. The bus is finite, so everything is available
+  * from the start: under `Trigger.AvailableNow` the engine keeps asking
+  * with the default read limit, and the batches are the same as under
+  * the default trigger. */
 final class BusMicroBatchStream(realRows: Long, nUsers: Int, batchRows: Long,
-    lanes: Int) extends MicroBatchStream with SupportsAdmissionControl {
+    lanes: Int) extends MicroBatchStream with SupportsTriggerAvailableNow {
 
   require(BusSource.Block % lanes == 0,
     s"lanes=$lanes must divide Block=${BusSource.Block} (the lateness bound)")
@@ -236,6 +240,7 @@ final class BusMicroBatchStream(realRows: Long, nUsers: Int, batchRows: Long,
     BusOffset.parse(json, expectedLanes = lanes)
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
+  override def prepareForTriggerAvailableNow(): Unit = ()
 
   override def getDefaultReadLimit: ReadLimit = ReadLimit.maxRows(batchRows)
 
@@ -251,16 +256,13 @@ final class BusMicroBatchStream(realRows: Long, nUsers: Int, batchRows: Long,
     val s = start.asInstanceOf[BusOffset]
     val t = s.served
     // honor the ENGINE-SUPPLIED limit (the SupportsAdmissionControl
-    // contract): Trigger.AvailableNow wraps the source and passes its own
-    // ReadLimit — ignoring it in favor of the captured batchRows would
-    // under-admit and let the wrapper declare the stream caught up early.
-    // Sentinels still go one per trigger regardless of the cap (they are
-    // watermark advancement, not data).
+    // contract): ignoring it in favor of the captured batchRows would
+    // under-admit. Sentinels still go one per trigger regardless of the
+    // cap (they are watermark advancement, not data).
     limit match {
       case _: org.apache.spark.sql.connector.read.streaming.ReadAllAvailable =>
-        // "everything available now" includes the self-generated
-        // sentinels: Trigger.AvailableNow captures THIS as its target
-        // offset once, so stopping at realRows would strand them
+        // "everything available now" (Trigger.Once) includes the
+        // self-generated sentinels: stopping at realRows would strand them
         dataOffset(realRows, 2)
       case rl: org.apache.spark.sql.connector.read.streaming.ReadMaxRows =>
         if (t < realRows)

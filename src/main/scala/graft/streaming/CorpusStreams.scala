@@ -63,20 +63,11 @@ object CorpusStreams {
       }
       val schema = StructType(Seq(
         StructField("doc_id", LongType), StructField("text", StringType)))
-      val q = spark.readStream
-        .schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src.toString)
-        .writeStream
-        .option("checkpointLocation", chk.toString)
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          val flagged = IncrementalDedup.probeIndex(idx, batch, n, tau)
-          flagged.write.mode("append").parquet(out.toString)
-          flagged.unpersist(): Unit
-        }
-        .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-        .start()
-      try q.processAllAvailable() finally q.stop()
+      StreamRun.eachFile(spark, schema, src, chk) { (batch: DataFrame, _: Long) =>
+        val flagged = IncrementalDedup.probeIndex(idx, batch, n, tau)
+        flagged.write.mode("append").parquet(out.toString)
+        flagged.unpersist(): Unit
+      }
     }
     spark.read.parquet(base.resolve("out").toString).orderBy("doc_id")
   }
@@ -115,20 +106,11 @@ object CorpusStreams {
           .coalesce(1).write.mode("append").parquet(src.toString)
       }
       val schema = arrivals.schema
-      val q = spark.readStream
-        .schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src.toString)
-        .writeStream
-        .option("checkpointLocation", chk.toString)
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          IvfAnn.probeAssigned(assigned, centroids, batch, nProbe, k)
-            .write.mode("append").parquet(out.toString)
-          ()
-        }
-        .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-        .start()
-      try q.processAllAvailable() finally q.stop()
+      StreamRun.eachFile(spark, schema, src, chk) { (batch: DataFrame, _: Long) =>
+        IvfAnn.probeAssigned(assigned, centroids, batch, nProbe, k)
+          .write.mode("append").parquet(out.toString)
+        ()
+      }
       assigned.unpersist()
     }
     spark.read.parquet(base.resolve("out").toString).orderBy("query_id", "rank")
@@ -184,22 +166,13 @@ object CorpusStreams {
         arrivals.filter(pmod(col("vec_id"), lit(40)) === (5 + 10 * i))
           .coalesce(1).write.mode("append").parquet(src.toString)
       }
-      val q = spark.readStream
-        .schema(arrivals.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src.toString)
-        .writeStream
-        .option("checkpointLocation", chk.toString)
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          // ingest = |batch| x nCells integer distances, index untouched
-          IvfAnn.assign(batch, centroids)
-            .write.mode("append").partitionBy("cell")
-            .parquet(delta.toString)
-          ()
-        }
-        .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-        .start()
-      try q.processAllAvailable() finally { q.stop(); q.awaitTermination() }
+      StreamRun.eachFile(spark, arrivals.schema, src, chk) { (batch: DataFrame, _: Long) =>
+        // ingest = |batch| x nCells integer distances, index untouched
+        IvfAnn.assign(batch, centroids)
+          .write.mode("append").partitionBy("cell")
+          .parquet(delta.toString)
+        ()
+      }
     }
     val deltaSchema = StructType(Seq(
       StructField("vec_id", LongType),
@@ -254,22 +227,11 @@ object CorpusStreams {
       val schema = StructType(Seq(
         StructField("doc_id", LongType), StructField("text", StringType),
         StructField("source", StringType)))
-      val q = spark.readStream
-        .schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src.toString)
-        .writeStream
-        .option("checkpointLocation", chk.toString)
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          ImportanceSampling.scoreAgainst(model, batch, buckets)
-            .write.mode("append").parquet(out.toString)
-          ()
-        }
-        .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-        .start()
-      // stop() is asynchronous — await termination before the commit,
-      // or a rebuild's wipe races the dying query's checkpoint
-      try q.processAllAvailable() finally { q.stop(); q.awaitTermination() }
+      StreamRun.eachFile(spark, schema, src, chk) { (batch: DataFrame, _: Long) =>
+        ImportanceSampling.scoreAgainst(model, batch, buckets)
+          .write.mode("append").parquet(out.toString)
+        ()
+      }
       model.unpersist()
     }
     spark.read.parquet(base.resolve("out").toString).orderBy("doc_id")
@@ -316,22 +278,11 @@ object CorpusStreams {
       }
       val schema = StructType(Seq(
         StructField("doc_id", LongType), StructField("text", StringType)))
-      val q = spark.readStream
-        .schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src.toString)
-        .writeStream
-        .option("checkpointLocation", chk.toString)
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          Decontaminate.probeGrams(grams, batch, n, keepClean = true)
-            .write.mode("append").parquet(out.toString)
-          ()
-        }
-        .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-        .start()
-      // stop() is asynchronous — await termination before the commit,
-      // or a rebuild's wipe races the dying query's checkpoint
-      try q.processAllAvailable() finally { q.stop(); q.awaitTermination() }
+      StreamRun.eachFile(spark, schema, src, chk) { (batch: DataFrame, _: Long) =>
+        Decontaminate.probeGrams(grams, batch, n, keepClean = true)
+          .write.mode("append").parquet(out.toString)
+        ()
+      }
       grams.unpersist()
     }
     spark.read.parquet(base.resolve("out").toString).orderBy("doc_id")
@@ -424,29 +375,18 @@ object CorpusStreams {
       }
       val schema = StructType(Seq(
         StructField("doc_id", LongType), StructField("text", StringType)))
-      val q = spark.readStream
-        .schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src.toString)
-        .writeStream
-        .option("checkpointLocation", chk.toString)
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          Search.postingsOf(batch)
-            .write.mode("append").partitionBy("bucket")
-            .parquet(delta.toString)
-          // the STATISTICS delta: one narrow doclen row per arrival doc
-          // (null-text docs ride with dl = 0, like the base build) — at
-          // 100 TB this is what keeps BM25's n_docs/sum_dl/dl exact
-          // without ever rescanning the corpus
-          Search.doclenOf(batch)
-            .write.mode("append").parquet(deltaDl.toString)
-          ()
-        }
-        .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-        .start()
-      // stop() is asynchronous — await termination before the commit,
-      // or a rebuild's wipe races the dying query's checkpoint
-      try q.processAllAvailable() finally { q.stop(); q.awaitTermination() }
+      StreamRun.eachFile(spark, schema, src, chk) { (batch: DataFrame, _: Long) =>
+        Search.postingsOf(batch)
+          .write.mode("append").partitionBy("bucket")
+          .parquet(delta.toString)
+        // the STATISTICS delta: one narrow doclen row per arrival doc
+        // (null-text docs ride with dl = 0, like the base build) — at
+        // 100 TB this is what keeps BM25's n_docs/sum_dl/dl exact
+        // without ever rescanning the corpus
+        Search.doclenOf(batch)
+          .write.mode("append").parquet(deltaDl.toString)
+        ()
+      }
       // the DELETION stream: takedown requests (doc_id only) arrive in
       // four micro-batches of their own, each appended as tombstones —
       // logical deletion is a probe-time anti join, physical erasure is
@@ -460,19 +400,10 @@ object CorpusStreams {
         tombstones.filter(pmod(col("doc_id"), lit(80)) === (2 + 20 * i))
           .coalesce(1).write.mode("append").parquet(srcTomb.toString)
       }
-      val q2 = spark.readStream
-        .schema(graft.operators.Search.TombstoneSchema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(srcTomb.toString)
-        .writeStream
-        .option("checkpointLocation", chkTomb.toString)
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          batch.write.mode("append").parquet(tomb.toString)
-          ()
-        }
-        .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-        .start()
-      try q2.processAllAvailable() finally { q2.stop(); q2.awaitTermination() }
+      StreamRun.eachFile(spark, graft.operators.Search.TombstoneSchema, srcTomb, chkTomb) { (batch: DataFrame, _: Long) =>
+        batch.write.mode("append").parquet(tomb.toString)
+        ()
+      }
       val baseDir = Search.stagedDirSlice(spark, sfDir, Some("doc_id % 10 != 7"))
       Search.compactIndex(spark, baseDir, delta.toString, deltaDl.toString,
         run.compacted.toString)

@@ -28,27 +28,10 @@ object EventStreams {
 
   private val sinkId = new AtomicInteger(0)
 
-  /** Peak stateful-operator row count of the LAST [[runToCompletion]]
-    * run (-1 if the query was stateless) — lets StreamingSpec assert a
-    * state-store configuration actually carried state. */
-  private[graft] val lastStateRowsPeak =
-    new java.util.concurrent.atomic.AtomicLong(-1L)
-
-  /** Stateful-operator row count AFTER the last micro-batch of the LAST
-    * [[runToCompletion]] run (-1 if stateless). On the staged replays the
-    * final sentinel pushes the watermark past every real row, so working
-    * eviction leaves ~0 rows here while a broken watermark leaves the
-    * whole corpus — the invariant the PEAK cannot see on a short replay
-    * where everything legitimately buffers before the flush. */
-  private[graft] val lastStateRowsFinal =
-    new java.util.concurrent.atomic.AtomicLong(-1L)
-
-  /** Micro-batches with input rows in the LAST [[runToCompletion]] run —
-    * a deterministic function of the staged replay (files + sentinels),
-    * so a gate on it catches trigger/staging drift that seconds cannot
-    * (VERDICT r10 #2). Always recorded (free: derived from progress). */
-  private[graft] val lastMicroBatchCount =
-    new java.util.concurrent.atomic.AtomicLong(-1L)
+  /** The seam's record of the last drained run ([[StreamRun]]). */
+  private[graft] def lastStateRowsPeak = StreamRun.lastStateRowsPeak
+  private[graft] def lastStateRowsFinal = StreamRun.lastStateRowsFinal
+  private[graft] def lastMicroBatchCount = StreamRun.lastMicroBatchCount
 
   /** File-source stream over the static events parquet (one micro-batch
     * per file by default — the standard replay harness for testing
@@ -247,11 +230,6 @@ object EventStreams {
 
   private val liveSinks = new java.util.concurrent.ConcurrentLinkedQueue[String]()
 
-  /** Run a streaming DataFrame to completion against the static input and
-    * return the sink contents as a DataFrame. Memory-sink views from
-    * PREVIOUS invocations are dropped first — each pins its full result
-    * set in driver memory, and the harness consumes every result before
-    * starting the next query. */
   /** State-partition count for the finite replay runs. Profiled r13
     * per micro-batch (sf0.1 interval-join-outer; `graft.tools.Profile
     * <sfDir> stream_interval_join_outer` prints the same per-batch
@@ -274,10 +252,36 @@ object EventStreams {
     * native overhead only pays off when state outgrows the heap, so the
     * default provider stays HDFS-backed and a deployment flips the
     * provider conf when state volume demands it. 4 is the knee: below
-    * it batch-0's real join work starts losing parallelism. */
+    * it batch-0's real join work starts losing parallelism.
+    *
+    * Per-micro-batch phases, medians in ms over 6 rounds of
+    * `stream_dedup`, `stream_asof` and `stream_sessionize` (sf0.1,
+    * `local[4]`, 4 vCPU), before and after [[StreamRun]] set the
+    * FS-based checkpoint file manager; process starts from JFR
+    * `jdk.ProcessStart`:
+    *
+    * {{{
+    * phase                       before   after
+    * triggerExecution               520     370
+    * addBatch                       366     289
+    * walCommit                       34       9
+    * commitOffsets                   34      10
+    * state commit (all stores)      415      31
+    * process starts per replay      260      62  (readlink 197 -> 0)
+    * }}}
+    *
+    * Output hashes and micro-batch counts are equal on both sides. State
+    * commit was forks, not state: RocksDB and changelog checkpointing
+    * could now save at most the ~30 ms left, so they are no longer the
+    * lever; the per-batch time is addBatch. */
   private val StateParts =
     sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTITIONS", "4")
 
+  /** Run a streaming DataFrame to completion against the static input and
+    * return the sink contents as a DataFrame. Memory-sink views from
+    * PREVIOUS invocations are dropped first — each pins its full result
+    * set in driver memory, and the harness consumes every result before
+    * starting the next query. */
   private def runToCompletion(df: DataFrame, mode: OutputMode): DataFrame = {
     val spark = df.sparkSession
     var prev = liveSinks.poll()
@@ -287,41 +291,8 @@ object EventStreams {
     }
     val name = s"graft_sink_${sinkId.incrementAndGet()}"
     liveSinks.add(name)
-    // shuffle-partition override is read at STREAM START and baked into
-    // the run's state layout; the first batch is planned ASYNCHRONOUSLY
-    // after start(), so the restore waits for the drained run (the
-    // sink's batch read-back below runs under the restored conf)
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", StateParts)
-    // start() can throw synchronously (bad source dir, analysis error) —
-    // restore the conf on that path too (ADVICE r13: a failed start
-    // previously left the session's shuffle partitions at the streaming
-    // override for its remaining lifetime)
-    val q = try {
-      df.writeStream
-        .format("memory")
-        .queryName(name)
-        .outputMode(mode)
-        .start()
-    } catch { case e: Throwable =>
-      spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-      throw e
-    }
-    try {
-      q.processAllAvailable()
-      spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-      // state observability for tests (RocksDB/HDFS provider parity):
-      // peak stateful-operator rows across the run's micro-batches
-      val st = q.recentProgress.flatMap(_.stateOperators).map(_.numRowsTotal)
-      lastStateRowsPeak.set(if (st.isEmpty) -1L else st.max)
-      val fin = q.recentProgress.lastOption.toSeq
-        .flatMap(_.stateOperators).map(_.numRowsTotal)
-      lastStateRowsFinal.set(if (fin.isEmpty) -1L else fin.sum)
-      lastMicroBatchCount.set(q.recentProgress.count(_.numInputRows > 0).toLong)
-    } finally {
-      q.stop()
-      spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-    }
+    StreamRun.drain(spark, df.writeStream.format("memory").queryName(name).outputMode(mode),
+      shufflePartitions = Some(StateParts))
     spark.table(name)
   }
 
@@ -1239,24 +1210,16 @@ object EventStreams {
       { val l = Files.list(src)
         try l.filter(_.toString.endsWith(".parquet")).findFirst().get().toString
         finally l.close() }).schema
-    val q = spark.readStream
-      .schema(changeSchema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(src.toString)
-      .writeStream
-      .option("checkpointLocation", chk.toString)
-      .foreachBatch { (changes: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!changes.isEmpty) {
-          val snapshot = changes.sparkSession.read.parquet(tablePath.toString)
-          val merged = graft.operators.Upsert
-            .applyChanges(snapshot, changes, "o_orderkey")
-          swapInto(tablePath, batchId)(next =>
-            merged.write.mode("overwrite").parquet(next.toString))
-        }
-        ()
+    StreamRun.eachFile(spark, changeSchema, src, chk) { (changes: DataFrame, batchId: Long) =>
+      if (!changes.isEmpty) {
+        val snapshot = changes.sparkSession.read.parquet(tablePath.toString)
+        val merged = graft.operators.Upsert
+          .applyChanges(snapshot, changes, "o_orderkey")
+        swapInto(tablePath, batchId)(next =>
+          merged.write.mode("overwrite").parquet(next.toString))
       }
-      .start()
-    try q.processAllAvailable() finally q.stop()
+      ()
+    }
   }
 
   /** Crash half of the atomic-swap discipline: a crash between the two
@@ -1318,32 +1281,24 @@ object EventStreams {
           src.resolve(s"batch$i.parquet"))
       }
       val schema = spark.read.parquet(src.resolve("batch0.parquet").toString).schema
-      val q = spark.readStream
-        .schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src.toString)
-        .writeStream
-        .option("checkpointLocation", chk.toString)
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-          if (!batch.isEmpty) {
-            val delta = batch.groupBy("event_type", "day")
-              .agg(count(lit(1)).as("cnt"))
-            val merged =
-              if (Files.exists(table)) {
-                val cur = batch.sparkSession.read.parquet(table.toString)
-                cur.unionByName(delta)
-                  .groupBy("event_type", "day")
-                  .agg(sum(col("cnt")).cast("long").as("cnt"))
-              } else delta
-            if (Files.exists(table))
-              swapInto(table, batchId)(next =>
-                merged.write.mode("overwrite").parquet(next.toString))
-            else merged.write.mode("overwrite").parquet(table.toString)
-          }
-          ()
+      StreamRun.eachFile(spark, schema, src, chk) { (batch: DataFrame, batchId: Long) =>
+        if (!batch.isEmpty) {
+          val delta = batch.groupBy("event_type", "day")
+            .agg(count(lit(1)).as("cnt"))
+          val merged =
+            if (Files.exists(table)) {
+              val cur = batch.sparkSession.read.parquet(table.toString)
+              cur.unionByName(delta)
+                .groupBy("event_type", "day")
+                .agg(sum(col("cnt")).cast("long").as("cnt"))
+            } else delta
+          if (Files.exists(table))
+            swapInto(table, batchId)(next =>
+              merged.write.mode("overwrite").parquet(next.toString))
+          else merged.write.mode("overwrite").parquet(table.toString)
         }
-        .start()
-      try q.processAllAvailable() finally q.stop()
+        ()
+      }
     }
     // epoch-day integers cross the engine boundary (the repo's date
     // discipline: pandas reads parquet DATE as object, not datetime)
@@ -1387,7 +1342,7 @@ object EventStreams {
         events.filter(pmod(col("event_id"), lit(4)) === i)
           .coalesce(1).write.mode("append").parquet(src.toString)
       def runOnce(): Unit = {
-        val q = spark.readStream
+        StreamRun.drain(spark, spark.readStream
           .schema(events.schema)
           .option("maxFilesPerTrigger", "1")
           .parquet(src.toString)
@@ -1397,9 +1352,7 @@ object EventStreams {
           .format("parquet")
           .option("path", out.toString)
           .option("checkpointLocation", chk.toString)
-          .outputMode(OutputMode.Append())
-          .start()
-        try q.processAllAvailable() finally q.stop()
+          .outputMode(OutputMode.Append()))
       }
       writeSplit(0); writeSplit(1)
       runOnce() // phase 1: two files, then the query is STOPPED
@@ -1474,23 +1427,15 @@ object EventStreams {
         events.filter(pmod(col("event_id"), lit(4)) === i)
           .coalesce(1).write.mode("append").parquet(src.toString)
       def runOnce(): Unit = {
-        val q = spark.readStream
-          .schema(events.schema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(src.toString)
-          .writeStream
-          .option("checkpointLocation", chk.toString)
-          .foreachBatch { (batch: DataFrame, batchId: Long) =>
-            val counts = batch
-              .groupBy(pmod(col("event_id"), lit(4)).as("bucket"), col("event_type"))
-              .agg(count(lit(1)).as("n"))
-            txnAppend(data, batchId) { staging =>
-              counts.write.mode("overwrite").parquet(staging.toString)
-            }
-            ()
+        StreamRun.eachFile(spark, events.schema, src, chk) { (batch: DataFrame, batchId: Long) =>
+          val counts = batch
+            .groupBy(pmod(col("event_id"), lit(4)).as("bucket"), col("event_type"))
+            .agg(count(lit(1)).as("n"))
+          txnAppend(data, batchId) { staging =>
+            counts.write.mode("overwrite").parquet(staging.toString)
           }
-          .start()
-        try q.processAllAvailable() finally q.stop()
+          ()
+        }
       }
       writeSplit(0); writeSplit(1)
       runOnce() // phase 1: batches 0 and 1 committed, query stopped

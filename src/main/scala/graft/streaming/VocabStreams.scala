@@ -53,24 +53,15 @@ object VocabStreams {
       val schema = StructType(Seq(
         StructField("h", StringType), StructField("l", StringType),
         StructField("t", StringType)))
-      val q = spark.readStream
-        .schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src.toString)
-        .writeStream
-        .option("checkpointLocation", chk.toString)
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          val names = batch.select(col("h").as("name"))
-            .unionAll(batch.select(col("t").as("name")))
-          val grown = DictionaryEncoder.extendDictionary(ents, names).persist()
-          grown.count() // materialize while the micro-batch is still live
-          ents.unpersist()
-          ents = grown
-          ()
-        }
-        .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-        .start()
-      try q.processAllAvailable() finally { q.stop(); q.awaitTermination() }
+      StreamRun.eachFile(spark, schema, src, chk) { (batch: DataFrame, _: Long) =>
+        val names = batch.select(col("h").as("name"))
+          .unionAll(batch.select(col("t").as("name")))
+        val grown = DictionaryEncoder.extendDictionary(ents, names).persist()
+        grown.count() // materialize while the micro-batch is still live
+        ents.unpersist()
+        ents = grown
+        ()
+      }
       ents.write.mode("overwrite").parquet(out.toString)
     }
     spark.read.parquet(base.resolve("out").toString)
@@ -428,7 +419,7 @@ object VocabStreams {
       case other => throw new IllegalArgumentException(
         s"continual stream: unknown format '$other' (parquet|tsv)")
     }
-    val q = stream
+    StreamRun.drain(spark, stream
       .writeStream
       .option("checkpointLocation", chkDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -478,12 +469,7 @@ object VocabStreams {
         }
         ()
       }
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-      .start()
-    // stop() is asynchronous — await full termination before returning,
-    // or a restart reusing this checkpoint races the dying query
-    // ("Multiple streaming queries are concurrently using <chk>")
-    try q.processAllAvailable() finally { q.stop(); q.awaitTermination() }
+      .outputMode(org.apache.spark.sql.streaming.OutputMode.Append()))
     replayP.unpersist()
     ContinualOutcome(rows.toSeq, ents, labs, model)
   }

@@ -7,13 +7,25 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Fault injection for the staged-asset protocol ([[Assets]]), each test
-  * on its own private root. */
-class AssetsSpec extends AnyFunSuite {
+  * on its own private root. Every root and input the suite creates is
+  * removed when it ends. */
+class AssetsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  private def freshRoot(): Path = Files.createTempDirectory("graft_assets_spec")
+  private val created = new java.util.concurrent.ConcurrentLinkedQueue[Path]()
+
+  private def temp(path: Path): Path = { created.add(path); path }
+
+  private def freshRoot(): Path = temp(Files.createTempDirectory("graft_assets_spec"))
+
+  override def afterAll(): Unit = try created.forEach { p =>
+    val w = Files.walk(p)
+    try w.sorted(java.util.Comparator.reverseOrder[Path]()).forEach(f => Files.delete(f))
+    finally w.close()
+  } finally super.afterAll()
 
   private def names(dir: Path): Set[String] = {
     val l = Files.list(dir)
@@ -90,7 +102,7 @@ class AssetsSpec extends AnyFunSuite {
 
   test("the key covers each input's mtime") {
     val root = freshRoot()
-    val input = Files.writeString(Files.createTempFile("graft_assets_in", ".txt"), "v")
+    val input = temp(Files.writeString(Files.createTempFile("graft_assets_in", ".txt"), "v"))
     var builds = 0
     def call(): Path = Assets.stagedUnder(root, "mtime", Seq(input), "p") { _ => builds += 1 }
     val a = call()

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 
 import graft.sources.BusSource
-import graft.streaming.EventStreams
+import graft.streaming.{EventStreams, StreamRun}
 
 /** The custom DSv2 bus connector (offset-tracked, admission-controlled,
   * out-of-order): restart recovery, generator parity, and the
@@ -33,12 +33,12 @@ class BusSourceSpec extends SparkSpec {
     val batchRows = 10700L
     val out = Files.createTempDirectory("graft_bus_out").toString
     val chk = Files.createTempDirectory("graft_bus_chk").toString
-    def start() = busStream(rows, batchRows).writeStream
+    def writer() = busStream(rows, batchRows).writeStream
       .format("parquet").option("path", out)
       .option("checkpointLocation", chk)
-      .outputMode(OutputMode.Append()).start()
+      .outputMode(OutputMode.Append())
 
-    val q1 = start()
+    val q1 = writer().start()
     try {
       val deadline = System.currentTimeMillis() + 60000
       while (q1.recentProgress.length < 2 && System.currentTimeMillis() < deadline)
@@ -46,8 +46,7 @@ class BusSourceSpec extends SparkSpec {
       assert(q1.recentProgress.length >= 2, "first run made no progress")
     } finally q1.stop()
 
-    val q2 = start()
-    try q2.processAllAvailable() finally q2.stop()
+    StreamRun.drain(spark, writer())
 
     val got = spark.read.parquet(out)
     assert(got.count() == rows + 2, s"row census: ${got.count()} != ${rows + 2}")
@@ -58,10 +57,10 @@ class BusSourceSpec extends SparkSpec {
   }
 
   test("Trigger.AvailableNow drains the whole bus (engine ReadLimit honored)") {
-    // the AvailableNow wrapper passes its own ReadLimit to
-    // latestOffset(start, limit); a source that ignores it in favor of
-    // its captured batchRows under-admits and the wrapper declares the
-    // stream caught up after one batch — the census then comes up short
+    // the source supports AvailableNow itself, so the engine keeps its
+    // admission control: batchRows per trigger, then one sentinel per
+    // trigger. A source without that support falls back to one batch of
+    // everything, and a source that under-admits comes up short
     val rows = 30000L
     val out = Files.createTempDirectory("graft_bus_an_out").toString
     val chk = Files.createTempDirectory("graft_bus_an_chk").toString
@@ -79,6 +78,8 @@ class BusSourceSpec extends SparkSpec {
     val got = spark.read.parquet(out)
     assert(got.count() == rows + 2,
       s"AvailableNow under-drained: ${got.count()} != ${rows + 2}")
+    val batches = q.recentProgress.count(_.numInputRows > 0)
+    assert(batches == 5 + 2, s"$batches batches: 5 of 7000 rows, then 2 sentinels")
   }
 
   test("lane frontier: conservation, per-lane bounds, monotone, block-ordered") {

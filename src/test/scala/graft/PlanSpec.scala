@@ -853,19 +853,46 @@ class PlanSpec extends SparkSpec {
       "tests or writes a commit marker" -> "\"_DONE\"",
       "tests or writes a commit marker" -> "\"_SUCCESS\"",
       "tests or writes a commit marker" -> "\"_GRAFT_DONE\"")
+    val offending = for {
+      (f, lines) <- mainSources.filterNot(_._1.endsWith("graft/Assets.scala"))
+      (line, i) <- lines.zipWithIndex
+      (why, needle) <- rules
+      if line.contains(needle) && !exempt.contains((f.getFileName.toString, line.trim))
+    } yield s"$f:${i + 1}: $why: ${line.trim}"
+    assert(offending.isEmpty, offending.mkString("\n", "\n", ""))
+  }
+
+  test("repo-wide: stream queries start, drain and stop in StreamRun only") {
+    // One run seam: the session confs every replay needs (checkpoint
+    // file manager, state partitions) and the one stop order live in
+    // streaming/StreamRun.scala. Comment lines are not code. No
+    // exemptions today.
+    val rules = Seq(
+      "starts a stream writer" -> ".start(",
+      "drains a query" -> "processAllAvailable",
+      "waits for a query" -> "awaitTermination")
+    val offending = for {
+      (f, lines) <- mainSources.filterNot(_._1.endsWith("graft/streaming/StreamRun.scala"))
+      (line, i) <- lines.zipWithIndex
+      code = line.trim
+      if !(code.startsWith("*") || code.startsWith("/*") || code.startsWith("//"))
+      (why, needle) <- rules
+      if code.contains(needle)
+    } yield s"$f:${i + 1}: $why: $code"
+    assert(offending.isEmpty, offending.mkString("\n", "\n", ""))
+  }
+
+  /** Every `src/main` Scala file with its lines; the seam files must be
+    * among them, or a gate above would pass vacuously. */
+  private lazy val mainSources: Seq[(java.nio.file.Path, Seq[String])] = {
     val root = java.nio.file.Paths.get("src/main/scala")
     assert(java.nio.file.Files.isDirectory(root), root.toAbsolutePath)
     val files = {
       val w = java.nio.file.Files.walk(root)
       try w.iterator().asScala.filter(_.toString.endsWith(".scala")).toList finally w.close()
     }
-    assert(files.exists(_.endsWith("graft/Assets.scala")))
-    val offending = for {
-      f <- files.filterNot(_.endsWith("graft/Assets.scala"))
-      (line, i) <- java.nio.file.Files.readAllLines(f).asScala.zipWithIndex
-      (why, needle) <- rules
-      if line.contains(needle) && !exempt.contains((f.getFileName.toString, line.trim))
-    } yield s"$f:${i + 1}: $why: ${line.trim}"
-    assert(offending.isEmpty, offending.mkString("\n", "\n", ""))
+    assert(Seq("graft/Assets.scala", "graft/streaming/StreamRun.scala")
+      .forall(seam => files.exists(_.endsWith(seam))))
+    files.map(f => f -> java.nio.file.Files.readAllLines(f).asScala.toSeq)
   }
 }
