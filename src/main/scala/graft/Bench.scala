@@ -90,7 +90,9 @@ object Bench {
     val passes = 3
     val named = SparkEntry.queries.toSeq.sortBy(_._1)
     try SparkEntry.queries("q1_agg")(spark, sfDir).count()
-    catch { case _: Throwable => () }
+    catch {
+      case e: Throwable => System.err.println(s"[bench] warm-up q1_agg failed: ${e.getMessage}")
+    }
     val samples: Seq[Seq[(String, Option[Double])]] = (1 to passes).map { _ =>
       named.map { case (name, fn) =>
         val t0 = System.nanoTime()

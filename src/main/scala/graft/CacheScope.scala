@@ -15,8 +15,9 @@ import org.apache.spark.sql.util.{ExecutionListenerManager, QueryExecutionListen
   * harness (Verify between query dumps, Bench between timed runs) calls
   * [[releaseAll]] once the consuming action is done. MEMOIZED caches
   * shared ACROSS queries (the KG edge list, the minhash pair set, the
-  * encoded KG) are deliberately NOT registered — releasing those would
-  * undo the family memoization this registry must not touch.
+  * encoded KG) live in the memo tier, [[Assets.memo]], which has its own
+  * session binding and byte budget; they are deliberately NOT registered
+  * here — releasing those would undo the family memoization.
   *
   * Outside the harness nothing calls releaseAll, so the registry is
   * SELF-LIMITING (ADVICE r13): past [[MaxLive]] entries, [[register]]

@@ -17,7 +17,24 @@ object Tables {
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
     if (name == "events") events(spark, sfDir)
     else if (name == "embeddings") embeddings(spark, sfDir)
-    else spark.read.parquet(s"$sfDir/$name.parquet")
+    else parquet(spark, s"$sfDir/$name.parquet")
+
+  /** Reads `path` with its schema given rather than inferred: Spark's
+    * inference runs one job per read. The schema is a session-free memo
+    * entry keyed by the file's path, its modification time and the
+    * `nanosAsLong` setting (which changes how a nanosecond timestamp
+    * reads). A missing path fails the way Spark reports it. */
+  private def parquet(spark: SparkSession, path: String): DataFrame = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(p)) spark.read.parquet(path)
+    else {
+      val key = s"$path|${fs.getFileStatus(p).getModificationTime}|" +
+        spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false")
+      spark.read.schema(Assets.memo("tableSchema", spark, key)(spark.read.parquet(path).schema))
+        .parquet(path)
+    }
+  }
 
   def region(spark: SparkSession, d: String): DataFrame    = load(spark, d, "region")
   def nation(spark: SparkSession, d: String): DataFrame    = load(spark, d, "nation")
@@ -37,7 +54,7 @@ object Tables {
     */
   def events(spark: SparkSession, d: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    normalizeEventTs(spark.read.parquet(s"$d/events.parquet"))
+    normalizeEventTs(parquet(spark, s"$d/events.parquet"))
   }
 
   /** The file's ACTUAL schema (probed, not assumed): `ts` is LongType when
@@ -46,7 +63,7 @@ object Tables {
     * can never disagree on the source again. */
   def eventsRawSchema(spark: SparkSession, d: String): org.apache.spark.sql.types.StructType = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.read.parquet(s"$d/events.parquet").schema
+    parquet(spark, s"$d/events.parquet").schema
   }
 
   /** Normalize the probed `ts` to TimestampType (microsecond precision):
@@ -73,7 +90,7 @@ object Tables {
     * is pyarrow's default for plain Python floats), normalize here in
     * ONE place instead of failing across a dozen queries. */
   def embeddings(spark: SparkSession, d: String): DataFrame = {
-    val raw = spark.read.parquet(s"$d/embeddings.parquet")
+    val raw = parquet(spark, s"$d/embeddings.parquet")
     raw.schema("embedding").dataType match {
       case org.apache.spark.sql.types.ArrayType(
         org.apache.spark.sql.types.FloatType, _) => raw

@@ -18,11 +18,10 @@ import org.apache.spark.sql.DataFrame
   * transparent. Frames with no local file lineage (in-memory test data)
   * skip staging and always train fresh. Artifacts round-trip via Java
   * serialization as staged assets ([[graft.Assets]], whose per-user 0700
-  * root is what makes deserializing them safe); the in-JVM map keeps
-  * re-reads free within a sweep.
+  * root is what makes deserializing them safe); the in-JVM memo tier
+  * ([[graft.Assets.memo]]) keeps re-reads free within a sweep.
   */
 object ModelStaging {
-  private val mem = scala.collection.concurrent.TrieMap.empty[String, AnyRef]
 
   /** File leaves from the ANALYZED plan. `Dataset.inputFiles` reads the
     * OPTIMIZED plan, where the CacheManager substitutes InMemoryRelation
@@ -70,16 +69,16 @@ object ModelStaging {
         // does not print — two corpora differing only in local rows must
         // not collide)
         val semHash = df.queryExecution.analyzed.semanticHash()
+        var built: Option[T] = None
         val dir = graft.Assets.staged("model", files, s"$tag|$plan|$semHash") { d =>
-          val built = build
+          built = Some(build)
           val out = new java.io.ObjectOutputStream(Files.newOutputStream(d.resolve("model.bin")))
-          try out.writeObject(built) finally out.close()
-          mem.put(d.toString, built.asInstanceOf[AnyRef])
+          try out.writeObject(built.get) finally out.close()
         }
-        mem.getOrElseUpdate(dir.toString, {
+        graft.Assets.memo("modelLoaded", df.sparkSession, dir.toString)(built.getOrElse {
           val in = new java.io.ObjectInputStream(Files.newInputStream(dir.resolve("model.bin")))
           in.setObjectInputFilter(deserFilter)
-          try in.readObject() finally in.close()
-        }).asInstanceOf[T]
+          try in.readObject().asInstanceOf[T] finally in.close()
+        })
     }
 }

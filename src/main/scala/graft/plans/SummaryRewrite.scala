@@ -141,8 +141,11 @@ object SummaryRewrite extends Rule[LogicalPlan] {
     // build a FRESH summary scan (fresh exprIds per use — a plan may
     // legally contain two rewritten aggregates)
     val spark = SparkSession.active
+    // a summary whose files are gone serves no rewrite: the aggregate
+    // then plans over the view itself, which is always correct
     val summary = try spark.read.parquet(entry.summaryPath) catch {
-      case _: Exception => return None
+      case e: org.apache.spark.sql.AnalysisException if e.getCondition == "PATH_NOT_FOUND" =>
+        return None
     }
     val sPlan = summary.queryExecution.analyzed
     val sAttr: Map[String, Attribute] = sPlan.output.map(a => a.name -> a).toMap

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.Tables
+import graft.{Assets, Tables}
 import graft.operators._
 
 /** Training-data-pipeline operator surface: dedup, text analysis,
@@ -84,80 +84,33 @@ object PipelineQueries {
     * dedup_minhash_lsh and dedup_components consume the same pair set,
     * and the LSH pipeline (shingle -> 64 minhashes -> banded buckets ->
     * exact verify) is the expensive part — recomputing it inside the
-    * components query would double its cost. Same liveness discipline as
-    * TransEQueries.encodedKg: a cached entry bound to a stopped
-    * SparkContext is discarded and rebuilt. */
-  private val minhashCache =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-  private def minhashPairs(s: SparkSession, d: String): DataFrame =
-    minhashCache.get(d)
-      .filter(!_.sparkSession.sparkContext.isStopped)
-      .filter(_.sparkSession eq s) // ADVICE r12 #2: session identity
-      .getOrElse {
-        // evict BEFORE persisting the replacement: sessions share one
-        // CacheManager, and unpersisting the old entry AFTER the new
-        // persist drops the new (sameResult) cache entry with it — the
-        // "memoized" frame silently reverts to raw lineage (r14)
-        minhashCache.remove(d).foreach(o =>
-          try o.unpersist(blocking = false) catch { case _: Throwable => () })
-        val v = Dedup.minhashLsh(Tables.documents(s, d)).persist()
-        v.count() // materialize so every consumer reads the cached pairs
-        minhashCache.put(d, v)
-        v
-      }
+    * components query would double its cost. */
+  private[graft] def minhashPairs(s: SparkSession, d: String): DataFrame =
+    Assets.memo("minhashPairs", s, d)(Dedup.minhashLsh(Tables.documents(s, d)))
 
   /** Dup-span zip tally memoized per sfDir (VERDICT r13 #2):
     * text_scrub_dup_spans and text_dup_span_coverage both derive from
     * the same (doc, pos, tok, gram-hash) corpus tally — the tokenize +
     * hash pass is the expensive part (~9 s of the pair's combined bench
-    * cost), and each query's own rollups are cheap. Same liveness /
-    * session-identity discipline as minhashPairs. */
-  private val dupSpanCache =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-  private def dupSpanTally(s: SparkSession, d: String): DataFrame =
-    dupSpanCache.get(d)
-      .filter(!_.sparkSession.sparkContext.isStopped)
-      .filter(_.sparkSession eq s)
-      .getOrElse {
-        // evict-before-build — see minhashPairs
-        dupSpanCache.remove(d).foreach(o =>
-          try o.unpersist(blocking = false) catch { case _: Throwable => () })
-        val v = TextAnalysis.dupSpanTallyPlan(Tables.documents(s, d)).persist()
-        v.count() // materialize so every consumer reads the cached tally
-        dupSpanCache.put(d, v)
-        v
-      }
+    * cost), and each query's own rollups are cheap. */
+  private[graft] def dupSpanTally(s: SparkSession, d: String): DataFrame =
+    Assets.memo("dupSpanTally", s, d)(
+      TextAnalysis.dupSpanTallyPlan(Tables.documents(s, d)))
 
   /** Quality-classifier token tally memoized per sfDir (VERDICT r13 #3):
     * clf_quality_vocab and clf_quality_score share one (doc, decile,
     * distinct-token) corpus pass — the vocab query trains the model, the
     * score query trains it AND applies it, and both costs are dominated
     * by the tokenize/decile tally this caches. */
-  private val clfEnrichedCache =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-  private def clfEnriched(s: SparkSession, d: String): DataFrame =
-    clfEnrichedCache.get(d)
-      .filter(!_.sparkSession.sparkContext.isStopped)
-      .filter(_.sparkSession eq s)
-      .getOrElse {
-        // evict-before-build — see minhashPairs
-        clfEnrichedCache.remove(d).foreach(o =>
-          try o.unpersist(blocking = false) catch { case _: Throwable => () })
-        val v = QualityClassifier.enrichedTokensPlan(Tables.documents(s, d))
-          .persist()
-        v.count()
-        clfEnrichedCache.put(d, v)
-        v
-      }
+  private[graft] def clfEnriched(s: SparkSession, d: String): DataFrame =
+    Assets.memo("clfEnriched", s, d)(
+      QualityClassifier.enrichedTokensPlan(Tables.documents(s, d)))
 
   /** BPE merge training memoized per sfDir: vocab_bpe_merges and
-    * vocab_bpe_pieces share one greedy training loop (the merge list is
-    * driver-local metadata — plain values, no Spark-session liveness to
-    * guard, so a simple TrieMap suffices). */
-  private val bpeCache =
-    scala.collection.concurrent.TrieMap.empty[String, Seq[Bpe.Merge]]
-  private def bpeMerges(s: SparkSession, d: String): Seq[Bpe.Merge] =
-    bpeCache.getOrElseUpdate(d, Bpe.trainMerges(Tables.documents(s, d)))
+    * vocab_bpe_pieces share one greedy training loop. The merge list is
+    * driver-local, so the entry serves any session. */
+  private[graft] def bpeMerges(s: SparkSession, d: String): Seq[Bpe.Merge] =
+    Assets.memo("bpeMerges", s, d)(Bpe.trainMerges(Tables.documents(s, d)))
 
   /** Oracle PRESENTATION order per query, applied at this registration
     * boundary — NOT inside the operators (VERDICT r5 #2): a total sort of

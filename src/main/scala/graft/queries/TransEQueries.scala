@@ -1,11 +1,9 @@
 package graft.queries
 
-import scala.collection.concurrent.TrieMap
-
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Assets, Tables}
 import graft.transe._
 
 /** The TransE pipeline (the reference's whole surface, SURVEY §3) driven by
@@ -130,28 +128,18 @@ object TransEQueries {
     * names get dense ids from the old count up, same deterministic
     * sorted assignment. The reference rebuilds dictionaries from scratch
     * per file (`utils.py:6-28`) — new entities mean a full retrain.
-    * Output: the extended ENTITY dictionary (name, id), ordered by id. */
-  private val standingDictCache = TrieMap.empty[String, (DataFrame, DataFrame)]
-
-  /** The STANDING state (old-corpus dictionaries) is setup, not the
+    * Output: the extended ENTITY dictionary (name, id), ordered by id.
+    *
+    * The STANDING state (old-corpus dictionaries) is setup, not the
     * operator under test — memoized per sfDir like encodedKg so the
-    * bench's repeated invocations measure the EXTENSION, with the same
-    * dead-context liveness guard. */
-  private def standingDicts(spark: SparkSession, dir: String):
-      (DataFrame, DataFrame) = {
-    import spark.implicits._
-    standingDictCache.get(dir)
-      .filter(!_._1.sparkSession.sparkContext.isStopped)
-      .getOrElse {
-        val oldRaw = kgTriples(spark, dir)
-          .filter(contentBucket < 9).as[RawTriple]
-        val (e, l) = DictionaryEncoder.buildDictionaries(oldRaw)
-        val (eP, lP) = (e.persist(), l.persist())
-        eP.count(); lP.count()
-        standingDictCache.put(dir, (eP, lP))
-        (eP, lP)
-      }
-  }
+    * bench's repeated invocations measure the EXTENSION. */
+  private[graft] def standingDicts(spark: SparkSession, dir: String):
+      (DataFrame, DataFrame) =
+    Assets.memo("kgStandingDicts", spark, dir) {
+      import spark.implicits._
+      DictionaryEncoder.buildDictionaries(
+        kgTriples(spark, dir).filter(contentBucket < 9).as[RawTriple])
+    }
 
   private def contentBucket =
     conv(substring(md5(
@@ -163,28 +151,12 @@ object TransEQueries {
     * (six table scans + the lineitem `distinct()` shuffle + an md5 over
     * all 1.4M triples at sf0.1) just to select the ~10% batch, and that
     * staging dominated the measured min (VERDICT r10 #6: 2.55 s min vs
-    * the 1.18 s extension recorded in SCALE.md). Memoized per sfDir with
-    * the same dead-context guard as the standing dictionaries. */
-  private val arrivalCache = TrieMap.empty[String, Dataset[RawTriple]]
-
-  private def arrivingSlice(spark: SparkSession, dir: String): Dataset[RawTriple] = {
-    import spark.implicits._
-    arrivalCache.get(dir)
-      .filter(!_.sparkSession.sparkContext.isStopped)
-      .filter(_.sparkSession eq spark) // ADVICE r12 #2: session identity
-      .getOrElse {
-        // evict BEFORE persisting the replacement: sessions share one
-        // CacheManager, so unpersisting the old entry AFTER the new
-        // persist drops the new (sameResult) cache entry with it (r14)
-        arrivalCache.remove(dir).foreach(o =>
-          try o.unpersist(blocking = false) catch { case _: Throwable => () })
-        val d = kgTriples(spark, dir).filter(contentBucket >= 9)
-          .as[RawTriple].persist()
-        d.count()
-        arrivalCache.put(dir, d)
-        d
-      }
-  }
+    * the 1.18 s extension recorded in SCALE.md). Memoized per sfDir. */
+  private[graft] def arrivingSlice(spark: SparkSession, dir: String): Dataset[RawTriple] =
+    Assets.memo("kgArrivals", spark, dir) {
+      import spark.implicits._
+      kgTriples(spark, dir).filter(contentBucket >= 9).as[RawTriple]
+    }
 
   def kgEncodeIncremental(spark: SparkSession, dir: String): DataFrame = {
     val newRaw = arrivingSlice(spark, dir)
@@ -249,38 +221,19 @@ object TransEQueries {
       nLabels: Int,
       nTrain: Long)
 
-  /** Fits keyed by (sfDir, partitioned store). */
-  private val cache = TrieMap.empty[(String, Boolean), (Fitted, Dataset[Triple])]
-  private val encodeCache =
-    TrieMap.empty[String, (Dataset[Triple], org.apache.spark.sql.DataFrame,
-      org.apache.spark.sql.DataFrame, Int, Int)]
-
   /** Encode once per sfDir and memoize — kg_encode, fitted() and the
     * bench epoch metric all need the same encoded KG; the encoded Dataset
     * is persisted so downstream consumers don't recompute the lineage.
-    * (encodeAll persists the dictionaries itself.) A cached entry is only
-    * reused if its owning SparkContext is still alive — the key is the
-    * sfDir, so a stopped-and-recreated session must recompute rather
-    * than return Datasets bound to a dead context. */
+    * (encodeAll persists the dictionaries itself.) */
   def encodedKg(spark: SparkSession, dir: String): (Dataset[Triple],
-      org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame, Int, Int) =
-    encodeCache.get(dir)
-      .filter(!_._1.sparkSession.sparkContext.isStopped)
-      .filter(_._1.sparkSession eq spark) // ADVICE r12 #2: session identity
-      .getOrElse {
-        import spark.implicits._
-        // evict-before-build — see arrivingSlice
-        encodeCache.remove(dir).foreach(o =>
-          try o._1.unpersist(blocking = false) catch { case _: Throwable => () })
-        val raw = kgTriples(spark, dir).as[RawTriple]
-        val (enc, ents, labs) = DictionaryEncoder.encodeAll(raw)
-        val v = (enc.persist(), ents, labs, ents.count().toInt, labs.count().toInt)
-        encodeCache.put(dir, v)
-        v
-      }
+      DataFrame, DataFrame, Int, Int) =
+    Assets.memo("kgEncoded", spark, dir) {
+      import spark.implicits._
+      val (enc, ents, labs) = DictionaryEncoder.encodeAll(kgTriples(spark, dir).as[RawTriple])
+      (enc, ents, labs, ents.count().toInt, labs.count().toInt)
+    }
 
-  /** Train once per sfDir and memoize (several queries + bench share it);
-    * same liveness guard as encodedKg. */
+  /** Train once per sfDir and memoize (several queries + bench share it). */
   def fitted(spark: SparkSession, dir: String): (Fitted, Dataset[Triple]) =
     memoFit(spark, dir, partitioned = false)
 
@@ -289,21 +242,17 @@ object TransEQueries {
   def fittedPartitioned(spark: SparkSession, dir: String): Fitted =
     memoFit(spark, dir, partitioned = true)._1
 
-  private def memoFit(spark: SparkSession, dir: String,
+  /** Fits keyed by (sfDir, partitioned store), with the held-out split. */
+  private[graft] def memoFit(spark: SparkSession, dir: String,
       partitioned: Boolean): (Fitted, Dataset[Triple]) =
-    cache.get((dir, partitioned))
-      .filter(!_._2.sparkSession.sparkContext.isStopped)
-      .filter(_._2.sparkSession eq spark) // ADVICE r12 #2: session identity
-      .getOrElse {
-        val (train, test, nTrainRows, nEnt, nLab) = trainTestSplit(spark, dir)
-        val trainer = new TransETrainer(paramsFor(dir))
-        val model =
-          if (partitioned) trainer.fitPartitioned(train, nEnt, nLab)
-          else trainer.fit(train, nEnt, nLab)
-        val v = (Fitted(model, trainer, nEnt, nLab, nTrainRows), test)
-        cache.put((dir, partitioned), v)
-        v
-      }
+    Assets.memo("kgFit", spark, s"$dir|partitioned=$partitioned") {
+      val (train, test, nTrainRows, nEnt, nLab) = trainTestSplit(spark, dir)
+      val trainer = new TransETrainer(paramsFor(dir))
+      val model =
+        if (partitioned) trainer.fitPartitioned(train, nEnt, nLab)
+        else trainer.fit(train, nEnt, nLab)
+      (Fitted(model, trainer, nEnt, nLab, nTrainRows), test)
+    }
 
   /** Held-out split (placed_by edges of orderkey % 17 == 0) over the
     * memoized encoded KG — shared by the broadcast and partitioned

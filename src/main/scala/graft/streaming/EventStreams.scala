@@ -638,21 +638,19 @@ object EventStreams {
     * after a later-timestamped event, so delay = 2.5 spans + margin
     * covers it. Memoized per (events file, mtime, slices) — the min/max
     * probe is one scan the three former copies each paid separately. */
-  private val oooBoundsCache =
-    scala.collection.concurrent.TrieMap.empty[String, (Long, Long)]
   private[graft] def oooLatenessBounds(spark: SparkSession,
       sfDir: String, slices: Int): (Long, Long) = {
     val target = java.nio.file.Paths.get(sfDir, "events.parquet")
       .toAbsolutePath.normalize
     val mtime = java.nio.file.Files.getLastModifiedTime(target).toMillis
-    oooBoundsCache.getOrElseUpdate(s"$target:$mtime:$slices", {
+    graft.Assets.memo("oooBounds", spark, s"$target:$mtime:$slices") {
       val mm = graft.Tables.events(spark, sfDir)
         .agg(min(unix_micros(col("ts"))).as("a"),
           max(unix_micros(col("ts"))).as("b")).head()
       val sliceSpanMicros = (mm.getLong(1) - mm.getLong(0)) / slices + 1
       val delayMs = (sliceSpanMicros * 5 / 2) / 1000L + 1000L
       (sliceSpanMicros, delayMs)
-    })
+    }
   }
 
   def sessionizeNativeOoo(spark: SparkSession, sfDir: String,

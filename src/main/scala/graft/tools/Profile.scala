@@ -13,8 +13,9 @@ import graft.metrics.{JobProbe, Work}
   * `noop` sink, under [[JobProbe]]. Per run it prints the wall time, the
   * probe's totals and one line per job (call site and its engine frames,
   * seconds, executor CPU, shuffle bytes); for a stream query also each micro-batch's phase
-  * durations and state commit time; then the staged-asset hits, builds
-  * and build seconds of the kinds the run touched ([[graft.Assets]]). `--plan` prints the formatted
+  * durations and state commit time; then the asset hits, builds and build
+  * seconds of the kinds the run touched, staged or memoized, with a memo
+  * kind's resident bytes ([[graft.Assets]]). `--plan` prints the formatted
   * physical plan of the first run. An untimed `q1_agg` warms the session
   * first, and query-scoped caches are released after every run.
   *
@@ -97,7 +98,8 @@ object Profile {
         val b = assetsBefore.getOrElse(kind, graft.Assets.Stats())
         if (a == b) None
         else Some(f"$kind hits=${a.hits - b.hits} builds=${a.builds - b.builds} " +
-          f"build=${a.buildSecs - b.buildSecs}%.2f s")
+          f"build=${a.buildSecs - b.buildSecs}%.2f s" +
+          (if (a.residentBytes > 0) s" resident=${mb(a.residentBytes)}" else ""))
       }
       out(s"[profile]   assets: ${if (moved.isEmpty) "none" else moved.mkString(", ")}")
       if (plan && r == 1)

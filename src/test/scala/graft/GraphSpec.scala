@@ -593,31 +593,30 @@ class GraphSpec extends SparkSpec with PerfProbing {
     assert(viaLayout == viaEntry)
   }
 
-  test("layout registry: LRU-evicts over budget, rebuilt asset row-identical") {
-    // r15 (VERDICT r14 #2 "what's wrong"): the nine per-kind TrieMaps
-    // became ONE size-accounted registry with a byte budget. Under a
-    // 1-byte budget every insert evicts the previous LRU entry down to a
-    // single resident asset; a re-request rebuilds and stays correct.
-    val reg = graft.queries.GraphQueries.LayoutRegistry
-    val before = reg.budgetBytes
+  test("memo tier: LRU-evicts over budget, rebuilt graph and pipeline frames row-identical") {
+    // one byte-budgeted tier for every memo kind: under a 1-byte budget
+    // each build evicts every other entry; a re-request rebuilds the
+    // evicted frame from lineage, row for row
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSet
+    def builds(kind: String) = Assets.snapshot.getOrElse(kind, Assets.Stats()).builds
+    val edges = rows(graft.queries.GraphQueries.kgEdges(spark, sf))
+    val pairs = rows(graft.queries.PipelineQueries.minhashPairs(spark, sf))
+    val before = Assets.memoBudgetBytes
     try {
-      val base = graft.queries.GraphQueries.kgEdges(spark, sf)
-        .collect().map(r => (r.getString(0), r.getString(1))).toSet
-      reg.budgetBytes = 1L
-      // registry hits never evict — clear so both gets are INSERTS (the
-      // full suite populates all kinds before this test runs)
-      reg.clearForTest()
-      // force churn: each get over-budget evicts down to one entry
+      Assets.memoBudgetBytes = 1L
+      val (edgeBuilds, pairBuilds) = (builds("kgEdges"), builds("minhashPairs"))
+      // a new session forces a build: a held entry would be a hit, and a
+      // hit never evicts
+      graft.queries.PipelineQueries.dupSpanTally(spark.newSession(), sf).count()
+      assert(Assets.memoEntries == 1,
+        s"budget=1 must LRU down to one resident entry, got ${Assets.memoEntries}")
       graft.queries.GraphQueries.kgCanonicalEdges(spark, sf).count()
-      graft.queries.GraphQueries.kgUndirectedLayout(spark, sf).count()
-      assert(reg.entryCount == 1,
-        s"budget=1 must LRU down to one resident asset, got ${reg.entryCount}")
-      // the evicted kgEdges rebuilds transparently and row-identically
-      val rebuilt = graft.queries.GraphQueries.kgEdges(spark, sf)
-        .collect().map(r => (r.getString(0), r.getString(1))).toSet
-      assert(rebuilt == base, "rebuilt layout diverged after eviction")
+      assert(rows(graft.queries.GraphQueries.kgEdges(spark, sf)) == edges)
+      assert(rows(graft.queries.PipelineQueries.minhashPairs(spark, sf)) == pairs)
+      assert(builds("kgEdges") > edgeBuilds && builds("minhashPairs") > pairBuilds,
+        "the evicted entries were not rebuilt")
     } finally {
-      reg.budgetBytes = before
+      Assets.memoBudgetBytes = before
       CacheScope.releaseAll()
     }
   }

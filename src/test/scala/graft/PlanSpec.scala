@@ -882,6 +882,53 @@ class PlanSpec extends SparkSpec {
     assert(offending.isEmpty, offending.mkString("\n", "\n", ""))
   }
 
+  test("mv rewrite: a registration whose summary files are gone plans over the view") {
+    import spark.implicits._
+    graft.plans.SummaryRewrite.clear()
+    try {
+      val dir = java.nio.file.Files.createTempDirectory("graft_mvgone")
+      val src = dir.resolve("src.parquet").toString
+      (1 to 100).map(i => (s"g${i % 4}", i.toLong)).toDF("g", "m").write.parquet(src)
+      val view = spark.read.parquet(src)
+      graft.plans.SummaryRewrite.register(view, graft.plans.SummaryRewrite.Entry(
+        dir.resolve("never_written.parquet").toString, Seq("g"), "cnt", Map.empty))
+      val got = view.groupBy("g").agg(count(lit(1)).as("n"))
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      assert(got == (0 until 4).map(g => s"g$g" -> 25L).toMap)
+    } finally graft.plans.SummaryRewrite.clear()
+  }
+
+  test("repo-wide: in-JVM memos go through graft.Assets.memo only") {
+    // One memo tier: only Assets.scala may keep a keyed map or judge a
+    // frame's session (its liveness or identity). Comment lines are not
+    // code. The exemptions below hold state that is not a memo.
+    val exempt = Map(
+      ("SummaryRewrite.scala", "TrieMap") -> ("rewrite registrations: evicting " +
+        "one would change plans, and nothing can rebuild it"),
+      ("JobProbe.scala", "mutable.Map.empty") ->
+        "one listener's per-job bookkeeping, dropped with the listener",
+      ("DedupComponents.scala", "mutable.HashMap.empty") ->
+        "a local union-find inside one call")
+    val rules = Seq(
+      "keeps a concurrent map" -> "TrieMap",
+      "keeps a mutable map" -> "mutable.Map.empty",
+      "keeps a mutable map" -> "mutable.HashMap.empty",
+      "checks a session's liveness" -> ".sparkContext.isStopped",
+      "checks a session's identity" -> "sparkSession eq")
+    val hits = for {
+      (f, lines) <- mainSources.filterNot(_._1.endsWith("graft/Assets.scala"))
+      (line, i) <- lines.zipWithIndex
+      code = line.trim
+      if !(code.startsWith("*") || code.startsWith("/*") || code.startsWith("//"))
+      (why, needle) <- rules
+      if code.contains(needle)
+    } yield ((f.getFileName.toString, needle), s"$f:${i + 1}: $why: $code")
+    val offending = hits.filterNot(h => exempt.contains(h._1)).map(_._2)
+    assert(offending.isEmpty, offending.mkString("\n", "\n", ""))
+    // every exemption is still needed
+    assert(hits.map(_._1).toSet == exempt.keySet, hits.map(_._2).mkString("\n"))
+  }
+
   /** Every `src/main` Scala file with its lines; the seam files must be
     * among them, or a gate above would pass vacuously. */
   private lazy val mainSources: Seq[(java.nio.file.Path, Seq[String])] = {

@@ -35,6 +35,16 @@ class ProfileSpec extends SparkSpec {
       l.contains("events hits=")), stream.mkString("\n"))
   }
 
+  test("a repeat q1_agg build reads its table schema from the memo tier: no inference job") {
+    val lines = mutable.ArrayBuffer.empty[String]
+    tools.Profile.run(spark, sf, Seq("q1_agg"), runs = 2, plan = false)(lines += _)
+    val second = lines.dropWhile(!_.startsWith("[profile] q1_agg run 2:")).toSeq
+    assert(second.nonEmpty, lines.mkString("\n"))
+    assert(second.exists(_.startsWith("[profile]   job ")), second.mkString("\n"))
+    assert(!second.exists(l => l.startsWith("[profile]   job ") &&
+      l.contains("parquet at Tables.scala")), second.mkString("\n"))
+  }
+
   test("JobProbe counts exactly the jobs of a one-action body") {
     val p = metrics.JobProbe.measure(spark)(spark.range(100).collect())
     assert(p.result.length == 100)
