@@ -21,18 +21,22 @@ object Tables {
 
   /** Reads `path` with its schema given rather than inferred: Spark's
     * inference runs one job per read. The schema is a session-free memo
-    * entry keyed by the file's path, its modification time and the
-    * `nanosAsLong` setting (which changes how a nanosecond timestamp
-    * reads). A missing path fails the way Spark reports it. */
+    * entry keyed by the file's path and modification time. The
+    * `nanosAsLong` setting changes how a nanosecond timestamp reads; only
+    * events.parquet holds one and [[events]] always reads it with the
+    * setting on, so the setting is not part of the key. A missing path
+    * fails the way Spark reports it. */
   private def parquet(spark: SparkSession, path: String): DataFrame = {
     val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) spark.read.parquet(path)
-    else {
-      val key = s"$path|${fs.getFileStatus(p).getModificationTime}|" +
-        spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false")
-      spark.read.schema(Assets.memo("tableSchema", spark, key)(spark.read.parquet(path).schema))
-        .parquet(path)
+    val mtime =
+      try Some(p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .getFileStatus(p).getModificationTime)
+      catch { case _: java.io.FileNotFoundException => None }
+    mtime match {
+      case None => spark.read.parquet(path)
+      case Some(t) =>
+        spark.read.schema(Assets.memo("tableSchema", spark, s"$path|$t")(
+          spark.read.parquet(path).schema)).parquet(path)
     }
   }
 

@@ -61,13 +61,25 @@ class MemoSpec extends SparkSpec {
   test("a frame-free entry serves every session without a rebuild") {
     val kinds = freeKinds(spark)
     val before = kinds.map(builds)
-    val s2 = spark.newSession()
-    // the setting is part of a schema's key (it changes how a nanosecond
-    // timestamp reads), and a new session starts from the default
-    val nanos = "spark.sql.legacy.parquet.nanosAsLong"
-    s2.conf.set(nanos, spark.conf.get(nanos))
-    freeKinds(s2)
+    freeKinds(spark.newSession())
     assert(kinds.map(builds) == before, kinds)
+  }
+
+  test("a table's schema entry does not depend on an events read in the session") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_memo_sf")
+    val region = dir.resolve("region.parquet")
+    java.nio.file.Files.copy(java.nio.file.Paths.get(s"$sf/region.parquet"), region)
+    try {
+      val (plain, withEvents) = (spark.newSession(), spark.newSession())
+      Tables.events(withEvents, sf) // turns nanosAsLong on for that session only
+      val before = builds("tableSchema")
+      Tables.region(plain, dir.toString)
+      Tables.region(withEvents, dir.toString)
+      assert(builds("tableSchema") == before + 1)
+    } finally {
+      java.nio.file.Files.delete(region)
+      java.nio.file.Files.delete(dir)
+    }
   }
 
   test("a fit replaced for another session releases its held-out split") {
