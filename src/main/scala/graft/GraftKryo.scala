@@ -7,15 +7,16 @@ import org.apache.spark.serializer.KryoRegistrator
   * parity with the reference, which registers its classes up front
   * (`example.py:16-17`, `test.py:106-108`). Registration replaces
   * fully-qualified class names with small integer ids in every broadcast
-  * and RDD-shuffle record; with `spark.kryo.registrationRequired=true`
-  * (set by the standalone apps and the test session) an unregistered
-  * class fails LOUDLY at serialization time instead of silently shipping
-  * class names on every training round.
+  * and RDD-shuffle record. Sessions keep `spark.kryo.registrationRequired`
+  * off (see [[GraftKryo.configure]]); KryoSpec and SgdExactnessSpec build
+  * strict serializers, so a hot class missing here fails LOUDLY in those
+  * tests instead of silently shipping class names on every training round.
   *
   * The hot path this covers: per-batch model broadcasts
   * (`(Array[Array[Float]], Array[Array[Float]])`), the collected SGD
   * `Delta`s, the layout's shuffled key arrays and persisted
-  * `TripleBlock`s, and the membership broadcasts (packed longs / Bloom).
+  * `TripleBlock`s, and the fit's `NegativeSampler` broadcast with its
+  * membership (sorted triple words, or a Bloom filter).
   */
 class GraftKryo extends KryoRegistrator {
   override def registerClasses(kryo: Kryo): Unit =
@@ -36,9 +37,13 @@ object GraftKryo {
     classOf[Array[String]],
     classOf[graft.transe.TripleKeys],
     classOf[graft.transe.TripleBlock],
+    classOf[graft.transe.NegativeSampler],
     classOf[graft.transe.PackedMembership],
     classOf[graft.transe.BloomMembership],
-    classOf[org.apache.spark.util.sketch.BloomFilter],
+    // the concrete filter `BloomFilter.create` makes and its bit array
+    // (both package-private)
+    org.apache.spark.util.sketch.BloomFilter.create(1).getClass,
+    Class.forName("org.apache.spark.util.sketch.BitArray"),
     classOf[scala.Tuple2[_, _]],
     classOf[scala.Tuple3[_, _, _]])
 

@@ -150,6 +150,17 @@ object VectorFunctions {
     if (es.length != n) throw new IllegalArgumentException(
       s"$name requires exactly $n argument(s), got ${es.length}")
 
+  /** The plan-time value of a constant argument, read by `read`. A
+    * non-foldable argument, an eval that fails or a value `read` does not
+    * take throws an `IllegalArgumentException` that says `mustBe` and
+    * shows the argument's SQL, with the eval failure as its cause. */
+  private def planConstant[T](e: Expression, mustBe: String)(read: PartialFunction[Any, T]): T = {
+    def fail(cause: Throwable) = new IllegalArgumentException(
+      s"$mustBe evaluable at plan time, got: ${e.sql}", cause)
+    val v = if (e.foldable) try e.eval() catch { case x: Exception => throw fail(x) } else null
+    read.applyOrElse(v, (_: Any) => throw fail(null))
+  }
+
   private[graft] val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
     ("vector_dot", es => { checkArity("vector_dot", 2, es); VectorDot(es(0), es(1)) }),
     ("vector_cosine", es => { checkArity("vector_cosine", 2, es); VectorCosine(es(0), es(1)) }),
@@ -163,17 +174,12 @@ object VectorFunctions {
     // not per row) — any constant expression works, e.g. `5` or `2 + 3`
     ("topk_pairs", es => {
       checkArity("topk_pairs", 3, es)
-      val kExpr = es(2)
-      val k = (if (kExpr.foldable) {
-        try Option(kExpr.eval()) catch { case _: Exception => None }
-      } else None) match {
-        case Some(i: Int) => i
-        case Some(l: Long) => l.toInt
-        case Some(s: Short) => s.toInt
-        case Some(b: Byte) => b.toInt
-        case _ => throw new IllegalArgumentException(
-          "topk_pairs third argument (k) must be a constant integer " +
-            s"expression evaluable at plan time, got: ${kExpr.sql}")
+      val k = planConstant(es(2),
+          "topk_pairs third argument (k) must be a constant integer expression") {
+        case i: Int => i
+        case l: Long => l.toInt
+        case s: Short => s.toInt
+        case b: Byte => b.toInt
       }
       TopKPairsAgg(es(0), es(1), k)
     }),
@@ -182,18 +188,13 @@ object VectorFunctions {
     // time (the quantile is part of the aggregate's identity)
     ("hdr_quantile", es => {
       checkArity("hdr_quantile", 2, es)
-      val qExpr = es(1)
-      val q = (if (qExpr.foldable) {
-        try Option(qExpr.eval()) catch { case _: Exception => None }
-      } else None) match {
-        case Some(d: Double) => d
-        case Some(f: Float) => f.toDouble
-        case Some(dec: org.apache.spark.sql.types.Decimal) => dec.toDouble
-        case Some(i: Int) => i.toDouble
-        case Some(l: Long) => l.toDouble
-        case _ => throw new IllegalArgumentException(
-          "hdr_quantile second argument (q) must be a constant numeric " +
-            s"expression evaluable at plan time, got: ${qExpr.sql}")
+      val q = planConstant(es(1),
+          "hdr_quantile second argument (q) must be a constant numeric expression") {
+        case d: Double => d
+        case f: Float => f.toDouble
+        case dec: org.apache.spark.sql.types.Decimal => dec.toDouble
+        case i: Int => i.toDouble
+        case l: Long => l.toDouble
       }
       HdrQuantileAgg(es(0), q)
     }),
@@ -202,17 +203,12 @@ object VectorFunctions {
     // integer k at plan time (the buffer bound is the sketch's identity)
     ("kmv_sketch", es => {
       checkArity("kmv_sketch", 2, es)
-      val kExpr = es(1)
-      val k = (if (kExpr.foldable) {
-        try Option(kExpr.eval()) catch { case _: Exception => None }
-      } else None) match {
-        case Some(i: Int) => i
-        case Some(l: Long) => l.toInt
-        case Some(s: Short) => s.toInt
-        case Some(b: Byte) => b.toInt
-        case _ => throw new IllegalArgumentException(
-          "kmv_sketch second argument (k) must be a constant integer " +
-            s"expression evaluable at plan time, got: ${kExpr.sql}")
+      val k = planConstant(es(1),
+          "kmv_sketch second argument (k) must be a constant integer expression") {
+        case i: Int => i
+        case l: Long => l.toInt
+        case s: Short => s.toInt
+        case b: Byte => b.toInt
       }
       KmvSketchAgg(es(0), k)
     }),
@@ -221,15 +217,10 @@ object VectorFunctions {
     // to the dimension d at plan time (it sizes the buffer)
     ("gram_lower", es => {
       checkArity("gram_lower", 2, es)
-      val dExpr = es(1)
-      val d = (if (dExpr.foldable) {
-        try Option(dExpr.eval()) catch { case _: Exception => None }
-      } else None) match {
-        case Some(i: Int) => i
-        case Some(l: Long) => l.toInt
-        case _ => throw new IllegalArgumentException(
-          "gram_lower second argument (d) must be a constant integer " +
-            s"expression evaluable at plan time, got: ${dExpr.sql}")
+      val d = planConstant(es(1),
+          "gram_lower second argument (d) must be a constant integer expression") {
+        case i: Int => i
+        case l: Long => l.toInt
       }
       GramLowerAgg(es(0), d)
     }))

@@ -10,83 +10,6 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
-/** Membership test for negative-sample rejection (reference: broadcast dict
-  * used as a set, `utils.py:35-41` + `TransE.py:94-95,243`). */
-sealed trait TripleMembership extends Serializable {
-  def contains(h: Int, l: Int, t: Int): Boolean
-}
-
-/** Exact broadcast set — right up to ~10^8 triples of executor memory. */
-final class ExactMembership(set: java.util.HashSet[(Int, Int, Int)]) extends TripleMembership {
-  def contains(h: Int, l: Int, t: Int): Boolean = set.contains((h, l, t))
-}
-
-/** Exact membership as a PACKED sorted Array[Long] + binary search:
-  * zero boxing, 8 bytes/triple broadcast payload, cache-friendly lookups.
-  * Usable when the id spaces' keys fit one Long ([[TripleKeys.packs]]);
-  * the trainer falls back to the HashSet form otherwise.
-  *
-  * `sorted` holds `keys` keys in ascending order, which is ascending
-  * (h, l, t), so each head's triples form one contiguous block. A
-  * per-head offset index (built once on the driver and shipped with the
-  * keys) maps head h to its block, and a probe binary-searches only that
-  * block: ~log2(triples of h) steps instead of ~log2(all triples). The
-  * answer is the same as a search of the whole array, because a key can
-  * only sit in its own head's block. The index has one Int per head up
-  * to the largest; when head ids are sparser than the keys, one entry
-  * covers 2^shift consecutive heads instead, so the index never has more
-  * entries than there are keys. A probe outside the key widths is not a
-  * member. */
-final class PackedMembership(sorted: Array[Long], keys: TripleKeys) extends TripleMembership {
-  private val shift: Int = PackedMembership.indexShift(sorted, keys)
-  /** Heads `b << shift` until `(b + 1) << shift` have their keys in
-    * `sorted(offsets(b) until offsets(b + 1))`. */
-  private val offsets: Array[Int] = PackedMembership.headOffsets(sorted, keys, shift)
-
-  def contains(h: Int, l: Int, t: Int): Boolean =
-    h >= 0 && (h >>> shift) < offsets.length - 1 && keys.holds(h, l, t) && {
-      val lo = offsets(h >>> shift)
-      val hi = offsets((h >>> shift) + 1)
-      lo < hi && java.util.Arrays.binarySearch(sorted, lo, hi, keys.pack(h, l, t)) >= 0
-    }
-}
-
-object PackedMembership {
-  /** The smallest shift whose index over heads 0..max head has at most
-    * as many entries as there are keys. */
-  private def indexShift(sorted: Array[Long], keys: TripleKeys): Int = {
-    val maxHead = if (sorted.isEmpty) 0 else keys.head(sorted(sorted.length - 1))
-    var shift = 0
-    while ((maxHead >>> shift) >= math.max(sorted.length, 1)) shift += 1
-    shift
-  }
-
-  /** CSR offsets over head buckets 0..(max head >>> shift): offsets(b) is
-    * the index of the first key whose head bucket is >= b. */
-  private def headOffsets(sorted: Array[Long], keys: TripleKeys, shift: Int): Array[Int] = {
-    val nBuckets =
-      if (sorted.isEmpty) 0 else (keys.head(sorted(sorted.length - 1)) >>> shift) + 1
-    val offsets = new Array[Int](nBuckets + 1)
-    var i = 0
-    var b = 0
-    while (i < sorted.length) {
-      val bi = keys.head(sorted(i)) >>> shift
-      while (b <= bi) { offsets(b) = i; b += 1 }
-      i += 1
-    }
-    offsets(nBuckets) = sorted.length
-    offsets
-  }
-}
-
-/** Bloom-filter membership (1% fpp) — the at-scale path: a false positive
-  * only causes a harmless extra redraw of the corrupted triple, so
-  * correctness is unaffected while memory drops ~50x vs the exact set. */
-final class BloomMembership(bloom: org.apache.spark.util.sketch.BloomFilter) extends TripleMembership {
-  def contains(h: Int, l: Int, t: Int): Boolean =
-    bloom.mightContainString(s"$h:$l:$t")
-}
-
 /** Distributed TransE trainer (Bordes et al., NeurIPS 2013), replacing the
   * reference's `TransE.fit/_sgd` (`TransE.py:64-157`) with the Scala/MLlib
   * idiom: data-parallel gradient computation via `mapPartitions` over the
@@ -269,31 +192,25 @@ object TransETrainer {
   /** The training data of one fit, laid out once: one sorted
     * [[TripleBlock]] per layout partition, persisted. `triples` is the
     * same data as a Triple view of the blocks. */
-  private[transe] final case class Layout(blocks: RDD[TripleBlock], nTriples: Long,
+  private[graft] final case class Layout(blocks: RDD[TripleBlock], nTriples: Long,
       partitions: Int, keys: TripleKeys) {
     def triples: RDD[Triple] = blocks.flatMap(_.iterator)
   }
 
   /** What one fit prepares before its first SGD job: the layout and the
-    * broadcast membership and bern tables. */
-  private[transe] final case class Prepared(layout: Layout,
-      membership: Broadcast[TripleMembership], bern: Broadcast[Array[Double]])
+    * broadcast [[NegativeSampler]]. */
+  private[graft] final case class Prepared(layout: Layout, sampler: Broadcast[NegativeSampler])
 
   /** Runs `body` over a fit's [[Prepared]] data and releases it when the
-    * body returns or throws: broadcasts destroyed, layout unpersisted. */
-  private[transe] def prepared[A](triples: Dataset[Triple], nEntities: Int, nLabels: Int,
+    * body returns or throws: the sampler destroyed, layout unpersisted. */
+  private[graft] def prepared[A](triples: Dataset[Triple], nEntities: Int, nLabels: Int,
       p: TransEParams)(body: Prepared => A): A = {
-    val spark = triples.sparkSession
-    val sc = spark.sparkContext
     val layout = relayout(triples, nEntities, nLabels)
     try {
-      val membBc = sc.broadcast(buildMembership(spark, layout, p))
-      try {
-        val bernBc = sc.broadcast(
-          if (p.bernCorruption) bernProbs(layout.triples, nLabels) else null)
-        try body(Prepared(layout, membBc, bernBc))
-        finally bernBc.destroy()
-      } finally membBc.destroy()
+      val sampler = triples.sparkSession.sparkContext.broadcast(
+        NegativeSampler(layout, nEntities, nLabels, p))
+      try body(Prepared(layout, sampler))
+      finally sampler.destroy()
     } finally layout.blocks.unpersist()
   }
 
@@ -382,49 +299,6 @@ object TransETrainer {
     }, preservesPartitioning = true)
   }
 
-  /** Negative-sampling membership, built from the PERSISTED layout (not
-    * the original Dataset lineage). The packed form merges the collected
-    * blocks, which are already sorted keys of the same format. */
-  private[transe] def buildMembership(spark: SparkSession, layout: Layout,
-      p: TransEParams): TripleMembership =
-    if (p.exactMembership && layout.keys.packs) {
-      new PackedMembership(TripleBlock.merge(layout.blocks.map(_.words).collect()),
-        layout.keys)
-    } else if (p.exactMembership) {
-      val s = new java.util.HashSet[(Int, Int, Int)]()
-      layout.blocks.collect().foreach(_.iterator.foreach(tr => s.add((tr.h, tr.l, tr.t))))
-      new ExactMembership(s)
-    } else {
-      val bloom = spark.createDataFrame(layout.triples).stat.bloomFilter(
-        org.apache.spark.sql.functions.concat_ws(":",
-          org.apache.spark.sql.functions.col("h"),
-          org.apache.spark.sql.functions.col("l"),
-          org.apache.spark.sql.functions.col("t")),
-        expectedNumItems = math.max(layout.nTriples, 1L), fpp = 0.01)
-      new BloomMembership(bloom)
-    }
-
-  /** Per-relation head-replacement probability for "bern" corruption
-    * (Wang et al. 2014): p_head(l) = tph/(tph+hpt) which reduces to the
-    * all-integer dt_l / (dh_l + dt_l) (distinct tails / (distinct heads
-    * + distinct tails) of relation l) — one distinct-pair aggregation
-    * over the cached training set, deterministic across layouts.
-    * Relations absent from the data default to the uniform 1/2. */
-  private[graft] def bernProbs(data: RDD[Triple], nLabels: Int): Array[Double] = {
-    val counts = data
-      .flatMap(tr => Seq(((tr.l, 0, tr.h), null), ((tr.l, 1, tr.t), null)))
-      .reduceByKey((a, _) => a)
-      .map { case ((l, side, _), _) => ((l, side), 1L) }
-      .reduceByKey(_ + _)
-      .collect()
-    val dh = new Array[Long](nLabels)
-    val dt = new Array[Long](nLabels)
-    counts.foreach { case ((l, side), n) =>
-      if (side == 0) dh(l) = n else dt(l) = n }
-    Array.tabulate(nLabels)(l =>
-      if (dh(l) + dt(l) == 0) 0.5 else dt(l).toDouble / (dh(l) + dt(l)))
-  }
-
   /** Seeded init / warm-start restore (reference `TransE.py:45-60,97`). */
   private[transe] def initialMatrices(p: TransEParams, nEntities: Int,
       nLabels: Int, warmStart: Option[TransEModel]):
@@ -506,13 +380,11 @@ object TransETrainer {
     def step(sampled: RDD[Triple], batchSeed: Long): Array[Double] = {
       val modelBc = sampled.sparkContext.broadcast((entity, label))
       try {
-        val membBc = prep.membership
-        val bernBc = prep.bern
+        val sampler = prep.sampler
         val p = params
-        val n = entity.length
         mergeInPidOrder(sampled.mapPartitionsWithIndex { (pid, it) =>
           val (ent, lab) = modelBc.value
-          partitionSgd(pid, it, ent(_), lab(_), membBc.value, n, p, batchSeed, bernBc.value)
+          partitionSgd(pid, it, ent(_), lab(_), sampler.value, p, batchSeed)
         }.collect(), entity, label, p.dim)
       } finally modelBc.destroy()
     }
@@ -584,17 +456,15 @@ object TransETrainer {
     private def dropInit(): Unit = if (initBc != null) { initBc.destroy(); initBc = null }
 
     def step(sampled: RDD[Triple], batchSeed: Long): Array[Double] = {
-      val membBc = prep.membership
-      val bernBc = prep.bern
+      val sampler = prep.sampler
       val p = params
-      val n = nEntities
       val labBc = sampled.sparkContext.broadcast(label)
       var deltaRdd: RDD[Delta] = null
       val prev = entParams
       try {
         // 1. parameter read set per partition (ids only)
         val needs: RDD[(Int, Int)] = sampled.mapPartitionsWithIndex({ (pid, it) =>
-          readSet(pid, it, membBc.value, n, p, batchSeed, bernBc.value)
+          readSet(pid, it, sampler.value, batchSeed)
             .asScala.iterator.map(id => (id.intValue, pid))
         }, preservesPartitioning = false)
 
@@ -616,7 +486,7 @@ object TransETrainer {
             v
           }
           val lab = labBc.value
-          partitionSgd(pid, trIt, entBase, lab(_), membBc.value, n, p, batchSeed, bernBc.value)
+          partitionSgd(pid, trIt, entBase, lab(_), sampler.value, p, batchSeed)
         }.persist(StorageLevel.MEMORY_AND_DISK)
 
         // 4a. labels + loss on the driver, in the broadcast store's merge
@@ -756,11 +626,11 @@ object TransETrainer {
     * partition's read set ({h, t, final corruption candidate} entities and
     * {l} labels per sampled triple — see [[readSet]]).
     *
-    * RNG DISCIPLINE (the partitioned store depends on it): the
-    * corruption stream consumes exactly `nextBoolean + nextInt*(1+redraws)`
-    * per triple, and redraw count depends only on the membership set —
-    * never on parameter values. That makes the stream replayable by
-    * [[readSet]] without knowing the parameters.
+    * RNG DISCIPLINE (the partitioned store depends on it): each
+    * negative comes from [[NegativeSampler.draw]], whose RNG consumption
+    * depends only on the training set, never on parameter values. That
+    * makes the stream replayable by [[readSet]] without knowing the
+    * parameters.
     *
     * The loop allocates nothing per triple: the write-combining maps are
     * primitive [[RowMap]]s, both distances come from one
@@ -783,15 +653,13 @@ object TransETrainer {
       it: Iterator[Triple],
       entBase: Int => Array[Float],
       labBase: Int => Array[Float],
-      membership: TripleMembership,
-      nEntities: Int,
+      sampler: NegativeSampler,
       p: TransEParams,
-      batchSeed: Long,
-      bern: Array[Double] = null): Iterator[Delta] = {
+      batchSeed: Long): Iterator[Delta] = {
 
     // Deterministic per-task stream: seed mixes batch and partition
     // (reference uses OS randomness, TransE.py:185 — SURVEY §7.5-3).
-    val rng = new SplittableRandom(StableHash.corruptionSeed(batchSeed, pid))
+    val rng = sampler.stream(batchSeed, pid)
     // Write-combining with DIRTY-ONLY shipping: rows enter the local maps
     // (and hence the emitted delta) only when actually updated. The
     // reference also ships rows it merely READ (`TransE.py:191-206`),
@@ -827,23 +695,9 @@ object TransETrainer {
     var loss = 0.0
     while (it.hasNext) {
       val tr = it.next()
-      // Corruption: flip head or tail — uniform 1/2 (TransE.py:252) or
-      // the per-relation bern probability; redraw while the corrupted
-      // triple is a real training triple (TransE.py:237-244), capped
-      // (SURVEY §7.5-4). The bern array is DATA (relation statistics),
-      // not parameters, so readSet's replay contract is preserved.
-      val corruptHead =
-        if (bern == null) rng.nextBoolean() else rng.nextDouble() < bern(tr.l)
-      var candidate = rng.nextInt(nEntities)
-      var tries = 0
-      while (tries < p.rejectionCap &&
-        (if (corruptHead) membership.contains(candidate, tr.l, tr.t)
-         else membership.contains(tr.h, tr.l, candidate))) {
-        candidate = rng.nextInt(nEntities)
-        tries += 1
-      }
-      val nhId = if (corruptHead) candidate else tr.h
-      val ntId = if (corruptHead) tr.t else candidate
+      val negative = sampler.draw(rng, tr)
+      val nhId = NegativeSampler.head(negative)
+      val ntId = NegativeSampler.tail(negative)
 
       Kernels.distPair(p.distance, entRead(tr.h), labRead(tr.l), entRead(tr.t),
         entRead(nhId), entRead(ntId), dists)
@@ -881,33 +735,21 @@ object TransETrainer {
 
   /** Replay the corruption stream WITHOUT parameters to compute the exact
     * set of entity ids one partition's [[partitionSgd]] call will read
-    * ({h, t, final candidate} per sampled triple). Possible because RNG
-    * consumption is parameter-independent (see partitionSgd scaladoc) —
-    * this is what lets the [[PartitionedStore]] prefetch exactly the
-    * needed parameter rows ahead of the SGD pass. */
+    * ({h, t, nh, nt} per sampled triple). Possible because RNG
+    * consumption is parameter-independent ([[NegativeSampler]]) — this
+    * is what lets the [[PartitionedStore]] prefetch exactly the needed
+    * parameter rows ahead of the SGD pass. */
   private[transe] def readSet(
       pid: Int,
       it: Iterator[Triple],
-      membership: TripleMembership,
-      nEntities: Int,
-      p: TransEParams,
-      batchSeed: Long,
-      bern: Array[Double] = null): java.util.HashSet[Integer] = {
-    val rng = new SplittableRandom(StableHash.corruptionSeed(batchSeed, pid))
+      sampler: NegativeSampler,
+      batchSeed: Long): java.util.HashSet[Integer] = {
+    val rng = sampler.stream(batchSeed, pid)
     val ids = new java.util.HashSet[Integer]()
     it.foreach { tr =>
+      val negative = sampler.draw(rng, tr)
       ids.add(tr.h); ids.add(tr.t)
-      val corruptHead =
-        if (bern == null) rng.nextBoolean() else rng.nextDouble() < bern(tr.l)
-      var candidate = rng.nextInt(nEntities)
-      var tries = 0
-      while (tries < p.rejectionCap &&
-        (if (corruptHead) membership.contains(candidate, tr.l, tr.t)
-         else membership.contains(tr.h, tr.l, candidate))) {
-        candidate = rng.nextInt(nEntities)
-        tries += 1
-      }
-      ids.add(candidate)
+      ids.add(NegativeSampler.head(negative)); ids.add(NegativeSampler.tail(negative))
     }
     ids
   }

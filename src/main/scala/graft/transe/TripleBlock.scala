@@ -3,9 +3,10 @@ package graft.transe
 import java.util.SplittableRandom
 
 /** The one key format of the trainer's training layout
-  * ([[TransETrainer.relayout]]) and of [[PackedMembership]]: a triple of
-  * ids in [0, nEntities) x [0, nLabels) x [0, nEntities) as ONE Long,
-  * h | l | t in `entityBits + labelBits + entityBits` bits, where each
+  * ([[TransETrainer.relayout]]) and of the negative sampler's
+  * [[PackedMembership]]: a triple of ids in [0, nEntities) x [0, nLabels)
+  * x [0, nEntities) as ONE Long, h | l | t in
+  * `entityBits + labelBits + entityBits` bits, where each
   * width is that of the largest id. The sign bit is flipped: when a key
   * uses all 64 bits the head's top bit is the Long's sign bit, and the
   * flip makes signed key order (what `Arrays.sort` and `binarySearch`
@@ -130,7 +131,9 @@ object TripleBlock {
   }
 
   /** One sorted block from word arrays in the `keys` format: a primitive
-    * sort when the keys pack, else an (h, l, t) comparator sort. */
+    * sort when the keys pack, else an (h, l, t) comparator sort. Both of
+    * JDK 17's sorts find ascending runs, so arrays that are each sorted
+    * already (a fit's collected layout blocks) merge in linear passes. */
   def sorted(keys: TripleKeys, parts: Iterator[Array[Long]]): TripleBlock = {
     val arrays = parts.toArray
     val words = new Array[Long](arrays.map(_.length).sum)
@@ -157,25 +160,5 @@ object TripleBlock {
       if (a.h != b.h) Integer.compare(a.h, b.h)
       else if (a.l != b.l) Integer.compare(a.l, b.l)
       else Integer.compare(a.t, b.t)
-  }
-
-  /** Merges ascending key arrays into one ascending array. */
-  def merge(sortedParts: Array[Array[Long]]): Array[Long] = {
-    val out = new Array[Long](sortedParts.map(_.length).sum)
-    val pos = new Array[Int](sortedParts.length)
-    var o = 0
-    while (o < out.length) {
-      var best = -1
-      var q = 0
-      while (q < sortedParts.length) {
-        if (pos(q) < sortedParts(q).length && (best < 0 ||
-            sortedParts(q)(pos(q)) < sortedParts(best)(pos(best)))) best = q
-        q += 1
-      }
-      out(o) = sortedParts(best)(pos(best))
-      pos(best) += 1
-      o += 1
-    }
-    out
   }
 }

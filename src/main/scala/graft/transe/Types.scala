@@ -39,8 +39,10 @@ case object L2Squared extends Distance
   *                        of 1/2 — fewer false-negative corruptions on
   *                        1-to-N / N-to-1 relations. Default OFF = the
   *                        reference's uniform coin (golden contract)
-  * @param exactMembership use an exact broadcast Set for negative-sample
-  *                        rejection; false = Bloom filter (1% fpp), the
+  * @param exactMembership reject negatives against the exact sorted
+  *                        training set (8 B per triple when its keys pack
+  *                        into one Long, 16 B otherwise); false = Bloom
+  *                        filter (1% fpp, ~1.2 B per triple), the
   *                        100TB-scale path where the exact set no longer
   *                        fits in executor memory
   * @param checkpointEvery write a parquet checkpoint of both matrices

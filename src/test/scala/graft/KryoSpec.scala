@@ -46,8 +46,27 @@ class KryoSpec extends AnyFunSuite {
     assert(d2.pid == 0 && d2.loss == 1.25 && d2.entVals.head == 0.5f)
     assert(roundTrip(Array(d)).head.loss == 1.25)
 
-    // membership broadcasts
+    // the sampler broadcast and its membership: the exact set at both key
+    // widths and the Bloom form
     assert(roundTrip(Array(1L, 2L, 3L)).toSeq == Seq(1L, 2L, 3L))
+    val known = Seq(Triple(1, 2, 3), Triple(1, 0, 7), Triple(9, 1, 0))
+    for (k <- Seq(transe.TripleKeys(10, 3), transe.TripleKeys(1 << 30, 1 << 10))) {
+      val block = transe.TripleBlock.sorted(k, Iterator(
+        transe.TripleBlock.pack(known.iterator, k, Int.MaxValue, Int.MaxValue).toOption.get.words))
+      val memberships = Seq(new transe.PackedMembership(block),
+        new transe.BloomMembership(transe.BloomMembership.filter(block, known.size), k))
+      memberships.foreach { m =>
+        val sampler = roundTrip(new transe.NegativeSampler(m, 10, 100, Array(0.5, 0.25, 1.0)))
+        val back = sampler.membership
+        assert(back.getClass == m.getClass)
+        known.foreach(tr => assert(back.contains(tr.h, tr.l, tr.t), s"$k ${m.getClass}: $tr"))
+        if (m.isInstanceOf[transe.PackedMembership]) assert(!back.contains(1, 2, 4))
+        // the round-tripped sampler draws what the original draws
+        val (a, b) = (new java.util.SplittableRandom(5), new java.util.SplittableRandom(5))
+        val orig = new transe.NegativeSampler(m, 10, 100, Array(0.5, 0.25, 1.0))
+        known.foreach(tr => assert(sampler.draw(a, tr) == orig.draw(b, tr)))
+      }
+    }
   }
 
   test("every class in GraftKryo.classes is instantiably registered") {

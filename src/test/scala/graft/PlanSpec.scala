@@ -929,6 +929,36 @@ class PlanSpec extends SparkSpec {
     assert(hits.map(_._1).toSet == exempt.keySet, hits.map(_._2).mkString("\n"))
   }
 
+  test("repo-wide: negatives are drawn in NegativeSampler only") {
+    // One corruption draw: in transe/, only NegativeSampler.scala reads the
+    // rejection cap or probes the training set (a three-argument
+    // `contains`). Nowhere in src/main may a boxed triple set or a
+    // String-keyed Bloom probe come back. Comment lines are not code.
+    val probe = """\.contains\([^()]*,[^()]*,""".r
+    val transeRules = Seq[(String, String => Boolean)](
+      "reads the rejection cap" -> (_.contains(".rejectionCap")),
+      "probes training-set membership" -> (probe.findFirstIn(_).isDefined))
+    val mainRules = Seq[(String, String => Boolean)](
+      "keeps a boxed triple set" -> (_.contains("HashSet[(Int, Int, Int)]")),
+      "probes a Bloom filter by String" -> (_.contains("mightContainString")))
+    def code(lines: Seq[String]) = lines.zipWithIndex.map { case (l, i) => (l.trim, i) }
+      .filterNot { case (c, _) => c.startsWith("*") || c.startsWith("/*") || c.startsWith("//") }
+    val sampler = "graft/transe/NegativeSampler.scala"
+    val offending = for {
+      (f, lines) <- mainSources
+      inTranse = f.toString.contains("graft/transe/") && !f.endsWith(sampler)
+      (c, i) <- code(lines)
+      (why, hit) <- mainRules ++ (if (inTranse) transeRules else Nil)
+      if hit(c)
+    } yield s"$f:${i + 1}: $why: $c"
+    assert(offending.isEmpty, offending.mkString("\n", "\n", ""))
+    // the sampler itself still holds the draw, so the gate is not vacuous
+    val samplerCode = code(mainSources.find(_._1.endsWith(sampler)).get._2).map(_._1)
+    transeRules.foreach { case (why, hit) =>
+      assert(samplerCode.exists(hit), s"$sampler no longer $why")
+    }
+  }
+
   /** Every `src/main` Scala file with its lines; the seam files must be
     * among them, or a gate above would pass vacuously. */
   private lazy val mainSources: Seq[(java.nio.file.Path, Seq[String])] = {
@@ -938,7 +968,8 @@ class PlanSpec extends SparkSpec {
       val w = java.nio.file.Files.walk(root)
       try w.iterator().asScala.filter(_.toString.endsWith(".scala")).toList finally w.close()
     }
-    assert(Seq("graft/Assets.scala", "graft/streaming/StreamRun.scala")
+    assert(Seq("graft/Assets.scala", "graft/streaming/StreamRun.scala",
+        "graft/transe/NegativeSampler.scala")
       .forall(seam => files.exists(_.endsWith(seam))))
     files.map(f => f -> java.nio.file.Files.readAllLines(f).asScala.toSeq)
   }

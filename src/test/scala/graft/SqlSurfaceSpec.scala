@@ -264,6 +264,30 @@ class SqlSurfaceSpec extends SparkSpec {
     assert(rows.length == 1 && rows.head.getInt(0) == 8)
   }
 
+  test("a constant argument whose plan-time eval fails names it and keeps the cause") {
+    VectorFunctions.ensureRegistered(spark)
+    Tables.orders(spark, sf).createOrReplaceTempView("orders_v")
+    val ansi = spark.conf.getOption("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true") // so CAST('x' AS INT) throws
+    try {
+      Seq(
+        "topk_pairs(o_orderkey, o_custkey, CAST('x' AS INT))" -> "(k) must be a constant integer",
+        "hdr_quantile(o_orderkey, CAST('x' AS DOUBLE))" -> "(q) must be a constant numeric",
+        "kmv_sketch(o_orderkey, CAST('x' AS INT))" -> "(k) must be a constant integer",
+        "gram_lower(o_orderkey, CAST('x' AS INT))" -> "(d) must be a constant integer"
+      ).foreach { case (call, says) =>
+        val e = intercept[Exception](spark.sql(s"SELECT $call FROM orders_v").collect())
+        val iae = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+          .collectFirst { case x: IllegalArgumentException => x }
+        assert(iae.exists(_.getMessage.contains(says)), s"$call: $e")
+        assert(iae.exists(_.getCause != null), s"$call: no eval failure as the cause")
+      }
+    } finally ansi match {
+      case Some(v) => spark.conf.set("spark.sql.ansi.enabled", v)
+      case None => spark.conf.unset("spark.sql.ansi.enabled")
+    }
+  }
+
   test("Dedup.hash64Col equals the JVM md5Hash64 (incl. negative/high-bit values)") {
     // the engine-portable shingle key rests on conv(md5_hex16, 16, -10)
     // being the signed two's-complement read of the first 8 md5 bytes —

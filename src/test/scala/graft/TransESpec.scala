@@ -33,21 +33,18 @@ class TransESpec extends SparkSpec {
     val (enc, nEnt, nLab) = encoded
     val params = TransEParams(epochs = 1, batches = 1, dim = 4, seed = 1)
     val trainer = new TransETrainer(params)
-    // train one epoch — rejection is exercised inside; this test asserts
-    // the invariant indirectly via a direct membership check
-    val memb = {
-      val s = new java.util.HashSet[(Int, Int, Int)]()
-      enc.collect().foreach(tr => s.add((tr.h, tr.l, tr.t)))
-      new ExactMembership(s)
-    }
-    val rng = new java.util.SplittableRandom(99)
-    enc.take(200).foreach { tr =>
-      var cand = rng.nextInt(nEnt)
-      var tries = 0
-      while (tries < 100 && memb.contains(cand, tr.l, tr.t)) {
-        cand = rng.nextInt(nEnt); tries += 1
+    // draw negatives through the sampler a fit builds, and check each one
+    // against the training set collected on the driver
+    val known = enc.collect().map(tr => (tr.h, tr.l, tr.t)).toSet
+    TransETrainer.prepared(enc, nEnt, nLab, params) { prep =>
+      val sampler = prep.sampler.value
+      val rng = sampler.stream(99L, 0)
+      enc.take(200).foreach { tr =>
+        val negative = sampler.draw(rng, tr)
+        val (nh, nt) = (NegativeSampler.head(negative), NegativeSampler.tail(negative))
+        assert(nh == tr.h || nt == tr.t, s"$tr: both ends replaced ($nh, $nt)")
+        assert(!known.contains((nh, tr.l, nt)), s"$tr: negative ($nh, ${tr.l}, $nt) is a training triple")
       }
-      assert(!memb.contains(cand, tr.l, tr.t) || tries == 100)
     }
     assert(trainer.fit(enc, nEnt, nLab).nEntities == nEnt)
   }
@@ -157,7 +154,7 @@ class TransESpec extends SparkSpec {
     val kg = Seq(
       Triple(0, 0, 1), Triple(0, 0, 2), Triple(0, 0, 3), Triple(0, 0, 4),
       Triple(1, 1, 5), Triple(2, 1, 5), Triple(3, 1, 5), Triple(4, 1, 5)).toDS()
-    val bern = TransETrainer.bernProbs(kg.rdd, 2)
+    val bern = NegativeSampler.bernProbs(kg.rdd, 2)
     assert(bern(0) == 4.0 / 5.0 && bern(1) == 1.0 / 5.0, bern.toSeq)
 
     // with bern ON: same-seed determinism AND the partitioned store's
@@ -289,6 +286,19 @@ class TransESpec extends SparkSpec {
     val trainer = new TransETrainer(params)
     val model = trainer.fit(enc, nEnt, nLab)
     assert(model.nEntities == nEnt && trainer.lossHistory.forall(_ >= 0))
+    // the filter the fit builds: every training triple is a member, and
+    // at most 2% of 10,000 random non-members are false positives
+    val known = enc.collect().map(tr => (tr.h, tr.l, tr.t)).toSet
+    TransETrainer.prepared(enc, nEnt, nLab, params) { prep =>
+      val m = prep.sampler.value.membership
+      assert(m.isInstanceOf[BloomMembership], m.getClass)
+      known.foreach { case (h, l, t) => assert(m.contains(h, l, t), s"($h, $l, $t)") }
+      val r = new java.util.SplittableRandom(17)
+      val probes = Iterator.continually((r.nextInt(nEnt), r.nextInt(nLab), r.nextInt(nEnt)))
+        .filterNot(known.contains).take(10000).toSeq
+      val fp = probes.count { case (h, l, t) => m.contains(h, l, t) }
+      assert(fp <= 200, s"$fp false positives in ${probes.length} non-members")
+    }
   }
 
   test("embedding checkpoint round-trips through parquet (utils.py:44-59)") {

@@ -17,12 +17,16 @@ class SgdExactnessSpec extends AnyFunSuite {
   private final case class Partition(
       triples: Array[Triple], membership: TripleMembership, nEntities: Int,
       ent: Array[Array[Float]], lab: Array[Array[Float]], p: TransEParams,
-      bern: Array[Double], pid: Int, batchSeed: Long)
+      bern: Array[Double], pid: Int, batchSeed: Long) {
+    def sampler = new NegativeSampler(membership, nEntities, p.rejectionCap, bern)
+  }
 
+  /** The exact set of `known`, built as the trainer builds it: one block
+    * of words in the `keys` format, sorted. */
   private def packed(known: Iterable[Triple], keys: TripleKeys): PackedMembership = {
-    val sorted = known.map(tr => keys.pack(tr.h, tr.l, tr.t)).toArray
-    java.util.Arrays.sort(sorted)
-    new PackedMembership(sorted, keys)
+    val block = TripleBlock.pack(known.iterator, keys, Int.MaxValue, Int.MaxValue)
+      .fold(tr => fail(s"$tr does not pack"), identity)
+    new PackedMembership(TripleBlock.sorted(keys, Iterator(block.words)))
   }
 
   /** A random partition over `nEnt` entities. Every triple of the
@@ -59,7 +63,7 @@ class SgdExactnessSpec extends AnyFunSuite {
   private def production(c: Partition): TransETrainer.Delta = {
     val (ent, lab) = (deepCopy(c.ent), deepCopy(c.lab))
     TransETrainer.partitionSgd(c.pid, c.triples.iterator, ent(_), lab(_),
-      c.membership, c.nEntities, c.p, c.batchSeed, c.bern).next()
+      c.sampler, c.p, c.batchSeed).next()
   }
 
   private def reference(c: Partition): TransETrainer.Delta = {
@@ -146,55 +150,77 @@ class SgdExactnessSpec extends AnyFunSuite {
     val c = randomPartition(r, 5, 2, 7, 200, L1, bern = false, cap = 3)
     val (ent, lab) = (deepCopy(c.ent), deepCopy(c.lab))
     val d = TransETrainer.partitionSgd(c.pid, c.triples.iterator, ent(_), lab(_),
-      c.membership, c.nEntities, c.p, c.batchSeed).next()
+      c.sampler, c.p, c.batchSeed).next()
     assert(d.entIds.nonEmpty)
     assert(ent.map(_.toSeq).toSeq == c.ent.map(_.toSeq).toSeq)
     assert(lab.map(_.toSeq).toSeq == c.lab.map(_.toSeq).toSeq)
   }
 
+  test("readSet returns exactly the entity ids the kernel reads (bern on/off, cap hits)") {
+    val r = new SplittableRandom(20240612)
+    var capHits = 0
+    for (bern <- Seq(false, true); trial <- 0 until 12) {
+      val nEnt = Seq(2, 3, 5, 17, 64, 500)(trial % 6)
+      val cap = Seq(0, 1, 3, 100)(trial % 4)
+      val c = randomPartition(r, nEnt, 1 + r.nextInt(4), 7, r.nextInt(400), L1, bern, cap)
+      val (ent, lab) = (deepCopy(c.ent), deepCopy(c.lab))
+      val read = new java.util.HashSet[Integer]()
+      TransETrainer.partitionSgd(c.pid, c.triples.iterator, { id => read.add(id); ent(id) },
+        lab(_), c.sampler, c.p, c.batchSeed).next()
+      val replayed = TransETrainer.readSet(c.pid, c.triples.iterator, c.sampler, c.batchSeed)
+      assert(replayed == read, s"bern=$bern trial=$trial nEnt=$nEnt cap=$cap")
+      capHits += aliasing(c)(4)
+    }
+    assert(capHits > 0, "no rejection cap hit")
+  }
+
   test("PackedMembership.contains agrees with a HashSet") {
-    val r = new SplittableRandom(99)
-    // 27 + 10 + 27 = 64-bit keys
-    val keys = TripleKeys(1 << 27, 1 << 10)
-    val maxEnt = (1 << keys.entityBits) - 1
-    val maxLab = (1 << keys.labelBits) - 1
-    // the offset index ships inside the membership broadcast, so check the
+    // the offset index is rebuilt when the set is read back, so check the
     // copy a strict (registrationRequired) Kryo hands to the executors
     val kryo = new org.apache.spark.serializer.KryoSerializer(
       new org.apache.spark.SparkConf(false)
         .set("spark.kryo.registrator", classOf[graft.GraftKryo].getName)
         .set("spark.kryo.registrationRequired", "true")).newInstance()
-    def check(set: Set[(Int, Int, Int)], probes: Seq[(Int, Int, Int)]): Unit = {
-      val m = kryo.deserialize[PackedMembership](kryo.serialize(
-        packed(set.map { case (h, l, t) => Triple(h, l, t) }, keys)))
-      (set.toSeq ++ probes).foreach { case (h, l, t) =>
-        assert(m.contains(h, l, t) == set.contains((h, l, t)), s"($h, $l, $t)")
-      }
-    }
-    // empty set: nothing is a member, whatever the head
-    check(Set.empty, Seq((0, 0, 0), (1, 2, 3), (maxEnt, maxLab, maxEnt)))
-    for (trial <- 0 until 20) {
-      // heads drawn from a few small ids, a few ids around 2^26 (where the
-      // head's top bit is the key's sign bit) and the largest id
-      val heads = Seq.fill(2 + r.nextInt(6))(r.nextInt(50)) ++
-        Seq((1 << 26) - 1, 1 << 26, maxEnt).filter(_ => r.nextBoolean())
-      val set = Seq.fill(r.nextInt(300))((
-        heads(r.nextInt(heads.length)),
-        if (r.nextBoolean()) r.nextInt(4) else maxLab,
-        if (r.nextBoolean()) r.nextInt(60) else maxEnt - r.nextInt(3))).toSet
-      val maxHead = if (set.isEmpty) 0 else set.map(_._1).max
-      val probes = Seq.fill(500) {
-        val (h, l, t) = if (set.isEmpty) (0, 0, 0) else set.toSeq(r.nextInt(set.size))
-        r.nextInt(6) match {
-          case 0 => (h, l, (t + 1) % (maxEnt + 1))      // member head, near tail
-          case 1 => (h, (l + 1) % (maxLab + 1), t)      // member head, other label
-          case 2 => (r.nextInt(60), l, t)               // head present or absent
-          case 3 => (maxHead + 1 + r.nextInt(1000), l, t) // above the largest head
-          case 4 => (r.nextInt(maxEnt + 1), r.nextInt(maxLab + 1), r.nextInt(maxEnt + 1))
-          case _ => (h, l, t)
+    // 27 + 10 + 27 = 64-bit keys (one Long per triple) and 30 + 10 + 30 =
+    // 70-bit keys (two Longs per triple)
+    for (keys <- Seq(TripleKeys(1 << 27, 1 << 10), TripleKeys(1 << 30, 1 << 10))) {
+      assert(keys.packs == (keys.entityBits == 27))
+      val r = new SplittableRandom(99)
+      val maxEnt = (1 << keys.entityBits) - 1
+      val maxLab = (1 << keys.labelBits) - 1
+      val topBit = 1 << (keys.entityBits - 1)
+      def check(set: Set[(Int, Int, Int)], probes: Seq[(Int, Int, Int)]): Unit = {
+        val m = kryo.deserialize[PackedMembership](kryo.serialize(
+          packed(set.map { case (h, l, t) => Triple(h, l, t) }, keys)))
+        (set.toSeq ++ probes).foreach { case (h, l, t) =>
+          assert(m.contains(h, l, t) == set.contains((h, l, t)), s"$keys: ($h, $l, $t)")
         }
-      }.filter(_._1 <= maxEnt)
-      check(set, probes)
+      }
+      // empty set: nothing is a member, whatever the head
+      check(Set.empty, Seq((0, 0, 0), (1, 2, 3), (maxEnt, maxLab, maxEnt)))
+      for (trial <- 0 until 20) {
+        // heads drawn from a few small ids, a few ids around the head's top
+        // bit (the key's sign bit when keys use all 64 bits) and the largest id
+        val heads = Seq.fill(2 + r.nextInt(6))(r.nextInt(50)) ++
+          Seq(topBit - 1, topBit, maxEnt).filter(_ => r.nextBoolean())
+        val set = Seq.fill(r.nextInt(300))((
+          heads(r.nextInt(heads.length)),
+          if (r.nextBoolean()) r.nextInt(4) else maxLab,
+          if (r.nextBoolean()) r.nextInt(60) else maxEnt - r.nextInt(3))).toSet
+        val maxHead = if (set.isEmpty) 0 else set.map(_._1).max
+        val probes = Seq.fill(500) {
+          val (h, l, t) = if (set.isEmpty) (0, 0, 0) else set.toSeq(r.nextInt(set.size))
+          r.nextInt(6) match {
+            case 0 => (h, l, (t + 1) % (maxEnt + 1))      // member head, near tail
+            case 1 => (h, (l + 1) % (maxLab + 1), t)      // member head, other label
+            case 2 => (r.nextInt(60), l, t)               // head present or absent
+            case 3 => (maxHead + 1 + r.nextInt(1000), l, t) // above the largest head
+            case 4 => (r.nextInt(maxEnt + 1), r.nextInt(maxLab + 1), r.nextInt(maxEnt + 1))
+            case _ => (h, l, t)
+          }
+        }.filter(_._1 <= maxEnt)
+        check(set, probes)
+      }
     }
   }
 }
